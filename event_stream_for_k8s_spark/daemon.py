@@ -35,7 +35,11 @@ Scale note: stdout NDJSON mirrors the reference's emit
 (``tasks.rs:105``) and streams through ``toLocalIterator`` (one
 partition at a time on the driver — the print point is inherently a
 single process). A cluster deployment passes ``emit=None`` and a
-``sink_dir`` instead, which writes NDJSON from executors.
+``sink_dir`` instead, which writes NDJSON from executors. Either way
+each micro-batch runs the stateful dedup plan once: the sink caches
+the batch for the span of the call, and the metrics aggregate and
+every emit read that cache, so a batch costs one state-store commit
+however many consumers it has.
 """
 
 from __future__ import annotations
@@ -289,35 +293,35 @@ def run_daemon(
     ).observe("kes_emitted", F.count(F.lit(1)).alias("n"))
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        # metrics first (aggregates only reach the driver), then the
-        # NDJSON emit — same per-batch order as the reference's
-        # writer loop (count, print, commit; tasks.rs:95-131)
-        metrics.observe_batch(
-            batch,
-            key_col="k",
-            order_cols=("time",),
-            type_col="etype",
-            reason_col="ereason",
-            kind_col="ekind",
-            namespace_col="ens",
-            defer_totals_batch_id=batch_id,
-        )
-        lines = batch.select(
-            F.to_json(F.struct("time", "kubernetes_event")).alias("line")
-        )
-        both = emit is not None and sink_dir is not None
-        if both:
-            # don't recompute the batch for the second consumer
-            lines = lines.persist()
+        # the foreachBatch frame re-runs the stateful dedup plan on
+        # every action, so cache it once and let both consumers read
+        # the cache (Spark's documented foreachBatch multi-consumer
+        # pattern). Metrics first (aggregates only reach the driver),
+        # then the NDJSON emit — same per-batch order as the
+        # reference's writer loop (count, print, commit;
+        # tasks.rs:95-131)
+        batch.persist()
         try:
+            metrics.observe_batch(
+                batch,
+                key_col="k",
+                order_cols=("time",),
+                type_col="etype",
+                reason_col="ereason",
+                kind_col="ekind",
+                namespace_col="ens",
+                defer_totals_batch_id=batch_id,
+            )
+            lines = batch.select(
+                F.to_json(F.struct("time", "kubernetes_event")).alias("line")
+            )
             if emit is not None:
                 for row in lines.toLocalIterator():
                     emit(row["line"])
             if sink_dir is not None:
                 lines.write.mode("append").text(sink_dir)
         finally:
-            if both:
-                lines.unpersist()
+            batch.unpersist()
 
     writer = (
         deduped.writeStream.foreachBatch(sink)

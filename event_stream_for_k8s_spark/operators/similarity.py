@@ -482,6 +482,27 @@ def _lloyd(x, k: int, iters: int = 12, seed: int = 42):
     return cent
 
 
+def _concurrently(*actions):
+    """Run bounded driver actions (zero-argument callables) on a
+    thread pool and return their results in order. Each runs with the
+    caller's local properties (job group, description): PySpark's
+    pinned-thread mode does not hand them to plain Python threads, so
+    without :func:`pyspark.inheritable_thread_target` the jobs would
+    belong to no query."""
+    import warnings
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with warnings.catch_warnings():
+        # only local properties are inherited; no session tags are set
+        warnings.simplefilter("ignore", UserWarning)
+        targets = [inheritable_thread_target(a) for a in actions]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+        return [f.result() for f in futures]
+
+
 def _train_sample_plan(
     corpus: DataFrame, c_id: str, c_vec: str, train_n: int
 ) -> DataFrame:
@@ -551,17 +572,12 @@ def _collect_sample_and_queries(
     unless the corpus is empty (preserving the pre-r16 check order:
     empty corpus wins and the caller returns the empty result).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     import numpy as np
 
     sample = _train_sample_plan(corpus, c_id, c_vec, train_n)
     qcols = [q_id] if q_vec is None else [q_id, q_vec]
     qlim = queries.select(*qcols).limit(max_queries + 1)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fs = pool.submit(sample.collect)
-        fq = pool.submit(qlim.collect)
-        srows, qrows = fs.result(), fq.result()
+    srows, qrows = _concurrently(sample.collect, qlim.collect)
     train = np.array([r[0] for r in srows], dtype=np.float64)
     if train.size and len(qrows) > max_queries:
         raise ValueError(
@@ -1056,12 +1072,10 @@ def _sq8_calibrate_guarded(
     scan+partial shape). lo/scale are :func:`sq8_calibrate`'s exact
     values (same aggregate, untouched). Empty corpus -> empty lo;
     empty queries -> n_q 0 — both probes ride the same two actions."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fc = pool.submit(sq8_calibrate, corpus, c_vec)
-        fn = pool.submit(queries.limit(max_queries + 1).count)
-        (lo, scale), n_q = fc.result(), fn.result()
+    (lo, scale), n_q = _concurrently(
+        lambda: sq8_calibrate(corpus, c_vec),
+        queries.limit(max_queries + 1).count,
+    )
     if n_q > max_queries:
         raise ValueError(
             f"{tier} query set exceeds {max_queries} rows; chunk the "
@@ -1203,17 +1217,15 @@ def knn_ivfsq8(
     # UN-spread corpus (r15 O6: min/max is partitioning-invariant);
     # the spread feeds the compute-dense assign/encode/score stages
     # below.
-    from concurrent.futures import ThreadPoolExecutor
-
     import numpy as np
 
     max_queries = 100_000
     sample = _train_sample_plan(corpus, c_id, c_vec, 512)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fs = pool.submit(sample.collect)
-        fc = pool.submit(sq8_calibrate, corpus, c_vec)
-        fn = pool.submit(queries.limit(max_queries + 1).count)
-        srows, (lo, scale), n_q = fs.result(), fc.result(), fn.result()
+    srows, (lo, scale), n_q = _concurrently(
+        sample.collect,
+        lambda: sq8_calibrate(corpus, c_vec),
+        queries.limit(max_queries + 1).count,
+    )
     train = np.array([r[0] for r in srows], dtype=np.float64)
     if train.size == 0:
         # empty corpus — the sample collect doubled as the probe

@@ -196,19 +196,25 @@ class K8sWatchSpooler:
         """WATCH from the last seen resourceVersion; returns events
         spooled. Ends at server EOF or after ``max_events``.
 
-        ``resource_version`` only advances when the lines carrying it
-        are FLUSHED to the spool (including the flush-on-disconnect in
-        the finally block): if it advanced per message, a connection
-        drop with an unflushed batch would resume PAST events never
-        written — silent loss. With flush-then-commit, a reconnect can
-        only re-deliver already-spooled events, and the downstream
-        watermark dedup absorbs exactly that overlap.
+        Each socket read is spooled as it arrives: its complete lines
+        go to the spool in ONE append (a partial last line waits for
+        the next read), and only then does ``resource_version``
+        advance to the last rv those lines carried. An idle stream
+        therefore spools an event the moment it lands, and a busy one
+        still writes many events per append. If the offset advanced
+        per message instead, a connection drop with unflushed events
+        would resume PAST events never written — silent loss. With
+        flush-then-commit, a reconnect can only re-deliver
+        already-spooled events, and the downstream watermark dedup
+        absorbs exactly that overlap. At EOF an unterminated final
+        line is parsed like any other: a whole event is spooled, a
+        torn one raises ``ValueError`` (the reconnect loop resumes).
         """
         q = "watch=true"
         if self.resource_version is not None:
             q += f"&resourceVersion={self.resource_version}"
         n = 0
-        batch: list[dict] = []
+        tail = b""
         pending_rv = self.resource_version
         try:
             resp = self._open(q)
@@ -217,38 +223,42 @@ class K8sWatchSpooler:
                 raise _WatchExpired(f"HTTP 410 at resourceVersion "
                                     f"{self.resource_version}") from e
             raise
-        try:
-            with resp:
-                for raw in resp:
-                    line = raw.strip()
-                    if not line:
-                        continue
-                    msg = json.loads(line)
-                    kind, obj = msg.get("type"), msg.get("object") or {}
-                    rv = (obj.get("metadata") or {}).get("resourceVersion")
-                    if rv is not None:
-                        pending_rv = rv
-                    if kind == "BOOKMARK":
-                        continue  # progress marker only — nothing to spool
-                    if kind == "ERROR":
-                        # 410 Gone => resourceVersion too old: caller
-                        # re-lists; identical to the reference's restart
-                        # path, dedup absorbs the overlap.
-                        raise _WatchExpired(str(obj))
-                    if kind in ("ADDED", "MODIFIED"):
-                        batch.append(obj)
-                        n += 1
-                        if len(batch) >= 256:
-                            self._append(batch)
-                            batch.clear()
-                            self.resource_version = pending_rv
-                        if max_events is not None and n >= max_events:
-                            break
-        finally:
-            # flush whatever parsed cleanly before EOF/disconnect, THEN
-            # commit the resume offset (see docstring)
-            self._append(batch)
-            self.resource_version = pending_rv
+        with resp:
+            while max_events is None or n < max_events:
+                chunk = resp.read1(65536)
+                lines = (tail + chunk).split(b"\n")
+                # a read may end mid-line; at EOF the tail is final
+                tail = lines.pop() if chunk else b""
+                batch: list[dict] = []
+                try:
+                    for raw in lines:
+                        line = raw.strip()
+                        if not line:
+                            continue
+                        msg = json.loads(line)
+                        kind, obj = msg.get("type"), msg.get("object") or {}
+                        rv = (obj.get("metadata") or {}).get("resourceVersion")
+                        if rv is not None:
+                            pending_rv = rv
+                        if kind == "BOOKMARK":
+                            continue  # progress marker only: nothing to spool
+                        if kind == "ERROR":
+                            # 410 Gone => resourceVersion too old: caller
+                            # re-lists; identical to the reference's
+                            # restart path, dedup absorbs the overlap.
+                            raise _WatchExpired(str(obj))
+                        if kind in ("ADDED", "MODIFIED"):
+                            batch.append(obj)
+                            n += 1
+                            if max_events is not None and n >= max_events:
+                                break
+                finally:
+                    # flush what this read parsed cleanly, THEN commit
+                    # the resume offset (see docstring)
+                    self._append(batch)
+                    self.resource_version = pending_rv
+                if not chunk:
+                    break
         return n
 
     def run(self, max_events: int | None = None) -> int:
@@ -387,26 +397,3 @@ class K8sWatchSpooler:
 
 class _WatchExpired(RuntimeError):
     """Watch resourceVersion expired (HTTP 410 semantics)."""
-
-
-def spool_and_stream(
-    spark,
-    base_url: str,
-    spool_dir: str,
-    **spooler_kwargs,
-):
-    """Convenience wiring: run one bounded spool pull, then return the
-    ``k8s-events`` readStream over the spool — the SAME DataFrame a
-    file-tailing collector produces, proving the transport swap leaves
-    the Spark surface unchanged."""
-    from event_stream_for_k8s_spark.sources.k8s_datasource import register
-
-    os.makedirs(spool_dir, exist_ok=True)
-    spool = os.path.join(spool_dir, "watch.jsonl")
-    spooler = K8sWatchSpooler(base_url, spool, **spooler_kwargs)
-    spooler.run(max_events=None)
-    register(spark)
-    return (
-        spark.readStream.format("k8s-events").option("path", spool).load(),
-        spooler,
-    )

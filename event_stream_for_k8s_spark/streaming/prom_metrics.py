@@ -468,15 +468,9 @@ class K8sStreamMetrics:
             if ops:
                 state_rows, state_bytes = 0, 0
                 for o in ops:
-                    # dedupeWithinWatermark keeps N stores per shuffle
-                    # partition (key store + event-time index), and
-                    # numRowsTotal counts every store's rows — divide
-                    # by stores-per-partition to recover the KEY count
-                    # (the sled-items analog)
-                    parts = int(o.get("numShufflePartitions", 0)) or 1
-                    inst = int(o.get("numStateStoreInstances", 0)) or parts
-                    per_part = max(1, inst // parts)
-                    state_rows += int(o.get("numRowsTotal", 0)) // per_part
+                    # one store per shuffle partition, one row per
+                    # resident key (the sled-items analog)
+                    state_rows += int(o.get("numRowsTotal", 0))
                     state_bytes += int(
                         o.get("stateMemory", o.get("memoryUsedBytes", 0))
                     )

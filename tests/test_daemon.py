@@ -136,6 +136,14 @@ def test_daemon_end_to_end(spark, tmp_path):
             # (the cache db): 3 unique keys resident, none evicted yet
             assert metrics.size.samples[("items",)] == 3
             assert metrics.size.samples[("bytes",)] > 0
+            # the dedup plan runs once per batch: one state store
+            # instance per shuffle partition, so numRowsTotal above
+            # counts each resident key once
+            ops = [o for p in query.recentProgress for o in p.stateOperators]
+            assert ops and all(
+                o.numStateStoreInstances == o.numShufflePartitions
+                for o in ops
+            )
             # 4-dim counters with real label values
             assert metrics.events.samples[
                 ("Warning", "BackOff", "Pod", "ns-a")
@@ -346,6 +354,61 @@ def test_daemon_executor_sink_only(spark, tmp_path):
     assert s[("total",)] == 3
     assert s[("cache_hits",)] == 1
     assert s[("cache_misses",)] == 2
+
+
+def test_daemon_runs_dedup_plan_once_per_batch(spark, tmp_path):
+    """The sink caches the foreachBatch frame, so the metrics and the
+    NDJSON emit share ONE execution of the stateful dedup plan: a
+    drain with one redelivery drops exactly 1 duplicate row (2 when
+    each consumer re-ran the plan). The per-batch cache is released
+    when the batch ends, also when the sink raises."""
+    import os
+
+    import pytest as _pytest
+
+    jsc = spark.sparkContext._jsc.sc()
+    baseline = len(jsc.getRDDStorageInfo())
+
+    def drain(name, emit):
+        cfg = DaemonConfig(
+            env={
+                "CACHE_TTL": "3600",
+                "CACHE_DB": str(tmp_path / name / "ck"),
+                "KES_SPOOL": str(tmp_path / name / "spool"),
+                "METRICS_PORT": "0",
+            }
+        )
+        os.makedirs(cfg.spool_dir)
+        with open(os.path.join(cfg.spool_dir, "watch.jsonl"), "w") as f:
+            for uid in ("a", "b", "a"):  # one redelivery
+                f.write(json.dumps(_event(uid, 1, "BackOff", "ns")) + "\n")
+        query, _, mserver = run_daemon(
+            spark, cfg, emit=emit, available_now=True,
+            install_signal_handlers=False,
+        )
+        try:
+            query.awaitTermination()
+        finally:
+            mserver.stop()
+        return query
+
+    lines: list[str] = []
+    query = drain("ok", lines.append)
+    assert len(lines) == 2
+    dropped = sum(
+        o.customMetrics.get("numDroppedDuplicateRows", 0)
+        for p in query.recentProgress
+        for o in p.stateOperators
+    )
+    assert dropped == 1
+    assert len(jsc.getRDDStorageInfo()) == baseline
+
+    def fail(line):
+        raise RuntimeError("emit failed")
+
+    with _pytest.raises(Exception, match="emit failed"):
+        drain("raises", fail)
+    assert len(jsc.getRDDStorageInfo()) == baseline
 
 
 def test_in_cluster_https_self_signed_ca(tmp_path):

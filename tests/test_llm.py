@@ -3181,6 +3181,33 @@ def test_knn_sq8_query_set_guard(spark):
         knn_sq8(big_q, c, 5)
 
 
+def test_knn_sq8_build_jobs_carry_callers_job_group(spark):
+    """knn_sq8 runs its build actions (calibration, query guard) on a
+    thread pool. Every job it submits must still carry the caller's
+    job group, so a query's jobs stay attributable to it."""
+    import pyspark.sql.functions as F
+
+    from event_stream_for_k8s_spark.operators.similarity import knn_sq8
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    c = spark.range(64).select(
+        F.col("id").alias("nid"),
+        F.array(F.sin("id"), F.cos("id")).alias("cvec"),
+    )
+    q = c.limit(4).select(
+        F.col("nid").alias("qid"), F.col("cvec").alias("qvec")
+    )
+    sc.setJobGroup("knn-sq8-group", "knn_sq8")
+    try:
+        assert knn_sq8(q, c, 3).count() == 12
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("knn-sq8-group")) >= 3
+    assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
+
+
 def test_knn_ivfsq8_recall_contract_and_codegen_scan(spark):
     """llm_knn_ivfsq8's production form (r15 — the composition the
     SQ8 tier claimed): aggregate recall vs brute holds the envelope

@@ -1172,6 +1172,123 @@ def test_k8s_watch_http_fatal_codes_bounded_retry(tmp_path):
         srv.server_close()
 
 
+def _watch_server(write_body):
+    """Localhost apiserver whose every response body is written by
+    ``write_body(wfile)``; returns the started server."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, HTTPServer
+
+    class Handler(BaseHTTPRequestHandler):
+        def log_message(self, *a):
+            pass
+
+        def do_GET(self):
+            self.send_response(200)
+            self.end_headers()
+            write_body(self.wfile)
+
+    srv = HTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv
+
+
+def _watch_line(i: int, end: str = "\n") -> bytes:
+    """WATCH message ADDED u{i} at resourceVersion i."""
+    obj = {"metadata": {"uid": f"u{i}", "resourceVersion": str(i)},
+           "type": "Normal", "reason": "W",
+           "involvedObject": {"kind": "Pod", "namespace": "d"}}
+    return (json.dumps({"type": "ADDED", "object": obj}) + end).encode()
+
+
+def _spooled_uids(path: str) -> list[str]:
+    with open(path, encoding="utf-8") as f:
+        return [json.loads(line)["metadata"]["uid"] for line in f]
+
+
+def test_k8s_watch_spools_each_read_while_stream_open(tmp_path):
+    """An idle WATCH stream spools an event the moment it arrives: the
+    server sends 3 events and then holds the connection open, and all
+    3 lines are in the spool, with the third one's resourceVersion
+    committed, while the watch is still running."""
+    import threading
+    import time
+
+    from event_stream_for_k8s_spark.sources.k8s_watch_http import (
+        K8sWatchSpooler,
+    )
+
+    release = threading.Event()
+
+    def body(wfile):
+        for i in (1, 2, 3):
+            wfile.write(_watch_line(i))
+        release.wait(30)
+
+    srv = _watch_server(body)
+    spool = str(tmp_path / "spool.jsonl")
+    sp = K8sWatchSpooler(f"http://127.0.0.1:{srv.server_port}", spool)
+    t = threading.Thread(target=sp.watch, daemon=True)
+    t.start()
+    try:
+        deadline = time.time() + 10
+        while time.time() < deadline and sp.resource_version != "3":
+            time.sleep(0.05)
+        assert t.is_alive()  # the connection is still open
+        assert sp.resource_version == "3"
+        assert _spooled_uids(spool) == ["u1", "u2", "u3"]
+    finally:
+        release.set()
+        t.join(15)
+        srv.shutdown()
+        srv.server_close()
+    assert not t.is_alive()  # the watch ended at the server's EOF
+
+
+def test_k8s_watch_spools_unterminated_final_line(tmp_path):
+    """A whole final event with no trailing newline at a clean EOF is
+    spooled and its offset committed (a TORN one raises instead — see
+    test_k8s_watch_reconnect_410_no_loss)."""
+    from event_stream_for_k8s_spark.sources.k8s_watch_http import (
+        K8sWatchSpooler,
+    )
+
+    srv = _watch_server(
+        lambda w: w.write(_watch_line(1) + _watch_line(2, end=""))
+    )
+    try:
+        spool = str(tmp_path / "spool.jsonl")
+        sp = K8sWatchSpooler(f"http://127.0.0.1:{srv.server_port}", spool)
+        assert sp.watch() == 2
+        assert sp.resource_version == "2"
+        assert _spooled_uids(spool) == ["u1", "u2"]
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_k8s_watch_max_events_mid_read(tmp_path):
+    """``max_events`` falling inside one read spools exactly that many
+    events and commits the last spooled event's resourceVersion, not
+    the read's."""
+    from event_stream_for_k8s_spark.sources.k8s_watch_http import (
+        K8sWatchSpooler,
+    )
+
+    srv = _watch_server(
+        lambda w: w.write(b"".join(_watch_line(i) for i in range(1, 6)))
+    )
+    try:
+        spool = str(tmp_path / "spool.jsonl")
+        sp = K8sWatchSpooler(f"http://127.0.0.1:{srv.server_port}", spool)
+        assert sp.watch(max_events=3) == 3
+        assert sp.resource_version == "3"
+        assert _spooled_uids(spool) == ["u1", "u2", "u3"]
+        assert sp.events_spooled == 3
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
 def test_concurrent_streaming_queries_isolated_conf(spark):
     """The round-4 clone-session harness exists precisely so two
     streaming queries with DIFFERENT state-partition layouts can run
