@@ -9,6 +9,7 @@ Catalyst applies column pruning + predicate pushdown (verify with
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,11 +33,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # EVERY call — ~100-150 ms of driver round trip per load at local
 # scale, paid inside every query build. A production deployment reads
 # these tables through a catalog whose schema is already known, paying
-# zero per-query inference; memoizing the inferred StructType per
-# (path, mtime, size) reproduces that contract in-process. This caches
-# METADATA only — every query still computes its rows from the parquet
-# scan — and the stat() key means a regenerated testdata file
-# re-infers instead of serving a stale schema.
+# zero per-query inference; memoizing the inferred StructType per path
+# reproduces that contract in-process. This caches METADATA only —
+# every query still computes its rows from the parquet scan. An entry
+# is (file (mtime, size), schema): a regenerated file re-infers and
+# replaces its entry. Only regular files are memoized: a directory's
+# stat does not change when a part file inside it is rewritten.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -44,15 +46,18 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     try:
         st = os.stat(path)
     except OSError:
-        # nonexistent path: let the reader raise its usual error
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        # a directory, or a nonexistent path (the reader raises its
+        # usual error)
         return spark.read.parquet(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
+    sig = (st.st_mtime_ns, st.st_size)
+    cached = _SCHEMA_CACHE.get(path)
+    if cached is None or cached[0] != sig:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        _SCHEMA_CACHE[path] = (sig, df.schema)
         return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(cached[1]).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -32,14 +32,16 @@ Env config (reference names kept where they exist):
                  reference binds — a pod-IP scrape must reach it)
 
 Scale note: stdout NDJSON mirrors the reference's emit
-(``tasks.rs:105``) and streams through ``toLocalIterator`` (one
-partition at a time on the driver — the print point is inherently a
-single process). A cluster deployment passes ``emit=None`` and a
-``sink_dir`` instead, which writes NDJSON from executors. Either way
-each micro-batch runs the stateful dedup plan once: the sink caches
-the batch for the span of the call, and the metrics aggregate and
-every emit read that cache, so a batch costs one state-store commit
-however many consumers it has.
+(``tasks.rs:105``); the print point is inherently a single process.
+A micro-batch costs ONE Spark job, a ``collect()`` of its deduped
+rows, and the driver counts the metric labels as it prints them.
+Driver memory is O(batch), bounded by the source's
+``maxEventsPerBatch`` / ``maxBytesPerBatch`` options
+(``toLocalIterator`` would hold one partition at a time, but run one
+job per partition). A cluster deployment passes ``emit=None`` and a
+``sink_dir`` instead: executors write the NDJSON, one Spark aggregate
+computes the metrics, and the batch is cached for the call so the
+stateful dedup plan runs once.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ import logging
 import os
 import signal
 import threading
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -292,36 +295,56 @@ def run_daemon(
         keyed, key_col="k", time_col="time", ttl_seconds=cfg.cache_ttl
     ).observe("kes_emitted", F.count(F.lit(1)).alias("n"))
 
+    line = F.to_json(F.struct("time", "kubernetes_event")).alias("line")
+
+    def emit_and_count(batch: DataFrame, batch_id: int) -> None:
+        # the reference's writer loop (tasks.rs:95-131): print each
+        # line and count it, from one collect(), the batch's only Spark
+        # job. Each row is a cache miss: dropDuplicatesWithinWatermark
+        # emits at most one row per key per batch, so observe_batch's
+        # per-key first-occurrence (min_by) stage would be a no-op here
+        rows = batch.select(
+            line, "etype", "ereason", "ekind", "ens", F.octet_length("k") + 8
+        ).collect()
+        tally: Counter = Counter()
+        for r in rows:
+            emit(r[0])
+            tally[r[1:5]] += 1
+        metrics.apply_batch(
+            [(*lbl, n) for lbl, n in tally.items()],
+            nbytes=sum(r[5] for r in rows),
+            total=len(rows),
+            defer_totals_batch_id=batch_id,
+        )
+
     def sink(batch: DataFrame, batch_id: int) -> None:
         # the foreachBatch frame re-runs the stateful dedup plan on
-        # every action, so cache it once and let both consumers read
-        # the cache (Spark's documented foreachBatch multi-consumer
-        # pattern). Metrics first (aggregates only reach the driver),
-        # then the NDJSON emit — same per-batch order as the
-        # reference's writer loop (count, print, commit;
-        # tasks.rs:95-131)
-        batch.persist()
+        # every action, so when the executor write is a second
+        # consumer the frame is cached for the call (Spark's documented
+        # foreachBatch multi-consumer pattern)
+        shared = sink_dir is not None
+        if shared:
+            batch.persist()
         try:
-            metrics.observe_batch(
-                batch,
-                key_col="k",
-                order_cols=("time",),
-                type_col="etype",
-                reason_col="ereason",
-                kind_col="ekind",
-                namespace_col="ens",
-                defer_totals_batch_id=batch_id,
-            )
-            lines = batch.select(
-                F.to_json(F.struct("time", "kubernetes_event")).alias("line")
-            )
             if emit is not None:
-                for row in lines.toLocalIterator():
-                    emit(row["line"])
-            if sink_dir is not None:
-                lines.write.mode("append").text(sink_dir)
+                emit_and_count(batch, batch_id)
+            else:
+                # rows never reach the driver: count them on executors
+                metrics.observe_batch(
+                    batch,
+                    key_col="k",
+                    order_cols=("time",),
+                    type_col="etype",
+                    reason_col="ereason",
+                    kind_col="ekind",
+                    namespace_col="ens",
+                    defer_totals_batch_id=batch_id,
+                )
+            if shared:
+                batch.select(line).write.mode("append").text(sink_dir)
         finally:
-            batch.unpersist()
+            if shared:
+                batch.unpersist()
 
     writer = (
         deduped.writeStream.foreachBatch(sink)

@@ -58,15 +58,6 @@ def fingerprint_minhash3(toks: Column) -> Column:
     return F.array_min(windows)
 
 
-def sql_token_hash(tok: str) -> str:
-    return (
-        f"list_reduce(list_prepend(cast(0 as bigint), "
-        f"list_transform(range(1, length({tok}) + 1), "
-        f"i -> cast(ascii({tok}[i:i]) as bigint))), "
-        f"(a, b) -> (a * 31 + b) % {MOD})"
-    )
-
-
 def quality_features(text: Column | str) -> dict[str, Column]:
     """Length / punctuation / stopword / word-length features."""
     c = F.col(text) if isinstance(text, str) else text

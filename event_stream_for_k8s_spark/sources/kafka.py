@@ -107,30 +107,6 @@ def read_kafka_events(
     return restore_ts(parsed)
 
 
-def write_kafka_ndjson(
-    df: DataFrame,
-    brokers: str,
-    topic: str,
-    checkpoint: str,
-    key_col: str | None = None,
-):
-    """NDJSON sink (A7) over Kafka: one JSON message per row, keyed by
-    ``key_col`` (partitioning affinity — same dedup key lands on the
-    same topic partition, preserving per-key ordering). Returns the
-    started StreamingQuery."""
-    cols = [F.to_json(F.struct(*df.columns)).alias("value")]
-    if key_col is not None:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
-    return (
-        df.select(*cols)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 def event_stream(
     spark: SparkSession,
     *,

@@ -25,7 +25,10 @@ events), and a stdlib HTTP endpoint serving ``GET /metrics``. At
 cluster scale the observer's single per-batch aggregation job runs on
 executors and the registry lives on the driver, which is exactly
 where a scrape endpoint must live; for multi-query deployments attach
-one observer per query and serve one registry.
+one observer per query and serve one registry. The daemon's stdout
+mode skips that job: its rows already come to the driver to be
+printed, so it counts the labels there as it prints them and hands
+the tally to the same accounting (``apply_batch``).
 
 Cache seen-ness here is batch-local (first occurrence of a key inside
 the micro-batch = miss): the CROSS-batch state belongs to the dedup
@@ -244,7 +247,8 @@ class K8sStreamMetrics:
 
         ONE Spark job per batch: a per-key ``min_by`` picks the
         first-occurrence labels, then a per-label-combination rollup
-        — only label-cardinality-bounded rows reach the driver.
+        — only label-cardinality-bounded rows reach the driver, where
+        :meth:`apply_batch` applies them.
 
         With ``defer_totals_batch_id`` set, the ``total``/``cache_hits``
         counters are NOT incremented here: the caller observes the
@@ -274,14 +278,29 @@ class K8sStreamMetrics:
             )
             .collect()
         )
-        total, misses, nbytes = 0, 0, 0
-        labels: list[tuple[str, str, str, str, int]] = []
-        for r in per_label:
-            lbl = r["_lbl"]
-            labels.append((lbl["l0"], lbl["l1"], lbl["l2"], lbl["l3"], r["n"]))
-            misses += r["n"]
-            total += r["rows"]
-            nbytes += r["nbytes"]
+        return self.apply_batch(
+            [(*r["_lbl"], r["n"]) for r in per_label],
+            nbytes=sum(r["nbytes"] for r in per_label),
+            total=sum(r["rows"] for r in per_label),
+            defer_totals_batch_id=defer_totals_batch_id,
+        )
+
+    def apply_batch(
+        self,
+        labels: list[tuple[str, str, str, str, int]],
+        nbytes: int,
+        total: int,
+        defer_totals_batch_id: int | None = None,
+    ) -> int:
+        """Apply one micro-batch's tally; returns the miss count.
+
+        ``labels`` holds ``(type, reason, kind, namespace, misses)``
+        per label combination, ``nbytes`` the misses' key bytes + 8
+        each, ``total`` every row of the batch; ``defer_totals_batch_id``
+        is as in :meth:`observe_batch`, which computes the tally with a
+        Spark aggregate. The daemon's stdout sink counts it on the
+        driver from the rows it prints."""
+        misses = sum(n for *_, n in labels)
         with self._lock:
             if defer_totals_batch_id is None:
                 self._apply_labels_and_bytes(labels, nbytes)

@@ -356,44 +356,48 @@ def test_daemon_executor_sink_only(spark, tmp_path):
     assert s[("cache_misses",)] == 2
 
 
-def test_daemon_runs_dedup_plan_once_per_batch(spark, tmp_path):
-    """The sink caches the foreachBatch frame, so the metrics and the
-    NDJSON emit share ONE execution of the stateful dedup plan: a
-    drain with one redelivery drops exactly 1 duplicate row (2 when
-    each consumer re-ran the plan). The per-batch cache is released
-    when the batch ends, also when the sink raises."""
+def _drain(spark, root, events, emit, sink_dir=None):
+    """Bounded file-tail drain of ``events`` through ``run_daemon``
+    from an empty checkpoint; returns (query, metrics)."""
     import os
 
+    cfg = DaemonConfig(
+        env={
+            "CACHE_TTL": "3600",
+            "CACHE_DB": str(root / "ck"),
+            "KES_SPOOL": str(root / "spool"),
+            "METRICS_PORT": "0",
+        }
+    )
+    os.makedirs(cfg.spool_dir)
+    with open(os.path.join(cfg.spool_dir, "watch.jsonl"), "w") as f:
+        for ev in events:
+            f.write(json.dumps(ev) + "\n")
+    query, metrics, mserver = run_daemon(
+        spark, cfg, emit=emit, sink_dir=sink_dir, available_now=True,
+        install_signal_handlers=False,
+    )
+    try:
+        query.awaitTermination()
+    finally:
+        mserver.stop()
+    return query, metrics
+
+
+def test_daemon_runs_dedup_plan_once_per_batch(spark, tmp_path):
+    """The metrics and the NDJSON emit share ONE execution of the
+    stateful dedup plan: a drain with one redelivery drops exactly 1
+    duplicate row (2 when each consumer re-ran the plan). No per-batch
+    cache outlives the batch, also when the sink raises."""
     import pytest as _pytest
 
     jsc = spark.sparkContext._jsc.sc()
     baseline = len(jsc.getRDDStorageInfo())
-
-    def drain(name, emit):
-        cfg = DaemonConfig(
-            env={
-                "CACHE_TTL": "3600",
-                "CACHE_DB": str(tmp_path / name / "ck"),
-                "KES_SPOOL": str(tmp_path / name / "spool"),
-                "METRICS_PORT": "0",
-            }
-        )
-        os.makedirs(cfg.spool_dir)
-        with open(os.path.join(cfg.spool_dir, "watch.jsonl"), "w") as f:
-            for uid in ("a", "b", "a"):  # one redelivery
-                f.write(json.dumps(_event(uid, 1, "BackOff", "ns")) + "\n")
-        query, _, mserver = run_daemon(
-            spark, cfg, emit=emit, available_now=True,
-            install_signal_handlers=False,
-        )
-        try:
-            query.awaitTermination()
-        finally:
-            mserver.stop()
-        return query
+    # one redelivery
+    events = [_event(uid, 1, "BackOff", "ns") for uid in ("a", "b", "a")]
 
     lines: list[str] = []
-    query = drain("ok", lines.append)
+    query, _ = _drain(spark, tmp_path / "ok", events, lines.append)
     assert len(lines) == 2
     dropped = sum(
         o.customMetrics.get("numDroppedDuplicateRows", 0)
@@ -407,8 +411,79 @@ def test_daemon_runs_dedup_plan_once_per_batch(spark, tmp_path):
         raise RuntimeError("emit failed")
 
     with _pytest.raises(Exception, match="emit failed"):
-        drain("raises", fail)
+        _drain(spark, tmp_path / "raises", events, fail)
     assert len(jsc.getRDDStorageInfo()) == baseline
+
+
+def test_daemon_emit_runs_one_job_per_batch(spark, tmp_path):
+    """In emit mode a micro-batch costs ONE Spark job: the sink
+    collects the deduped rows once and counts the metric labels on the
+    driver as it prints them (no cache, no metrics aggregate, no
+    per-partition iterator jobs)."""
+    lines: list[str] = []
+    events = [
+        _event(f"u{i}", i, reason, f"ns-{i % 2}")
+        for i, reason in enumerate(["BackOff", "Failed", "BackOff"] * 3)
+    ]
+    query, metrics = _drain(
+        spark, tmp_path, events + events[:2], lines.append
+    )
+    assert len(lines) == len(events)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+        str(query.runId)
+    )
+    assert query.recentProgress
+    assert len(jobs) == len(query.recentProgress)
+    metrics.sync_from_query(query)
+    s = metrics.processed.samples
+    assert s[("cache_misses",)] == len(events)
+    assert s[("cache_hits",)] == 2
+    assert sum(metrics.events.samples.values()) == len(events)
+
+
+def test_daemon_driver_tally_matches_observe_batch(spark, tmp_path,
+                                                   monkeypatch):
+    """For a batch of unique keys, the emit-mode sink's driver tally
+    stages exactly what ``observe_batch`` (the executor-sink mode's
+    Spark aggregate) stages: the same per-label counts and byte
+    totals, for the same batch id."""
+    from event_stream_for_k8s_spark.streaming.prom_metrics import (
+        K8sStreamMetrics,
+    )
+
+    staged: list[tuple] = []
+    apply_batch = K8sStreamMetrics.apply_batch
+
+    def record(self, labels, nbytes, total, defer_totals_batch_id=None):
+        if labels:
+            staged.append(
+                (defer_totals_batch_id, sorted(labels), nbytes, total)
+            )
+        return apply_batch(self, labels, nbytes, total,
+                           defer_totals_batch_id)
+
+    monkeypatch.setattr(K8sStreamMetrics, "apply_batch", record)
+    events = [
+        _event(f"uid-{i}", 10 + i, reason, ns)
+        for i, (reason, ns) in enumerate(
+            [("BackOff", "ns-a"), ("Failed", "ns-b"), ("BackOff", "ns-a"),
+             ("Pulled", "kube-system"), ("Failed", "ns-b")]
+        )
+    ]
+    # an Event with no type/reason/kind/namespace: '-' label defaults
+    bare = _event("uid-bare", 99, None, None)
+    del bare["type"], bare["involvedObject"]
+    events.append(bare)
+    lines: list[str] = []
+    _drain(spark, tmp_path / "emit", events, lines.append)
+    assert len(lines) == len(events)
+    _drain(spark, tmp_path / "sink", events, None,
+           sink_dir=str(tmp_path / "out"))
+    assert len(staged) == 2
+    assert staged[0] == staged[1]
+    assert staged[0][1][0] == ("-", "-", "-", "-", 1)
+    assert sum(n for *_, n in staged[0][1]) == len(events)
 
 
 def test_in_cluster_https_self_signed_ca(tmp_path):

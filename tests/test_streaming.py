@@ -107,6 +107,23 @@ def test_metrics_invariant(spark, k8s_dir):
     m = batch_metrics(df, "k")
     assert m["hits"] + m["misses"] == m["total"] == 8
     assert m["misses"] == 6
+    # a NULL key counts as one distinct value, and both figures come
+    # from ONE action
+    keys = spark.createDataFrame(
+        [("a",), ("a",), ("b",), (None,), (None,)], "k string"
+    )
+    sql = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_execution_id() -> int:
+        bus.waitUntilEmpty(10_000)
+        ids = sql.executionsList()
+        return ids.apply(ids.size() - 1).executionId() if ids.size() else -1
+
+    first = last_execution_id()
+    m = batch_metrics(keys, "k")
+    assert last_execution_id() == first + 1
+    assert m == {"total": 5, "misses": 3, "hits": 2}
 
 
 def test_checkpoint_restart_dedups_across_runs(spark, k8s_dir, tmp_path):
