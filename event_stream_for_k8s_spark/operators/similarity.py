@@ -1,17 +1,40 @@
-"""Similarity-search and near-duplicate operators at three scale tiers.
+"""Similarity search and near-duplicate operators.
 
-1. ``knn_brute``  — exact cosine top-k: broadcast the (small) query set
-   against the full corpus as a BroadcastNestedLoopJoin; the corpus
-   never shuffles. O(Q x N) but embarrassingly parallel — the right
-   baseline, and the only exact one.
-2. ``knn_lsh``    — BucketedRandomProjectionLSH: sub-linear candidate
-   generation via bucketed self-join; approximate.
-3. ``knn_ivf``    — IVF-style: KMeans coarse quantizer (seeded), probe
-   the nProbe nearest centroids, exact search inside the probed cells.
-   At 100 TB the corpus is pre-partitioned by cell id, so a query
-   touches nProbe/nCells of the data.
+Every kNN tier below is one filter-then-refine pipeline assembled from
+the same shared stages; a tier only chooses
 
-Near-dup: ``minhash_pairs`` (MinHashLSH over token features).
+- a coarse filter: none (scan the whole corpus) or an IVF probe — a
+  seeded Lloyd quantizer trained on a bounded corpus sample, each
+  query probing its ``n_probe`` nearest of ``n_cells`` cells
+  (:func:`_probe_cells`; at 100 TB the corpus is pre-partitioned by
+  cell, so a query touches n_probe/n_cells of the data);
+- a codec: raw vectors, SQ8 (per-dimension int8 codes, reconstructed
+  and scored in whole-stage codegen) or PQ (m codes per vector,
+  asymmetric-distance table gathers in an Arrow pass, raw or
+  residual);
+- a refine: none, or the exact re-score of a ``k * RERANK_FACTOR``
+  shortlist (:func:`_rerank_exact`).
+
+===============  ======  =====  =======
+tier             filter  codec  refine
+===============  ======  =====  =======
+``knn_brute``    none    raw    none
+``knn_ivf``      IVF     raw    none
+``knn_sq8``      none    SQ8    none
+``knn_ivfsq8``   IVF     SQ8    exact
+``knn_pq``       none    PQ     exact
+``knn_ivfpq``    IVF     PQ     exact
+===============  ======  =====  =======
+
+``knn_brute`` is the only exact tier and the baseline the others are
+checked against. ``knn_lsh`` generates candidates with MLlib's
+random-projection LSH instead of a quantizer. Queries are the small,
+broadcast side of every tier: the quantized tiers raise past
+``MAX_QUERIES`` rows (:func:`_guard_queries`).
+
+Near-dup: ``minhash_pairs_native`` (expression-level MinHash +
+banding), ``minhash_pairs`` (MLlib MinHashLSH) and
+``sign_lsh_candidates``.
 """
 
 from __future__ import annotations
@@ -31,6 +54,73 @@ from event_stream_for_k8s_spark.functions.vectors import (
 )
 from event_stream_for_k8s_spark.operators.topk import top_k_per_group
 
+# quantizer-training sample size (rows collected to the driver)
+TRAIN_N = 512
+# shortlist over-fetch of the refining tiers: k * RERANK_FACTOR
+# candidates per query are re-scored exactly
+RERANK_FACTOR = 10
+# PQ codec: PQ_M subspaces, PQ_CODES centroids per subspace codebook
+PQ_M = 8
+PQ_CODES = 16
+# serving contract: queries are the small side of every quantized tier
+MAX_QUERIES = 100_000
+
+
+def _top_k(pairs: DataFrame, q_id: str, c_id: str, k: int) -> DataFrame:
+    """Per-query top-k by (sim desc, c_id): the deterministic ranking
+    every tier, shortlist and oracle shares."""
+    return top_k_per_group(
+        pairs, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
+    )
+
+
+def _scored(
+    corpus: DataFrame,
+    queries: DataFrame,
+    q_id: str,
+    c_id: str,
+    q_vec: str,
+    c_vec: str,
+    on: str | None = None,
+) -> DataFrame:
+    """(q_id, c_id, sim) exact cosine pairs, self-matches dropped.
+    ``on=None`` cross-joins every query with every corpus row;
+    ``on="cell"`` equi-joins a probe list onto cell-assigned corpus
+    rows (a hash join, not a cross join — the sub-linear path).
+
+    Norms are precomputed per SIDE, not per pair: one fold per pair
+    instead of three in the Q x N kernel (cosine_with_norms —
+    bit-identical). The query side is explicitly broadcast: it is Q
+    rows, or Q x n_probe for a probe list (queries are the
+    guarded-small serving side), while the corpus behind an opaque
+    assign pass has no usable size estimate — left to itself the
+    planner broadcast the CORPUS and streamed the tiny probe list,
+    collapsing the scoring stage's parallelism to the probe side's
+    partitions (measured 88 s vs 9 s at sf1; guide §3.1: hint when
+    estimates are wrong after opaque ops)."""
+    corpus = corpus.withColumn("__cn", l2norm(F.col(c_vec)))
+    queries = F.broadcast(queries.withColumn("__qn", l2norm(F.col(q_vec))))
+    joined = (
+        corpus.crossJoin(queries) if on is None else corpus.join(queries, on)
+    )
+    sim = cosine_with_norms(
+        F.col(q_vec), F.col(c_vec), F.col("__qn"), F.col("__cn")
+    )
+    return joined.filter(F.col(c_id) != F.col(q_id)).select(
+        q_id, c_id, F.round(sim, 6).alias("sim")
+    )
+
+
+def _guard_queries(tier: str, n_q: int) -> None:
+    """The serving contract of the quantized tiers: queries are the
+    SMALL side (collected or broadcast), so an oversized query set
+    must raise instead of OOMing the driver or a broadcast."""
+    if n_q > MAX_QUERIES:
+        raise ValueError(
+            f"{tier} query set exceeds {MAX_QUERIES} rows; chunk the "
+            "queries or use the LSH/IVF paths for query-heavy workloads"
+        )
+
 
 def knn_brute(
     queries: DataFrame,
@@ -40,31 +130,14 @@ def knn_brute(
     c_id: str = "nid",
     q_vec: str = "qvec",
     c_vec: str = "cvec",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k; queries must be broadcast-sized."""
     # the compute-dense nested-loop scan must not run on a one-file
     # scan's single partition (SCALING.md §18); no-op at real scale
-    corpus = spread_to_cores(corpus)
-    # norms precomputed per SIDE, not per pair: one fold per pair
-    # instead of three in the Q x N kernel (cosine_with_norms —
-    # bit-identical)
-    corpus = corpus.withColumn("__cn", l2norm(F.col(c_vec)))
-    queries = queries.withColumn("__qn", l2norm(F.col(q_vec)))
-    sim = F.round(
-        cosine_with_norms(
-            F.col(q_vec), F.col(c_vec), F.col("__qn"), F.col("__cn")
-        ),
-        round_dp,
+    pairs = _scored(
+        spread_to_cores(corpus), queries, q_id, c_id, q_vec, c_vec
     )
-    pairs = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col(c_id) != F.col(q_id))
-        .select(q_id, c_id, sim.alias("sim"))
-    )
-    return top_k_per_group(
-        pairs, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
-    )
+    return _top_k(pairs, q_id, c_id, k)
 
 
 def _to_ml_vectors(df: DataFrame, vec_col: str) -> DataFrame:
@@ -102,9 +175,6 @@ def knn_lsh(
     c_id: str,
     q_vec: str,
     c_vec: str,
-    bucket_length: float = 0.5,
-    num_tables: int = 6,
-    threshold: float = 2.0,
 ) -> DataFrame:
     """Approximate top-k via random-projection LSH (euclidean buckets).
 
@@ -121,12 +191,12 @@ def knn_lsh(
     lsh = BucketedRandomProjectionLSH(
         inputCol="__v",
         outputCol="__h",
-        bucketLength=bucket_length,
-        numHashTables=num_tables,
+        bucketLength=0.5,
+        numHashTables=6,
         seed=42,
     )
     model = lsh.fit(c)
-    joined = model.approxSimilarityJoin(c, q, threshold, distCol="dist")
+    joined = model.approxSimilarityJoin(c, q, 2.0, distCol="dist")
     pairs = joined.select(
         F.col(f"datasetB.{q_id}").alias(q_id),
         F.col(f"datasetA.{c_id}").alias(c_id),
@@ -134,9 +204,7 @@ def knn_lsh(
             cosine(F.col("datasetB.__raw"), F.col("datasetA.__raw")), 6
         ).alias("sim"),
     ).filter(F.col(q_id) != F.col(c_id))
-    return top_k_per_group(
-        pairs, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
-    )
+    return _top_k(pairs, q_id, c_id, k)
 
 
 def knn_ivf(
@@ -149,82 +217,23 @@ def knn_ivf(
     c_vec: str,
     n_cells: int = 16,
     n_probe: int = 4,
-    train_n: int = 512,
 ) -> DataFrame:
-    """IVF: coarse-quantize the corpus with a seeded sample-trained
-    Lloyd quantizer (:func:`_coarse_centroids` — the production way
-    to build an IVF index; r15, replacing the full-corpus MLlib fit),
-    probe the ``n_probe`` nearest cells per query, exact-search inside
-    them. r16: the sample collect and the query-side serving guard
-    (the 100k contract the other tiers enforce — ADVICE r15 #1: the
-    probe list is force-broadcast below, so an unbounded query set
-    must raise, not fail the broadcast) share ONE driver action; the
-    query vectors themselves stay distributed."""
-    train, qrows = _collect_sample_and_queries(
-        "knn_ivf", corpus, c_id, c_vec, train_n, queries, q_id, None
-    )
-    if train.size == 0:
-        # empty corpus — the sample collect doubled as the probe
+    """IVF: coarse-quantize the corpus with a seeded Lloyd quantizer
+    trained on a bounded sample (:func:`_lloyd`), probe the
+    ``n_probe`` nearest cells per query, exact-search inside them. The
+    sample collect and the query-side guard share one round of
+    driver actions; the query vectors themselves stay distributed."""
+    qlim = queries.select(q_id).limit(MAX_QUERIES + 1)
+    train, qrows = _collect_train_sample(corpus, c_id, c_vec, qlim.collect)
+    if train.size == 0 or not qrows:
         return _empty_knn_result(queries, q_id, corpus, c_id)
-    if not qrows:
-        # empty query set: same (empty) rows the full pipeline would
-        # produce, minus its jobs
-        return _empty_knn_result(queries, q_id, corpus, c_id)
+    _guard_queries("knn_ivf", len(qrows))
     corpus = spread_to_cores(corpus)
-    cents = _coarse_centroids(train, n_cells)
+    cents = _lloyd(train, n_cells)
     corpus_cells = _assign_cells(corpus, c_vec, cents)
-
-    centroids = [
-        (i, [float(x) for x in ctr]) for i, ctr in enumerate(cents)
-    ]
-    cent_df = queries.sparkSession.createDataFrame(
-        centroids, ["cell", "centroid"]
-    )
-    # Probe list per query: n_probe nearest centroids (tiny cross join).
-    probes = top_k_per_group(
-        queries.crossJoin(F.broadcast(cent_df)).select(
-            q_id,
-            q_vec,
-            "cell",
-            F.round(cosine(F.col(q_vec), F.col("centroid")), 6).alias("csim"),
-        ),
-        [q_id],
-        [F.col("csim").desc(), F.col("cell")],
-        n_probe,
-    ).select(q_id, q_vec, "cell")
-    # Search only the probed cells: equi-join on cell id (hash join),
-    # NOT a full cross join — this is the sub-linear path. The probe
-    # list is the explicitly-broadcast side: it is Q x n_probe rows
-    # (queries are the guarded-small serving side) while the corpus
-    # behind the opaque assign pass has no usable size estimate — left
-    # to itself the planner broadcast the CORPUS and streamed the tiny
-    # probe list, collapsing the scoring stage's parallelism to the
-    # probe side's partitions (measured 88 s vs 9 s at sf1; guide
-    # §3.1: hint when estimates are wrong after opaque ops).
-    pairs = (
-        corpus_cells.withColumn("__cn", l2norm(F.col(c_vec)))
-        .join(
-            F.broadcast(probes.withColumn("__qn", l2norm(F.col(q_vec)))),
-            "cell",
-        )
-        .filter(F.col(c_id) != F.col(q_id))
-        .select(
-            q_id,
-            c_id,
-            F.round(
-                cosine_with_norms(
-                    F.col(q_vec),
-                    F.col(c_vec),
-                    F.col("__qn"),
-                    F.col("__cn"),
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    return top_k_per_group(
-        pairs, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
-    )
+    probes = _probe_cells(queries, cents, n_probe, q_id, q_vec, keep_vec=True)
+    pairs = _scored(corpus_cells, probes, q_id, c_id, q_vec, c_vec, on="cell")
+    return _top_k(pairs, q_id, c_id, k)
 
 
 def sign_lsh_candidates(
@@ -464,10 +473,13 @@ def minhash_pairs(
 
 
 def _lloyd(x, k: int, iters: int = 12, seed: int = 42):
-    """Seeded, fixed-iteration Lloyd's k-means (numpy, driver-side).
-    PQ codebooks are trained on a SAMPLE by design — at 100 TB you
-    never fit the quantizer on the full corpus, you sample ~10^5
-    vectors, train locally, broadcast the codebook."""
+    """Seeded, fixed-iteration Lloyd's k-means (numpy, driver-side):
+    the IVF coarse quantizer and the PQ codebooks. Both are trained on
+    a SAMPLE by design — at 100 TB you never fit the quantizer on the
+    full corpus, you sample ~10^5 vectors, train locally, broadcast the
+    centroids. An MLlib KMeans fit over the full corpus is the measured
+    alternative: its ~20 driver-coordinated Spark jobs cost 3-6 s per
+    ANN query at sf0.1."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
@@ -488,125 +500,96 @@ def _concurrently(*actions):
     caller's local properties (job group, description): PySpark's
     pinned-thread mode does not hand them to plain Python threads, so
     without :func:`pyspark.inheritable_thread_target` the jobs would
-    belong to no query."""
-    import warnings
-    from concurrent.futures import ThreadPoolExecutor
+    belong to no query.
 
-    from pyspark import inheritable_thread_target
+    Fails fast: when one action raises, the jobs of the others are
+    cancelled and the first error is re-raised once they have stopped,
+    so no build job outlives the call. The jobs are found by a per-call
+    job tag; cancelling the caller's job group instead would also
+    cancel the caller's other jobs."""
+    import uuid
+    import warnings
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    from pyspark import SparkContext, inheritable_thread_target
+
+    sc = SparkContext.getOrCreate()
+    tag = f"knn-build-{uuid.uuid4().hex}"
+
+    def tagged(action):
+        def run():
+            sc.addJobTag(tag)
+            try:
+                return action()
+            finally:
+                sc.removeJobTag(tag)
+
+        return run
 
     with warnings.catch_warnings():
         # only local properties are inherited; no session tags are set
         warnings.simplefilter("ignore", UserWarning)
-        targets = [inheritable_thread_target(a) for a in actions]
+        targets = [inheritable_thread_target(tagged(a)) for a in actions]
     with ThreadPoolExecutor(max_workers=len(targets)) as pool:
         futures = [pool.submit(t) for t in targets]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [
+            f for f in futures if f in done and f.exception() is not None
+        ]
+        if failed:
+            # re-cancel until every sibling has stopped: a sibling may
+            # submit its job only after the first cancel
+            while pending:
+                sc.cancelJobsWithTag(tag)
+                _, pending = wait(pending, timeout=0.1)
+            raise failed[0].exception()
         return [f.result() for f in futures]
 
 
-def _train_sample_plan(
-    corpus: DataFrame, c_id: str, c_vec: str, train_n: int
-) -> DataFrame:
-    """The quantizer-training sample relation: the ``train_n``
-    lowest-id corpus vectors (TakeOrdered on the id —
-    partitioning-invariant, so deterministic for fixed data).
+def _collect_train_sample(
+    corpus: DataFrame, c_id: str, c_vec: str, *actions
+):
+    """``(train, *results)``: the quantizer-training sample as a
+    float64 ndarray (empty for an empty corpus, doubling as the
+    emptiness probe), collected CONCURRENTLY with the tier's other
+    bounded build ``actions`` (guide §2.6 "overlap independent jobs"
+    + §5 driver discipline). Every eager plan-build action is a full
+    job-scheduling round trip, so the set costs the max of its actions
+    instead of their sum — measured 0.044 s vs 0.080 s sequential at
+    sf0.1 for the sample plus a query collect. Collecting both through
+    one union was SLOWER (0.121 s: the query branch's GlobalLimit
+    exchange becomes an extra AQE stage job).
 
-    A seeded-hash-of-id ordering (orderBy(xxhash64(42, id), id) — the
-    id-decorrelated uniform draw VERDICT r15 #4 / ADVICE r15 asked
-    for, same bounded TakeOrdered cost) was TRIED in r16 and REJECTED
-    on measurement: at the fixture SFs it DEGRADED recall vs brute —
+    The sample is the ``TRAIN_N`` lowest-id corpus vectors
+    (TakeOrdered on the id — partitioning-invariant, so deterministic
+    for fixed data). A seeded-hash-of-id ordering
+    (orderBy(xxhash64(42, id), id), an id-decorrelated uniform draw at
+    the same bounded TakeOrdered cost) was tried and REJECTED on
+    measurement: at the fixture SFs it DEGRADED recall vs brute —
     sf0.001 pq 0.900 -> 0.500 (under the 0.7 floor
     test_knn_pq_recall_vs_brute pins) and ivfpq_residual 0.500 ->
     0.400 while raw stayed 0.500 (violating the residual >= raw
     fixture property) — with no SF where it helped beyond noise
-    (sf0.01: ivf 0.7 -> 0.7, ivfpq 0.7 -> 0.6). The advice's premise
-    (ids correlate with ingest time at 100 TB, biasing the prefix) is
-    real but unobservable at fixture scale, where the measured effect
-    is pure harm; loosening the pinned floors to admit it would be
+    (sf0.01: ivf 0.7 -> 0.7, ivfpq 0.7 -> 0.6). Its premise (ids
+    correlate with ingest time at 100 TB, biasing the prefix) is real
+    but unobservable at fixture scale, where the measured effect is
+    pure harm; loosening the pinned floors to admit it would be
     gate-dodging. At production scale the right lever remains raising
-    ``train_n`` toward ~10^5 (the docstring-cited practice) — the
-    collect stays k-bounded — and/or swapping this plan for a seeded
-    uniform draw once a representatively-ordered corpus exists to
-    validate against."""
-    return corpus.select(c_vec).orderBy(c_id).limit(train_n)
-
-
-def _collect_sample_and_queries(
-    tier: str,
-    corpus: DataFrame,
-    c_id: str,
-    c_vec: str,
-    train_n: int,
-    queries: DataFrame,
-    q_id: str,
-    q_vec: str | None,
-    max_queries: int = 100_000,
-):
-    """Collect the quantizer-training sample AND the guarded query
-    side as two CONCURRENT driver actions (r16, guide §2.6 "overlap
-    independent jobs" + §5 driver discipline): at serving time every
-    eager plan-build action is a full job-scheduling round trip, so
-    per-call build latency adds up action by action. The two collects
-    are independent and k-bounded (train_n rows; max_queries+1 rows),
-    so submitting them from a 2-thread pool makes the pair cost
-    max(a, b) instead of a + b — measured 0.044 s vs 0.080 s
-    sequential at sf0.1 (a union-into-one-collect variant was SLOWER,
-    0.121 s: the query branch's GlobalLimit exchange becomes an extra
-    AQE stage job). Both plans are exactly the pre-r16 per-action
-    plans — TakeOrderedAndProject for the sample, CollectLimit for
-    the queries — so the collected rows are bit-identical.
-
-    Returns ``(train, qrows)``:
-
-    - ``train``: float64 ndarray of the ``train_n`` lowest-id corpus
-      vectors (TakeOrdered on the id is partitioning-invariant, so
-      the sample is deterministic for fixed data); empty for an empty
-      corpus, doubling as the emptiness probe.
-    - ``qrows``: list of ``(q_id value, q_vec value)`` rows, or
-      ``(q_id value,)`` rows when ``q_vec=None`` (tiers that keep
-      queries distributed and need only the serving-contract guard).
-      Empty for an empty query set.
-
-    Raises the tier's 100k serving-contract guard when the query set
-    exceeds ``max_queries`` (the ANN contract: queries are the SMALL
-    side — misuse must raise, not OOM the driver or a broadcast),
-    unless the corpus is empty (preserving the pre-r16 check order:
-    empty corpus wins and the caller returns the empty result).
-    """
+    ``TRAIN_N`` toward ~10^5 — the collect stays bounded — and/or
+    swapping this plan for a seeded uniform draw once a
+    representatively-ordered corpus exists to validate against."""
     import numpy as np
 
-    sample = _train_sample_plan(corpus, c_id, c_vec, train_n)
-    qcols = [q_id] if q_vec is None else [q_id, q_vec]
-    qlim = queries.select(*qcols).limit(max_queries + 1)
-    srows, qrows = _concurrently(sample.collect, qlim.collect)
-    train = np.array([r[0] for r in srows], dtype=np.float64)
-    if train.size and len(qrows) > max_queries:
-        raise ValueError(
-            f"{tier} query set exceeds {max_queries} rows; chunk the "
-            "queries or use the LSH/IVF paths for query-heavy workloads"
-        )
-    return train, qrows
-
-
-def _coarse_centroids(train, n_cells: int):
-    """IVF coarse quantizer trained DRIVER-SIDE on the deterministic
-    sample (r15): seeded :func:`_lloyd` over ``train`` instead of an
-    MLlib KMeans fit over the full corpus. This is how production ANN
-    indexes train their coarse quantizer (sample ~10^5 vectors, fit
-    locally, broadcast the centroids — at 100 TB a full-corpus fit is
-    neither affordable nor useful), and it removes the ~20
-    driver-coordinated Spark jobs the MLlib fit ran (measured 3-6 s
-    per ANN query at sf0.1, the dominant cost of every IVF tier).
-    Returns an (n_cells, dim) ndarray; caller guards empty train."""
-    return _lloyd(train, n_cells, seed=42)
+    sample = corpus.select(c_vec).orderBy(c_id).limit(TRAIN_N)
+    srows, *results = _concurrently(sample.collect, *actions)
+    return (np.array([r[0] for r in srows], dtype=np.float64), *results)
 
 
 def _assign_cells(df: DataFrame, vec_col: str, cents) -> DataFrame:
     """Append ``cell int`` = argmin squared distance to ``cents`` via
     one Arrow pass (vectorized numpy over record batches — guide
     §4.2; the centroid matrix is n_cells x dim floats, closure-tiny).
-    Ties resolve to the lowest centroid index, same as the MLlib
-    predictor this replaces. One linear pass, exactly what the MLlib
-    transform cost."""
+    Ties resolve to the lowest centroid index. One linear pass."""
     import numpy as np
 
     from pyspark.sql.types import IntegerType, StructField, StructType
@@ -629,6 +612,99 @@ def _assign_cells(df: DataFrame, vec_col: str, cents) -> DataFrame:
     return df.mapInPandas(assign, out_schema)
 
 
+def _probe_cells(
+    queries: DataFrame,
+    cents,
+    n_probe: int,
+    q_id: str,
+    q_vec: str,
+    keep_vec: bool,
+) -> DataFrame:
+    """The IVF probe list: each query's ``n_probe`` nearest centroids
+    by (csim desc, cell), from a tiny cross join against the broadcast
+    centroid frame. Rows are ``(q_id, q_vec, cell)`` when ``keep_vec``
+    (the probe list is then the query side of the exact scan) and
+    ``(q_id, cell)`` otherwise."""
+    cent_df = queries.sparkSession.createDataFrame(
+        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(cents)],
+        ["cell", "centroid"],
+    )
+    keep = [q_id, q_vec, "cell"] if keep_vec else [q_id, "cell"]
+    csim = F.round(cosine(F.col(q_vec), F.col("centroid")), 6)
+    return top_k_per_group(
+        queries.crossJoin(F.broadcast(cent_df)).select(
+            *keep, csim.alias("csim")
+        ),
+        [q_id],
+        [F.col("csim").desc(), F.col("cell")],
+        n_probe,
+    ).select(*keep)
+
+
+def _rerank_exact(
+    pairs: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    q_id: str,
+    c_id: str,
+    q_vec: str,
+    c_vec: str,
+) -> DataFrame:
+    """Shortlist-then-rerank: the approximate scores in ``pairs``
+    prune the corpus to ``k * RERANK_FACTOR`` candidates per query,
+    and the exact kernel re-scores only that shortlist (equi-join on
+    c_id — it touches RERANK_FACTOR*k/N of the corpus, not all of it).
+    This two-stage shape is how quantized ANN is deployed:
+    quantization error shifts ranks a few places, so over-fetch then
+    re-rank."""
+    shortlist = _top_k(pairs, q_id, c_id, k * RERANK_FACTOR).select(
+        q_id, c_id
+    )
+    exact = (
+        shortlist.join(corpus, c_id)
+        .join(F.broadcast(queries), q_id)
+        .select(
+            q_id,
+            c_id,
+            F.round(cosine(F.col(q_vec), F.col(c_vec)), 6).alias("sim"),
+        )
+    )
+    return _top_k(exact, q_id, c_id, k)
+
+
+def _pq_books(train):
+    """``(sub, books)``: the PQ_M per-subspace codebooks (PQ_CODES
+    centroids of width ``sub`` each), seeded per subspace."""
+    dim = train.shape[1]
+    sub = dim // PQ_M
+    assert sub * PQ_M == dim, f"dim {dim} not divisible by m={PQ_M}"
+    books = [
+        _lloyd(train[:, j * sub : (j + 1) * sub], PQ_CODES, seed=42 + j)
+        for j in range(PQ_M)
+    ]
+    return sub, books
+
+
+def _pq_luts(qrows, books, sub):
+    """``(luts, qnorms)`` for the ``(q_id, q_vec)`` rows: per query an
+    (m, n_codes) table of each code word's dot contribution in its
+    subspace, stacked to (Q, m, n_codes), and the exact query norms."""
+    import numpy as np
+
+    qvs = [np.asarray(r[1], dtype=np.float64) for r in qrows]
+    luts = np.stack(
+        [
+            np.stack(
+                [b @ qv[j * sub : (j + 1) * sub] for j, b in enumerate(books)]
+            )
+            for qv in qvs
+        ]
+    )
+    qnorms = np.array([float(np.sqrt((qv * qv).sum())) for qv in qvs])
+    return luts, qnorms
+
+
 def knn_pq(
     queries: DataFrame,
     corpus: DataFrame,
@@ -637,10 +713,6 @@ def knn_pq(
     c_id: str = "nid",
     q_vec: str = "qvec",
     c_vec: str = "cvec",
-    m: int = 8,
-    n_codes: int = 16,
-    train_n: int = 512,
-    rerank_factor: int = 10,
 ) -> DataFrame:
     """IVF-PQ's PQ half: product-quantized asymmetric-distance knn.
 
@@ -651,38 +723,24 @@ def knn_pq(
     float math per dimension. Encode and score run as Arrow-batched
     mapInPandas over the corpus (numpy gathers), never collecting it;
     only the codebook (m*n_codes*sub_dim floats) and the query set
-    travel to executors.
+    travel to executors. The PQ scores pick the shortlist that
+    :func:`_rerank_exact` re-scores.
     """
     import numpy as np
 
-    # ONE driver action collects the codebook training sample AND the
-    # guarded query rows (r16 — was two eager jobs per call; the
-    # query side is the knn_pq serving contract: queries are the
-    # SMALL side, so misuse raises instead of OOMing the driver,
-    # VERDICT r01 #5)
-    train, qrows = _collect_sample_and_queries(
-        "knn_pq", corpus, c_id, c_vec, train_n, queries, q_id, q_vec
-    )
-    if train.size == 0:
-        # empty corpus: nothing to train a codebook on (the sample
-        # rows double as the emptiness probe — no extra job)
+    # the query rows are collected for the LUTs, so the guard rides
+    # the same driver action as the codebook sample
+    qlim = queries.select(q_id, q_vec).limit(MAX_QUERIES + 1)
+    train, qrows = _collect_train_sample(corpus, c_id, c_vec, qlim.collect)
+    if train.size == 0 or not qrows:
         return _empty_knn_result(queries, q_id, corpus, c_id)
-    if not qrows:
-        # empty query set: a legitimate serving state (e.g. nothing
-        # sampled this cycle) — return an empty result with the
-        # contract schema instead of letting np.stack([]) throw
-        return _empty_knn_result(queries, q_id, corpus, c_id)
+    _guard_queries("knn_pq", len(qrows))
     # dim comes from the training sample already collected — the
     # array<float> schema doesn't carry it, and probing .first() would
-    # cost one extra Spark job per call (VERDICT r03 "What's wrong" #2)
+    # cost one extra Spark job per call
     corpus = spread_to_cores(corpus)
-    dim = train.shape[1]
-    sub = dim // m
-    assert sub * m == dim, f"dim {dim} not divisible by m={m}"
-    books = [
-        _lloyd(train[:, j * sub : (j + 1) * sub], n_codes, seed=42 + j)
-        for j in range(m)
-    ]
+    sub, books = _pq_books(train)
+    m = len(books)
 
     def encode(batches):
         import pandas as pd
@@ -706,24 +764,12 @@ def knn_pq(
         encode, f"{c_id} bigint, codes array<int>, norm double"
     )
 
-    luts, qids, qnorms = [], [], []
-    for r in qrows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        qids.append(r[0])
-        qnorms.append(float(np.sqrt((qv * qv).sum())))
-        luts.append(
-            np.stack(
-                [books[j] @ qv[j * sub : (j + 1) * sub] for j in range(m)]
-            )
-        )  # shape (m, n_codes): dot contribution per subspace code
-    luts = np.stack(luts)  # (Q, m, n_codes)
-    qids_a = np.array(qids)
-    qnorms_a = np.array(qnorms)
+    luts, qnorms = _pq_luts(qrows, books, sub)
     # explicit broadcast instead of task-closure pickling: the LUT array
     # is up to Q*m*n_codes float64 (~100 MB at the query guard limit) and
     # closure capture re-serializes it per stage (ADVICE r11)
     bc = corpus.sparkSession.sparkContext.broadcast(
-        (luts, qids_a, qnorms_a)
+        (luts, np.array([r[0] for r in qrows]), qnorms)
     )
 
     def score(batches):
@@ -761,33 +807,7 @@ def knn_pq(
     pairs = coded.mapInPandas(
         score, f"{q_id} bigint, {c_id} bigint, sim double"
     ).filter(F.col(q_id) != F.col(c_id))
-    if rerank_factor <= 1:
-        return top_k_per_group(
-            pairs, [q_id], [F.col("sim").desc(), F.col(c_id)], k,
-            rank_col="rnk",
-        )
-    # Shortlist-then-rerank: PQ scores prune the corpus to
-    # k*rerank_factor candidates per query (approximate, cheap), the
-    # exact kernel re-scores only the shortlist (equi-join on c_id —
-    # touches rerank_factor*k/N of the corpus, not all of it). This
-    # two-stage shape is how PQ is actually deployed: quantization
-    # error shifts ranks a few places, so over-fetch then re-rank.
-    shortlist = top_k_per_group(
-        pairs, [q_id], [F.col("sim").desc(), F.col(c_id)],
-        k * rerank_factor, rank_col="rnk",
-    ).select(q_id, c_id)
-    exact = (
-        shortlist.join(corpus, c_id)
-        .join(F.broadcast(queries), q_id)
-        .select(
-            q_id,
-            c_id,
-            F.round(cosine(F.col(q_vec), F.col(c_vec)), 6).alias("sim"),
-        )
-    )
-    return top_k_per_group(
-        exact, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
-    )
+    return _rerank_exact(pairs, corpus, queries, k, q_id, c_id, q_vec, c_vec)
 
 
 def knn_ivfpq(
@@ -800,10 +820,6 @@ def knn_ivfpq(
     c_vec: str = "cvec",
     n_cells: int = 16,
     n_probe: int = 4,
-    m: int = 8,
-    n_codes: int = 16,
-    train_n: int = 512,
-    rerank_factor: int = 10,
     by_residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ combined: the deployed large-corpus ANN shape — the IVF
@@ -811,12 +827,10 @@ def knn_ivfpq(
     cells, PQ asymmetric distance scores ONLY the coded vectors in
     probed cells (m table gathers per vector, corpus stored as m
     codes + a norm), and the exact kernel re-ranks the top
-    k*rerank_factor shortlist. Composition of :func:`knn_ivf`'s probe
-    stage and :func:`knn_pq`'s codec; both quantizers are seeded, so
-    results are deterministic. Scale story multiplies: touch
-    n_probe/n_cells of the corpus AND read 8x fewer bytes per touched
-    vector; the shortlist equi-join re-reads only rerank_factor*k rows
-    per query.
+    k*RERANK_FACTOR shortlist. Both quantizers are seeded, so results
+    are deterministic. Scale story multiplies: touch n_probe/n_cells
+    of the corpus AND read 8x fewer bytes per touched vector; the
+    shortlist equi-join re-reads only RERANK_FACTOR*k rows per query.
 
     ``by_residual=False`` quantizes RAW vectors — one codebook serves
     every cell (a single broadcast scalar table). ``by_residual=True``
@@ -831,58 +845,35 @@ def knn_ivfpq(
     broadcast codebook, same two-stage shortlist/re-rank plan."""
     import numpy as np
 
-    # --- ONE deterministic driver action collects the training
-    # sample for BOTH quantizers AND the guarded query LUT rows (r16
-    # — was two eager jobs per call); the sample doubles as the
-    # corpus-emptiness probe, the query rows as the empty-queries
-    # probe, and the 100k serving-contract guard rides the same
-    # collect (queries are the broadcast-small side, the knn_pq
-    # contract) --------------------------------------------------------
-    train, qrows = _collect_sample_and_queries(
-        "knn_ivfpq", corpus, c_id, c_vec, train_n, queries, q_id, q_vec
-    )
-    if train.size == 0:
+    # one round of driver actions collects the sample for BOTH
+    # quantizers and the guarded query rows the LUTs need
+    qlim = queries.select(q_id, q_vec).limit(MAX_QUERIES + 1)
+    train, qrows = _collect_train_sample(corpus, c_id, c_vec, qlim.collect)
+    if train.size == 0 or not qrows:
         return _empty_knn_result(queries, q_id, corpus, c_id)
-    if not qrows:
-        return _empty_knn_result(queries, q_id, corpus, c_id)
+    _guard_queries("knn_ivfpq", len(qrows))
+    qix = {r[0]: i for i, r in enumerate(qrows)}
+    if len(qix) != len(qrows):
+        # a dict would silently collapse duplicates to the LAST row's
+        # LUT/norm and score the shadowed rows wrong (ADVICE r11) —
+        # unique query ids are a contract of the ivfpq serving path
+        raise ValueError(
+            f"knn_ivfpq requires unique {q_id} values: got "
+            f"{len(qrows)} rows but {len(qix)} distinct ids"
+        )
     corpus = spread_to_cores(corpus)
-
-    # --- IVF half: coarse quantizer + per-query probe list ----------
-    cents = _coarse_centroids(train, n_cells)  # (n_cells, dim)
-    cent_df = queries.sparkSession.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(cents)],
-        ["cell", "centroid"],
-    )
-    probes = top_k_per_group(
-        queries.crossJoin(F.broadcast(cent_df)).select(
-            q_id,
-            "cell",
-            F.round(cosine(F.col(q_vec), F.col("centroid")), 6).alias(
-                "csim"
-            ),
-        ),
-        [q_id],
-        [F.col("csim").desc(), F.col("cell")],
-        n_probe,
-    ).select(q_id, "cell")
-
-    # --- PQ half: codebooks; cell assignment rides the encode pass ---
-    dim = train.shape[1]
-    sub = dim // m
-    assert sub * m == dim, f"dim {dim} not divisible by m={m}"
+    cents = _lloyd(train, n_cells)  # (n_cells, dim)
+    probes = _probe_cells(queries, cents, n_probe, q_id, q_vec, keep_vec=False)
     if by_residual:
         # train the codebooks on residuals: assign the training sample
-        # to its nearest centroid (same squared-euclidean argmin the
-        # JVM KMeans uses) and subtract — the codebook then models the
-        # within-cell spread, not the whole-space spread
+        # to its nearest centroid and subtract — the codebook then
+        # models the within-cell spread, not the whole-space spread
         tcell = (
             ((train[:, None, :] - cents[None, :, :]) ** 2).sum(-1).argmin(1)
         )
         train = train - cents[tcell]
-    books = [
-        _lloyd(train[:, j * sub : (j + 1) * sub], n_codes, seed=42 + j)
-        for j in range(m)
-    ]
+    sub, books = _pq_books(train)
+    m = len(books)
 
     def encode(batches):
         import pandas as pd
@@ -893,8 +884,8 @@ def knn_ivfpq(
             v = np.stack(pdf[c_vec].map(np.asarray)).astype(np.float64)
             norms = np.sqrt((v * v).sum(1))  # EXACT norm, pre-residual
             # cell assignment fused into the same Arrow pass the codes
-            # need anyway (was a separate MLlib transform): argmin
-            # squared distance, ties to the lowest index
+            # need anyway: argmin squared distance, ties to the lowest
+            # index
             cell = (
                 ((v[:, None, :] - cents[None, :, :]) ** 2)
                 .sum(-1)
@@ -921,35 +912,7 @@ def knn_ivfpq(
         encode, f"{c_id} bigint, cell int, codes array<int>, norm double"
     )
 
-    qix = {r[0]: i for i, r in enumerate(qrows)}
-    if len(qix) != len(qrows):
-        # a dict would silently collapse duplicates to the LAST row's
-        # LUT/norm and score the shadowed rows wrong (ADVICE r11) —
-        # unique query ids are a contract of the ivfpq serving path
-        raise ValueError(
-            f"knn_ivfpq requires unique {q_id} values: got "
-            f"{len(qrows)} rows but {len(qix)} distinct ids"
-        )
-    luts = np.stack(
-        [
-            np.stack(
-                [
-                    books[j]
-                    @ np.asarray(r[1], dtype=np.float64)[
-                        j * sub : (j + 1) * sub
-                    ]
-                    for j in range(m)
-                ]
-            )
-            for r in qrows
-        ]
-    )  # (Q, m, n_codes)
-    qnorms = np.array(
-        [
-            float(np.sqrt((np.asarray(r[1], dtype=np.float64) ** 2).sum()))
-            for r in qrows
-        ]
-    )
+    luts, qnorms = _pq_luts(qrows, books, sub)
     # per-(query, cell) centroid dot term for the residual ADC:
     # dot(q, v) = dot(q, centroid_cell) + dot(q, residual); zeros in
     # raw mode so score() stays one code path
@@ -964,8 +927,8 @@ def knn_ivfpq(
     # references score() (ADVICE r11)
     bc = corpus.sparkSession.sparkContext.broadcast((luts, qnorms, qix, qc))
 
-    # --- ADC over probed cells only: equi-join on cell, then m table
-    # gathers per row — no float math per dimension --------------------
+    # ADC over probed cells only: equi-join on cell, then m table
+    # gathers per row — no float math per dimension
     probed = coded.join(F.broadcast(probes), "cell")
 
     def score(batches):
@@ -999,36 +962,18 @@ def knn_ivfpq(
     pairs = probed.mapInPandas(
         score, f"{q_id} bigint, {c_id} bigint, sim double"
     ).filter(F.col(q_id) != F.col(c_id))
-    shortlist = top_k_per_group(
-        pairs,
-        [q_id],
-        [F.col("sim").desc(), F.col(c_id)],
-        k * rerank_factor,
-        rank_col="rnk",
-    ).select(q_id, c_id)
-    exact = (
-        shortlist.join(corpus, c_id)
-        .join(F.broadcast(queries), q_id)
-        .select(
-            q_id,
-            c_id,
-            F.round(cosine(F.col(q_vec), F.col(c_vec)), 6).alias("sim"),
-        )
-    )
-    return top_k_per_group(
-        exact, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
-    )
+    return _rerank_exact(pairs, corpus, queries, k, q_id, c_id, q_vec, c_vec)
 
 
 def _lo_scale(dim_rows) -> tuple[list, list]:
     """(lo, scale) lists from per-dimension (pos, lo, hi) rows,
-    sorted DRIVER-side: the d-row distributed ``orderBy("pos")`` this
-    replaces cost a range-partitioning sampling pass plus sort stages
-    per calibration (r16 — guide §5: the driver should do almost no
-    data work, but sorting d<=few-thousand rows locally is not data
-    work, while scheduling two extra stages per call is real
-    latency). scale is (hi-lo)/255 with a floor so constant
-    dimensions encode to 0 instead of dividing by zero."""
+    sorted DRIVER-side: a d-row distributed ``orderBy("pos")`` costs a
+    range-partitioning sampling pass plus sort stages per calibration
+    (guide §5: the driver should do almost no data work, but sorting
+    d<=few-thousand rows locally is not data work, while scheduling
+    two extra stages per call is real latency). scale is (hi-lo)/255
+    with a floor so constant dimensions encode to 0 instead of
+    dividing by zero."""
     dims = sorted(dim_rows, key=lambda r: r["pos"])
     lo = [float(r["lo"]) for r in dims]
     scale = [
@@ -1051,37 +996,6 @@ def sq8_calibrate(corpus: DataFrame, c_vec: str = "cvec"):
         .collect()
     )
     return _lo_scale(stats)
-
-
-def _sq8_calibrate_guarded(
-    tier: str,
-    corpus: DataFrame,
-    c_vec: str,
-    queries: DataFrame,
-    max_queries: int = 100_000,
-):
-    """(lo, scale, n_q): the per-dimension min/max calibration
-    aggregate and the query-side serving-guard count as two
-    CONCURRENT driver actions (r16, guide §2.6 "overlap independent
-    jobs"): the pair costs max(a, b) wall instead of a + b — measured
-    0.125 s vs 0.193 s sequential at sf0.1. Two rejected variants,
-    recorded so they are not re-tried: folding the guard into the
-    calibration via crossJoin (r15: +0.18 s) and via a pos=-1 union
-    branch into the same aggregate (r16: 0.370 s — the union branch
-    costs an extra exchange and defeats the aggregate's simple
-    scan+partial shape). lo/scale are :func:`sq8_calibrate`'s exact
-    values (same aggregate, untouched). Empty corpus -> empty lo;
-    empty queries -> n_q 0 — both probes ride the same two actions."""
-    (lo, scale), n_q = _concurrently(
-        lambda: sq8_calibrate(corpus, c_vec),
-        queries.limit(max_queries + 1).count,
-    )
-    if n_q > max_queries:
-        raise ValueError(
-            f"{tier} query set exceeds {max_queries} rows; chunk the "
-            "queries or use the LSH/IVF paths for query-heavy workloads"
-        )
-    return lo, scale, n_q
 
 
 def sq8_encode(vec, lo: list, scale: list):
@@ -1125,7 +1039,6 @@ def knn_sq8(
     c_id: str = "nid",
     q_vec: str = "qvec",
     c_vec: str = "cvec",
-    round_dp: int = 6,
 ) -> DataFrame:
     """SQ8 scalar-quantized ANN (the FAISS ScalarQuantizer QT_8bit
     shape): per-dimension min/max calibration (closed-form — unlike
@@ -1138,47 +1051,33 @@ def knn_sq8(
     :func:`knn_ivfsq8` is the composed production form (prune cells,
     then scan 4x-cheaper bytes). All scan-side math is whole-stage
     codegen; only the d-row calibration touches the driver."""
-    # ONE driver action calibrates AND guards (r16,
-    # _sq8_calibrate_guarded): the query-side 100k serving guard
-    # (queries are the broadcast-small side — VERDICT r14 wrong #1)
-    # rides the calibration aggregate as a pos=-1 group, the
-    # calibration doubles as the empty-corpus probe (zero rows -> no
-    # dimensions), and its count as the empty-queries probe. Was two
-    # eager jobs per call after r15 (guard count + calibration),
-    # three before. Calibration stays on the UN-spread corpus:
+    # The calibration aggregate and the query guard count run as two
+    # CONCURRENT driver actions (guide §2.6 "overlap independent
+    # jobs"): max(a, b) wall instead of a + b — measured 0.125 s vs
+    # 0.193 s sequential at sf0.1. Rejected, so not re-tried: folding
+    # the guard into the calibration via crossJoin (+0.18 s) or via a
+    # pos=-1 union branch into the same aggregate (0.370 s — the union
+    # branch costs an extra exchange and defeats the aggregate's
+    # simple scan+partial shape). The calibration doubles as the
+    # empty-corpus probe (no rows -> no dimensions), the count as the
+    # empty-queries probe. Calibration stays on the UN-spread corpus:
     # min/max is partitioning-invariant, and routing the d-row
     # aggregate through the round-robin exchange re-paid the spread
-    # for zero benefit (r15 O6; the spread stays for the
-    # compute-dense encode/score scan below).
-    lo, scale, n_q = _sq8_calibrate_guarded(
-        "knn_sq8", corpus, c_vec, queries
+    # for zero benefit; the spread stays for the compute-dense scan.
+    (lo, scale), n_q = _concurrently(
+        lambda: sq8_calibrate(corpus, c_vec),
+        queries.limit(MAX_QUERIES + 1).count,
     )
-    if n_q == 0:
+    _guard_queries("knn_sq8", n_q)
+    if n_q == 0 or not lo:
         return _empty_knn_result(queries, q_id, corpus, c_id)
-    if not lo:
-        return _empty_knn_result(queries, q_id, corpus, c_id)
-    corpus = spread_to_cores(corpus)
-    enc = corpus.select(
-        c_id, sq8_encode(F.col(c_vec), lo, scale).alias("code")
+    dec = (
+        spread_to_cores(corpus)
+        .select(c_id, sq8_encode(F.col(c_vec), lo, scale).alias("code"))
+        .select(c_id, sq8_decode(F.col("code"), lo, scale).alias("rvec"))
     )
-    dec = enc.select(
-        c_id, sq8_decode(F.col("code"), lo, scale).alias("rvec")
-    ).withColumn("__cn", l2norm(F.col("rvec")))
-    queries = queries.withColumn("__qn", l2norm(F.col(q_vec)))
-    sim = F.round(
-        cosine_with_norms(
-            F.col(q_vec), F.col("rvec"), F.col("__qn"), F.col("__cn")
-        ),
-        round_dp,
-    )
-    pairs = (
-        dec.crossJoin(F.broadcast(queries))
-        .filter(F.col(c_id) != F.col(q_id))
-        .select(q_id, c_id, sim.alias("sim"))
-    )
-    return top_k_per_group(
-        pairs, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
-    )
+    pairs = _scored(dec, queries, q_id, c_id, q_vec, "rvec")
+    return _top_k(pairs, q_id, c_id, k)
 
 
 def knn_ivfsq8(
@@ -1191,132 +1090,47 @@ def knn_ivfsq8(
     c_vec: str = "cvec",
     n_cells: int = 16,
     n_probe: int = 4,
-    rerank_factor: int = 10,
 ) -> DataFrame:
-    """IVF x SQ8 combined — the SQ8 tier's production composition
-    (VERDICT r14 missing #3), the exact :func:`knn_ivfpq` pattern with
-    the scalar quantizer in place of PQ: the seeded-KMeans coarse
-    quantizer prunes the search to ``n_probe`` of ``n_cells`` cells,
-    the scan inside probed cells reads int8 SQ8 codes (4x fewer bytes
-    per touched vector) and reconstructs + scores them entirely in
-    whole-stage codegen — NO Python, no LUT broadcast, the structural
-    advantage SQ8 holds over PQ — and the exact kernel re-ranks the
-    k*rerank_factor shortlist on raw vectors. Scale story multiplies:
-    touch n_probe/n_cells of the corpus AND read 4x fewer bytes per
-    touched vector; unlike PQ there is no codebook training (the
+    """IVF x SQ8 combined — the SQ8 tier's production composition,
+    the :func:`knn_ivfpq` pattern with the scalar quantizer in place
+    of PQ: the seeded coarse quantizer prunes the search to
+    ``n_probe`` of ``n_cells`` cells, the scan inside probed cells
+    reads int8 SQ8 codes (4x fewer bytes per touched vector) and
+    reconstructs + scores them entirely in whole-stage codegen — NO
+    Python, no LUT broadcast, the structural advantage SQ8 holds over
+    PQ — and the exact kernel re-ranks the k*RERANK_FACTOR shortlist
+    on raw vectors. Unlike PQ there is no codebook training (the
     calibration is a closed-form d-row aggregate), so the tier has no
     training-drift maintenance cost at 100 TB."""
     # The whole index build — coarse-quantizer sample, SQ8
-    # calibration aggregate, query-side serving guard — runs as THREE
-    # CONCURRENT driver actions in one pool (r16, guide §2.6 "overlap
-    # independent jobs": they are independent and individually
-    # bounded, so the build costs max of the three instead of their
-    # sum; was three sequential actions after r15, four in r14). The
-    # sample doubles as the corpus-emptiness probe and the guard
-    # count as the empty-queries probe. Calibration stays on the
-    # UN-spread corpus (r15 O6: min/max is partitioning-invariant);
-    # the spread feeds the compute-dense assign/encode/score stages
-    # below.
-    import numpy as np
-
-    max_queries = 100_000
-    sample = _train_sample_plan(corpus, c_id, c_vec, 512)
-    srows, (lo, scale), n_q = _concurrently(
-        sample.collect,
+    # calibration aggregate, query guard count — runs as THREE
+    # CONCURRENT driver actions (guide §2.6: they are independent and
+    # individually bounded, so the build costs the max of the three
+    # instead of their sum). The sample doubles as the
+    # corpus-emptiness probe and the guard count as the empty-queries
+    # probe. Calibration stays on the UN-spread corpus (min/max is
+    # partitioning-invariant); the spread feeds the compute-dense
+    # assign/encode/score stages.
+    train, (lo, scale), n_q = _collect_train_sample(
+        corpus,
+        c_id,
+        c_vec,
         lambda: sq8_calibrate(corpus, c_vec),
-        queries.limit(max_queries + 1).count,
+        queries.limit(MAX_QUERIES + 1).count,
     )
-    train = np.array([r[0] for r in srows], dtype=np.float64)
-    if train.size == 0:
-        # empty corpus — the sample collect doubled as the probe
+    if train.size == 0 or n_q == 0:
         return _empty_knn_result(queries, q_id, corpus, c_id)
-    if n_q > max_queries:
-        raise ValueError(
-            f"knn_ivfsq8 query set exceeds {max_queries} rows; chunk "
-            "the queries or use the LSH/IVF paths for query-heavy "
-            "workloads"
-        )
-    if n_q == 0:
-        return _empty_knn_result(queries, q_id, corpus, c_id)
+    _guard_queries("knn_ivfsq8", n_q)
     corpus = spread_to_cores(corpus)
-
-    # --- IVF half: sample-trained coarse quantizer + per-query probe
-    # list (r15 — _coarse_centroids replaces the full-corpus MLlib
-    # fit; the probe stage itself is the knn_ivf/knn_ivfpq stage
-    # verbatim). Assignment is one Arrow pass; the probed-cell SCAN
-    # (reconstruct + score) stays whole-stage codegen ------------------
-    cents = _coarse_centroids(train, n_cells)
-    corpus_cells = _assign_cells(corpus, c_vec, cents)
-    cent_df = queries.sparkSession.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(cents)],
-        ["cell", "centroid"],
-    )
-    probes = top_k_per_group(
-        queries.crossJoin(F.broadcast(cent_df)).select(
-            q_id,
-            q_vec,
-            "cell",
-            F.round(cosine(F.col(q_vec), F.col("centroid")), 6).alias(
-                "csim"
-            ),
-        ),
-        [q_id],
-        [F.col("csim").desc(), F.col("cell")],
-        n_probe,
-    ).select(q_id, q_vec, "cell")
-
-    # --- SQ8 half: int8 codes stored per cell (calibration hoisted
-    # above the spread) ------------------------------------------------
-    enc = corpus_cells.select(
+    cents = _lloyd(train, n_cells)
+    probes = _probe_cells(queries, cents, n_probe, q_id, q_vec, keep_vec=True)
+    # int8 codes stored per cell; the probed-cell scan reconstructs
+    # and scores them in codegen
+    enc = _assign_cells(corpus, c_vec, cents).select(
         c_id, "cell", sq8_encode(F.col(c_vec), lo, scale).alias("code")
     )
-
-    # --- codegen scan over probed cells only: equi-join on cell,
-    # reconstruct, exact cosine on the reconstruction ------------------
     dec = enc.select(
         c_id, "cell", sq8_decode(F.col("code"), lo, scale).alias("rvec")
     )
-    # probes explicitly broadcast — same rationale as knn_ivf: the
-    # probe list is the guaranteed-bounded side, and the opaque assign
-    # pass hides the corpus size from the planner; norms precomputed
-    # per side (cosine_with_norms — one fold per pair, bit-identical)
-    pairs = (
-        dec.withColumn("__cn", l2norm(F.col("rvec")))
-        .join(
-            F.broadcast(probes.withColumn("__qn", l2norm(F.col(q_vec)))),
-            "cell",
-        )
-        .filter(F.col(c_id) != F.col(q_id))
-        .select(
-            q_id,
-            c_id,
-            F.round(
-                cosine_with_norms(
-                    F.col(q_vec),
-                    F.col("rvec"),
-                    F.col("__qn"),
-                    F.col("__cn"),
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    shortlist = top_k_per_group(
-        pairs,
-        [q_id],
-        [F.col("sim").desc(), F.col(c_id)],
-        k * rerank_factor,
-        rank_col="rnk",
-    ).select(q_id, c_id)
-    exact = (
-        shortlist.join(corpus, c_id)
-        .join(F.broadcast(queries), q_id)
-        .select(
-            q_id,
-            c_id,
-            F.round(cosine(F.col(q_vec), F.col(c_vec)), 6).alias("sim"),
-        )
-    )
-    return top_k_per_group(
-        exact, [q_id], [F.col("sim").desc(), F.col(c_id)], k, rank_col="rnk"
-    )
+    pairs = _scored(dec, probes, q_id, c_id, q_vec, "rvec", on="cell")
+    return _rerank_exact(pairs, corpus, queries, k, q_id, c_id, q_vec, c_vec)

@@ -30,7 +30,11 @@ from event_stream_for_k8s_spark.functions.vectors import cosine, sql_cosine
 from event_stream_for_k8s_spark.operators.similarity import (
     knn_brute,
     knn_ivf,
+    knn_ivfpq,
+    knn_ivfsq8,
     knn_lsh,
+    knn_pq,
+    knn_sq8,
     minhash_pairs_native,
 )
 from event_stream_for_k8s_spark.plans.registry import query
@@ -559,16 +563,33 @@ SELECT qid, nid, sim, rnk FROM (
 """
 
 
+def _knn_q():
+    """The fixture query predicate, the ``WHERE vec_id % 250 = 0 AND
+    vec_id < 25000`` of the oracles. A function, not a module-level
+    Column: building a Column needs a SparkContext, which importing
+    the plans does not have."""
+    return (F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)
+
+
+def _knn_fixture(spark: SparkSession, sf_dir: str):
+    """``(queries, corpus)`` of every kNN query: the fixture queries
+    as (qid, qvec) and the whole embeddings table as (nid, cvec)."""
+    e = load(spark, sf_dir, "embeddings")
+    queries = e.filter(_knn_q()).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    corpus = e.select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec")
+    )
+    return queries, corpus
+
+
 @query("llm_knn_brute", oracle=KNN_ORACLE, section="B.11")
 def llm_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact baseline: queries broadcast, corpus never moves
     # (BroadcastNestedLoopJoin), dot product in codegen via
     # zip_with/aggregate — no Python, no shuffle of the corpus.
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec"))
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_brute(queries, corpus, k=5).select("qid", "nid", "sim", "rnk")
 
 
@@ -578,11 +599,7 @@ def knn_lsh_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic for fixed data). The registered query wraps this in
     a recall-vs-brute envelope for the driver's hash check; a
     deployment runs THIS for the (qid, nid, sim, rnk) rows."""
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec"))
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_lsh(
         queries, corpus, k=5, q_id="qid", c_id="nid", q_vec="qvec", c_vec="cvec"
     ).select("qid", "nid", "sim", "rnk")
@@ -592,11 +609,7 @@ def knn_ivf_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION form of llm_knn_ivf: IVF (seeded KMeans coarse
     quantizer + cell probing), the partition-pruned scale path for
     ANN. See knn_lsh_results on the registered-query split."""
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec"))
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_ivf(
         queries, corpus, k=5, q_id="qid", c_id="nid", q_vec="qvec", c_vec="cvec"
     ).select("qid", "nid", "sim", "rnk")
@@ -633,13 +646,7 @@ def _knn_recall_envelope(
     aggregate subtree + one crossJoin less per envelope query
     (measured min-of-6 at sf0.1: the sq8 envelope 1.27→1.03 s, the
     ivfpq envelope 1.95→1.74 s), same three output values."""
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec")
-    )
+    queries, corpus = _knn_fixture(spark, sf_dir)
     from pyspark import StorageLevel
 
     # brute feeds BOTH the overlap join and the n_brute count —
@@ -719,15 +726,7 @@ def knn_ivfpq_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     (8x-compressed codes + a norm) scores only the probed cells, the
     exact kernel re-ranks the top 10%. The deployed large-corpus ANN
     shape; both quantizers seeded, so deterministic."""
-    from event_stream_for_k8s_spark.operators.similarity import knn_ivfpq
-
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec")
-    )
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_ivfpq(queries, corpus, k=5).select("qid", "nid", "sim", "rnk")
 
 
@@ -759,15 +758,7 @@ def knn_sq8_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration, no codebook training, int8 codes = 4x fewer scan
     bytes than float32, near-exact recall at range/255 resolution);
     composes with IVF cell pruning exactly like the PQ tier."""
-    from event_stream_for_k8s_spark.operators.similarity import knn_sq8
-
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter(
-        (F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)
-    ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    corpus = e.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec")
-    )
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_sq8(queries, corpus, k=5).select("qid", "nid", "sim", "rnk")
 
 
@@ -803,15 +794,7 @@ def knn_ivfsq8_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructions in whole-stage codegen — no Python, no LUT
     broadcast, unlike the PQ ADC — then exact re-rank of the top-10%
     shortlist on raw vectors."""
-    from event_stream_for_k8s_spark.operators.similarity import knn_ivfsq8
-
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter(
-        (F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)
-    ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    corpus = e.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec")
-    )
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_ivfsq8(queries, corpus, k=5).select(
         "qid", "nid", "sim", "rnk"
     )
@@ -850,15 +833,7 @@ def knn_ivfpq_residual_results(
     centroid dot (inner products are linear), everything else —
     storage bytes, probe plan, shortlist re-rank — identical to the
     raw-coded tier. Same seeded determinism."""
-    from event_stream_for_k8s_spark.operators.similarity import knn_ivfpq
-
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec")
-    )
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_ivfpq(queries, corpus, k=5, by_residual=True).select(
         "qid", "nid", "sim", "rnk"
     )
@@ -900,13 +875,7 @@ def llm_knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     "to exact when the probe budget covers the index",
 )
 def llm_knn_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec")
-    )
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_ivf(
         queries, corpus, k=5, q_id="qid", c_id="nid", q_vec="qvec",
         c_vec="cvec", n_cells=16, n_probe=16,
@@ -943,9 +912,7 @@ def _hard_neg_queries(e: DataFrame) -> DataFrame:
     """The fixture query set for hard-negative mining — ONE definition
     shared by the exact and ANN forms so the recall test's exact ≡
     production contract can't drift on a one-sided edit."""
-    return e.filter(
-        (F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)
-    ).select(
+    return e.filter(_knn_q()).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qvec"),
         F.col("label").alias("qlabel"),
@@ -990,7 +957,6 @@ def hard_negatives_ann_results(
     0.2 recall flat in overfetch, 8 -> 0.6, 12 -> 0.9). Same output
     contract as the registered exact query; recall-vs-exact pinned in
     tests/test_llm.py."""
-    from event_stream_for_k8s_spark.operators.similarity import knn_ivfpq
     from event_stream_for_k8s_spark.operators.topk import top_k_per_group
 
     e = load(spark, sf_dir, "embeddings")
@@ -2048,13 +2014,7 @@ def knn_pq_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-rank of the top 10% — the deployed PQ shape. Seeded
     codebooks, so deterministic. Registered query wraps it in the
     shared recall envelope."""
-    from event_stream_for_k8s_spark.operators.similarity import knn_pq
-
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 25_000)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    corpus = e.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("cvec"))
+    queries, corpus = _knn_fixture(spark, sf_dir)
     return knn_pq(queries, corpus, k=5).select("qid", "nid", "sim", "rnk")
 
 

@@ -3162,14 +3162,15 @@ def test_knn_sq8_quantization_and_recall(spark):
     assert empty.columns == ["qid", "nid", "sim", "rnk"]
 
 
-def test_knn_sq8_query_set_guard(spark):
-    """VERDICT r14 wrong #1: the SQ8 query side is the broadcast side;
-    an oversized query set (a corpus passed as queries) must raise the
-    same 100k guard as the PQ tiers instead of OOMing the broadcast."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from event_stream_for_k8s_spark.operators.similarity import knn_sq8
+@pytest.mark.parametrize(
+    "tier", ["knn_ivf", "knn_pq", "knn_ivfpq", "knn_sq8", "knn_ivfsq8"]
+)
+def test_knn_query_set_guard(spark, tier):
+    """Queries are the collected or broadcast side of every quantized
+    tier: an oversized query set (a corpus passed as queries) must
+    raise the shared 100k guard instead of OOMing the driver or the
+    broadcast."""
+    from event_stream_for_k8s_spark.operators import similarity
 
     big_q = spark.range(100_001).select(
         F.col("id").alias("qid"), F.array(F.lit(0.5)).alias("qvec")
@@ -3178,7 +3179,55 @@ def test_knn_sq8_query_set_guard(spark):
         F.col("id").alias("nid"), F.array(F.lit(1.0)).alias("cvec")
     )
     with pytest.raises(ValueError, match="query set exceeds 100000"):
-        knn_sq8(big_q, c, 5)
+        getattr(similarity, tier)(
+            big_q, c, 5, q_id="qid", c_id="nid", q_vec="qvec", c_vec="cvec"
+        )
+
+
+def test_knn_ivfpq_rejects_duplicate_query_ids(spark):
+    """knn_ivfpq indexes its LUTs by query id: a duplicate id would
+    silently score the shadowed row with the other row's table, so it
+    must raise instead."""
+    from event_stream_for_k8s_spark.operators.similarity import knn_ivfpq
+
+    c = spark.range(32).select(
+        F.col("id").alias("nid"),
+        F.array(*[F.sin(F.col("id") + j) for j in range(8)]).alias("cvec"),
+    )
+    q = c.filter(F.col("nid") < 2).union(c.filter(F.col("nid") == 0)).select(
+        F.col("nid").alias("qid"), F.col("cvec").alias("qvec")
+    )
+    with pytest.raises(ValueError, match="requires unique qid values"):
+        knn_ivfpq(q, c, 3)
+
+
+def test_concurrently_fails_fast_and_cancels_siblings(spark):
+    """One failed build action cancels the jobs of the others: the
+    error surfaces long before the slow sibling's 60 s job would end,
+    and no job is left running afterwards."""
+    import time
+
+    from event_stream_for_k8s_spark.operators.similarity import _concurrently
+
+    sc = spark.sparkContext
+
+    def boom(_):
+        raise ValueError("injected build failure")
+
+    def slow(x):
+        import time
+
+        time.sleep(60)
+        return x
+
+    raising_collect = sc.parallelize([0], 1).map(boom).collect
+    slow_collect = sc.parallelize([0], 1).map(slow).collect
+    t0 = time.monotonic()
+    with pytest.raises(Exception, match="injected build failure"):
+        _concurrently(raising_collect, slow_collect)
+    assert time.monotonic() - t0 < 30
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert sc.statusTracker().getActiveJobsIds() == []
 
 
 def test_knn_sq8_build_jobs_carry_callers_job_group(spark):
