@@ -59,6 +59,7 @@ from event_stream_for_k8s_spark.streaming.dedup_pipeline import (
     dedup_within_ttl,
 )
 from event_stream_for_k8s_spark.streaming.prom_metrics import (
+    RECEIVED_OBSERVATION,
     ExpositionServer,
     K8sStreamMetrics,
 )
@@ -289,11 +290,11 @@ def run_daemon(
     # PRE-dedup; the post-dedup sink records the misses and the two
     # are reconciled per batch_id (prom_metrics.sync_received).
     keyed = _keyed_stream(spark, cfg.spool_dir).observe(
-        "kes_received", F.count(F.lit(1)).alias("n")
+        RECEIVED_OBSERVATION, F.count(F.lit(1)).alias("n")
     )
     deduped = dedup_within_ttl(
         keyed, key_col="k", time_col="time", ttl_seconds=cfg.cache_ttl
-    ).observe("kes_emitted", F.count(F.lit(1)).alias("n"))
+    )
 
     line = F.to_json(F.struct("time", "kubernetes_event")).alias("line")
 
@@ -361,7 +362,7 @@ def run_daemon(
         # helper is idempotent with the thread's own call
         _stop_on_watch_exit(_daemon_state)
 
-    # received-count reconciliation: progress (with the kes_received
+    # received-count reconciliation: progress (with the received-count
     # observation) is emitted after each batch commits; a light poll
     # keeps the scrape endpoint's total/hit counters current, with a
     # final flush when the query ends. sync_from_query is idempotent

@@ -220,11 +220,10 @@ FROM o
     "batches through mid-batch max_bytes cuts with the same "
     "DataSource (one Spark task per partition; decode_message_set "
     "dispatches per entry on the magic byte), the topic serving "
-    "MIXED codecs rotating per batch — plain, gzip, and the THREE "
-    "from-scratch codecs: snappy block, lz4 frame, zstd (r15: the "
-    "full RFC 8878 decoder, differential-tested against libzstd — "
-    "the protocol codec set is now closed, no codec boundary "
-    "remains). "
+    "MIXED codecs rotating per batch — plain, gzip, snappy block, "
+    "lz4 frame and zstd, the full protocol codec set (gzip through "
+    "the stdlib, the other three through the libraries pyarrow "
+    "bundles). "
     "Fixture seeding is a bounded, documented driver-side collect "
     "(1500 rows); the production path stays spark-sql-kafka",
 )
@@ -246,8 +245,7 @@ def source_kafka_wire_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch ordinal: plain, gzip, snappy, lz4, zstd — what a consumer
     # sees after a producer fleet changes compression.type), and the
     # produce side writes each partition with a different codec, so
-    # both protocol halves exercise every from-scratch codec (r15:
-    # lz4 + zstd close the codec set entirely)
+    # both protocol halves exercise every codec
     broker = StubKafkaBroker(
         {("docs2", p): [] for p in range(3)},
         magic=2,

@@ -9,9 +9,8 @@ kafka.apache.org/protocol) implemented over raw sockets — ApiVersions
 v0, Metadata v0, ListOffsets v0 (earliest/latest seek), Fetch v0 and
 Produce v0, carrying BOTH on-wire record formats: classic MessageSet
 v0 (zlib crc32) and RecordBatch v2 (magic 2, zigzag-varint records,
-crc32c, the FULL codec set: gzip via the stdlib, snappy/lz4/zstd via
-the from-scratch codecs in functions/{snappy,lz4,zstd}_codec.py) —
-plus a threaded in-memory stub broker
+crc32c, the full codec set: gzip via the stdlib, snappy/lz4/zstd via
+the libraries pyarrow bundles) — plus a threaded in-memory stub broker
 speaking the same frames, so the transport is exercised END-TO-END
 down to CRC-checked bytes on a TCP socket.
 
@@ -46,11 +45,14 @@ per Kafka partition.
 
 from __future__ import annotations
 
+import gzip
 import socket
 import socketserver
 import struct
 import threading
 import zlib
+
+import pyarrow as pa
 
 
 # --------------------------------------------------------------- codec
@@ -157,6 +159,61 @@ def _dec_varint(r: "_Reader") -> int:
     return (z >> 1) ^ -(z & 1)  # un-zigzag
 
 
+def _snappy_decompress(blob: bytes) -> bytes:
+    """Raw snappy block -> bytes. The block opens with its
+    uncompressed length as a uvarint, which the library allocates up
+    front: that is broker input, so it is bounded before the call."""
+    n = shift = 0
+    for b in blob[:5]:
+        n |= (b & 0x7F) << shift
+        shift += 7
+        if not b & 0x80:
+            break
+    else:
+        raise ValueError("bad snappy length preamble")
+    # one 3-byte copy element emits at most 64 bytes
+    if n > 22 * len(blob):
+        raise ValueError(f"snappy length {n} exceeds the block's bound")
+    return pa.Codec("snappy").decompress(
+        blob, decompressed_size=n, asbytes=True
+    )
+
+
+def _stream_decompress(name: str):
+    # the batch header carries no uncompressed size, so lz4 frames and
+    # zstd frames are read as streams
+    return lambda blob: pa.CompressedInputStream(
+        pa.py_buffer(blob), name
+    ).read()
+
+
+def _pa_compress(name: str):
+    return lambda data: pa.Codec(name).compress(data, asbytes=True)
+
+
+# RecordBatch v2 attributes bits 0-2 -> (name, compress, decompress);
+# 0 is uncompressed and 5-7 are reserved. lz4 is the frame format.
+_CODECS = {
+    1: ("gzip", lambda data: gzip.compress(data, mtime=0), gzip.decompress),
+    2: ("snappy", _pa_compress("snappy"), _snappy_decompress),
+    3: ("lz4", _pa_compress("lz4"), _stream_decompress("lz4")),
+    4: ("zstd", _pa_compress("zstd"), _stream_decompress("zstd")),
+}
+_CODEC_IDS = {name: cid for cid, (name, _, _) in _CODECS.items()}
+
+
+def _decompress(codec: int, blob: bytes, base_offset: int) -> bytes:
+    """A batch's records blob under attributes codec ``codec``; a
+    malformed blob raises ValueError naming the codec and batch."""
+    name, _, decompress = _CODECS[codec]
+    try:
+        return decompress(blob)
+    except (OSError, EOFError, ValueError, zlib.error) as e:
+        raise ValueError(
+            f"{name} record batch at offset {base_offset}: {e}"
+        ) from e
+
+
 def encode_record_batch_v2(
     entries,
     base_offset: int = 0,
@@ -167,12 +224,9 @@ def encode_record_batch_v2(
     on-wire format every broker since 0.11 produces): the 61-byte
     batch header (crc32c over attributes..records), then varint-framed
     Records with offset/timestamp deltas. kafka.apache.org/protocol
-    'Record Batch'. ``compression='gzip'`` (stdlib), ``'snappy'``
-    (from-scratch ``functions.snappy_codec``), ``'lz4'``
-    (from-scratch ``functions.lz4_codec`` frame) or ``'zstd'``
-    (from-scratch ``functions.zstd_codec``) compresses the records
-    blob and sets the attributes codec bits — the full protocol
-    codec set."""
+    'Record Batch'. ``compression`` = ``'gzip'``, ``'snappy'``,
+    ``'lz4'`` or ``'zstd'`` (the full protocol codec set, ``_CODECS``)
+    compresses the records blob and sets the attributes codec bits."""
     if not entries:
         # an empty batch would encode degenerate header fields
         # (recordCount 0, lastOffsetDelta -1, maxTimestamp base-1) that
@@ -197,32 +251,9 @@ def encode_record_batch_v2(
     if compression is None:
         attrs = 0
         blob = bytes(records)
-    elif compression == "gzip":
-        import gzip
-
-        attrs = 1  # attributes bits 0-2: codec 1 = gzip
-        blob = gzip.compress(bytes(records), mtime=0)
-    elif compression == "snappy":
-        from event_stream_for_k8s_spark.functions.snappy_codec import (
-            snappy_compress,
-        )
-
-        attrs = 2  # codec 2 = snappy (raw block in format v2)
-        blob = snappy_compress(bytes(records))
-    elif compression == "lz4":
-        from event_stream_for_k8s_spark.functions.lz4_codec import (
-            lz4_frame_compress,
-        )
-
-        attrs = 3  # codec 3 = lz4 (frame format in message format v2)
-        blob = lz4_frame_compress(bytes(records))
-    elif compression == "zstd":
-        from event_stream_for_k8s_spark.functions.zstd_codec import (
-            zstd_compress,
-        )
-
-        attrs = 4  # codec 4 = zstd (message format v2 only)
-        blob = zstd_compress(bytes(records))
+    elif compression in _CODEC_IDS:
+        attrs = _CODEC_IDS[compression]
+        blob = _CODECS[attrs][1](bytes(records))
     else:
         raise NotImplementedError(
             f"record batch compression {compression!r} "
@@ -273,28 +304,10 @@ def decode_record_batch_v2(r: "_Reader"):
     codec = attrs & 0x07
     if codec == 0:
         recs = batch
-    elif codec == 1:  # gzip — stdlib
-        import gzip
-
-        recs = _Reader(gzip.decompress(batch.data[batch.pos :]))
-    elif codec == 2:  # snappy — from-scratch raw-block codec
-        from event_stream_for_k8s_spark.functions.snappy_codec import (
-            snappy_decompress,
+    elif codec in _CODECS:
+        recs = _Reader(
+            _decompress(codec, batch.data[batch.pos :], base_offset)
         )
-
-        recs = _Reader(snappy_decompress(batch.data[batch.pos :]))
-    elif codec == 3:  # lz4 — from-scratch frame codec
-        from event_stream_for_k8s_spark.functions.lz4_codec import (
-            lz4_frame_decompress,
-        )
-
-        recs = _Reader(lz4_frame_decompress(batch.data[batch.pos :]))
-    elif codec == 4:  # zstd — from-scratch RFC 8878 decoder
-        from event_stream_for_k8s_spark.functions.zstd_codec import (
-            zstd_decompress,
-        )
-
-        recs = _Reader(zstd_decompress(batch.data[batch.pos :]))
     else:
         # attribute codec bits 5-7 are reserved by the protocol
         raise NotImplementedError(
@@ -534,7 +547,8 @@ class KafkaWireClient:
         the on-wire record format (0 = MessageSet v0, 2 = RecordBatch
         v2 — the broker accepts either, like a real post-0.11 broker
         with down-conversion); ``compression`` compresses the v2
-        payload (gzip/snappy/lz4 — the producer's compression.type)."""
+        payload (gzip/snappy/lz4/zstd — the producer's
+        compression.type)."""
         if magic == 2:
             ms = encode_record_batch_v2(entries, compression=compression)
         else:
@@ -828,8 +842,6 @@ KAFKA_WIRE_SCHEMA = (
 def _kafka_wire_classes():
     """Build the DataSource classes lazily (pyspark import kept out of
     module import so the wire codec stays usable without a session)."""
-    import pyarrow as pa
-
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,

@@ -53,6 +53,8 @@ from pyspark.sql import functions as F
 log = logging.getLogger(__name__)
 
 CONTENT_TYPE = "text/plain; version=0.0.4; charset=utf-8"
+# the observe() name of the pre-dedup received count sync_from_query reads
+RECEIVED_OBSERVATION = "kes_received"
 
 
 def _escape_label(v: str) -> str:
@@ -439,10 +441,8 @@ class K8sStreamMetrics:
             self._hit_overcount -= repay
             self.processed.labels("cache_hits").inc(hits - repay)
 
-    def sync_from_query(
-        self, query, observation_name: str = "kes_received"
-    ) -> None:
-        """Pull ``observedMetrics[observation_name]`` rows out of a
+    def sync_from_query(self, query) -> None:
+        """Pull ``observedMetrics[RECEIVED_OBSERVATION]`` rows out of a
         streaming query's recent progress and apply them. Safe to call
         repeatedly (poll loop or one final flush after termination).
 
@@ -473,7 +473,7 @@ class K8sStreamMetrics:
                 continue
             d = as_dict(p)
             om = d.get("observedMetrics") or {}
-            row = om.get(observation_name)
+            row = om.get(RECEIVED_OBSERVATION)
             # a zero-data batch carries no observation: record it as
             # 0 received so the entry is marked seen (otherwise it
             # would be re-parsed on every poll forever)

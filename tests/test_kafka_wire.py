@@ -289,12 +289,45 @@ def test_v2_fetch_and_produce_over_tcp():
     ]
 
 
+def _v2_batch(codec: int, blob: bytes, n: int = 1) -> bytes:
+    """A RecordBatch v2 frame at offset 0 around a raw records blob,
+    codec bits ``codec``, with a valid crc32c: feeds hand-built codec
+    streams (well-formed or not) through ``decode_record_batch_v2``."""
+    import struct
+
+    from event_stream_for_k8s_spark.sources.kafka_wire import _crc32c
+
+    crc_part = (
+        struct.pack(">hi", codec, n - 1)
+        + struct.pack(">qq", 0, n - 1)
+        + struct.pack(">qhi", -1, -1, -1)
+        + struct.pack(">i", n)
+        + blob
+    )
+    tail = struct.pack(">ib", 0, 2) + struct.pack(">I", _crc32c(crc_part))
+    tail += crc_part
+    return struct.pack(">qi", 0, len(tail)) + tail
+
+
+def _assert_batch_rejects(codec: int, blob: bytes) -> None:
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _CODECS,
+        _Reader,
+        decode_record_batch_v2,
+    )
+
+    name = _CODECS[codec][0]
+    with pytest.raises(ValueError, match=f"{name} record batch at offset 0"):
+        decode_record_batch_v2(_Reader(_v2_batch(codec, blob)))
+
+
 def test_record_batch_v2_gzip_compression():
     """Compressed batches are real coverage, not silent garbage: gzip
     (codec 1, stdlib), snappy (codec 2), lz4 (codec 3) and zstd
-    (codec 4 — all three from-scratch) round-trip with a valid crc32c
-    over the COMPRESSED blob; the reserved codec bits 5-7 raise, as
-    does a v0 wrapper-compressed message."""
+    (codec 4, all three through the libraries pyarrow bundles)
+    round-trip with a valid crc32c over the COMPRESSED blob; the
+    reserved codec bits 5-7 raise, as does a v0 wrapper-compressed
+    message."""
     import struct
 
     import pytest as pt
@@ -309,29 +342,13 @@ def test_record_batch_v2_gzip_compression():
 
     entries = [(b"k%d" % i, b"payload-%d" % i) for i in range(40)]
     plain = encode_record_batch_v2(entries, base_offset=5)
+    for codec in ("gzip", "snappy", "lz4", "zstd"):
+        z = encode_record_batch_v2(entries, base_offset=5, compression=codec)
+        assert len(z) < len(plain), codec  # it genuinely compressed
+        assert decode_record_batch_v2(_Reader(z)) == [
+            (5 + i, k, v) for i, (k, v) in enumerate(entries)
+        ]
     gz = encode_record_batch_v2(entries, base_offset=5, compression="gzip")
-    assert len(gz) < len(plain)  # it genuinely compressed
-    assert decode_record_batch_v2(_Reader(gz)) == [
-        (5 + i, k, v) for i, (k, v) in enumerate(entries)
-    ]
-    # snappy (codec 2): the from-scratch raw-block codec round-trips
-    sz = encode_record_batch_v2(entries, base_offset=5, compression="snappy")
-    assert len(sz) < len(plain)
-    assert decode_record_batch_v2(_Reader(sz)) == [
-        (5 + i, k, v) for i, (k, v) in enumerate(entries)
-    ]
-    # lz4 (codec 3): the from-scratch frame codec round-trips
-    lz = encode_record_batch_v2(entries, base_offset=5, compression="lz4")
-    assert len(lz) < len(plain)
-    assert decode_record_batch_v2(_Reader(lz)) == [
-        (5 + i, k, v) for i, (k, v) in enumerate(entries)
-    ]
-    # zstd (codec 4): the from-scratch RFC 8878 decoder + store-mode
-    # encoder
-    zs = encode_record_batch_v2(entries, base_offset=5, compression="zstd")
-    assert decode_record_batch_v2(_Reader(zs)) == [
-        (5 + i, k, v) for i, (k, v) in enumerate(entries)
-    ]
     # reserved codec bits: flip attributes to 5 and re-crc
     from event_stream_for_k8s_spark.sources.kafka_wire import _crc32c
 
@@ -357,21 +374,149 @@ def test_record_batch_v2_gzip_compression():
         decode_message_set(bytes(ms))
 
 
+# One 5-record batch per codec, written by the pure-Python snappy, lz4
+# and zstd encoders this module shipped before it moved to the codecs
+# pyarrow bundles (plain and gzip for completeness): batches already
+# sitting in a log must still decode to the same records.
+_LEGACY_ENTRIES = [
+    (b"pod-a", b'{"reason":"Scheduled","count":1}'),
+    (None, b'{"reason":"Pulled","count":1}'),
+    (b"pod-a", b'{"reason":"Created","count":1}'),
+    (b"pod-b", b'{"reason":"Started","count":1}'),
+    (b"", b'{"reason":"Started","count":2}' * 3),
+]
+_LEGACY_BATCHES = {
+    None: bytes.fromhex(
+        "00000000000000280000013800000000029e5a65220000000000040000018bcf"
+        "e568000000018bcfe56804ffffffffffffffffffffffffffff00000005560000"
+        "000a706f642d61407b22726561736f6e223a225363686564756c6564222c2263"
+        "6f756e74223a317d0046000202013a7b22726561736f6e223a2250756c6c6564"
+        "222c22636f756e74223a317d00520004040a706f642d613c7b22726561736f6e"
+        "223a2243726561746564222c22636f756e74223a317d00520006060a706f642d"
+        "623c7b22726561736f6e223a2253746172746564222c22636f756e74223a317d"
+        "00c20100080800b4017b22726561736f6e223a2253746172746564222c22636f"
+        "756e74223a327d7b22726561736f6e223a2253746172746564222c22636f756e"
+        "74223a327d7b22726561736f6e223a2253746172746564222c22636f756e7422"
+        "3a327d00"
+    ),
+    'gzip': bytes.fromhex(
+        "0000000000000028000000aa0000000002812b5a930001000000040000018bcf"
+        "e568000000018bcfe56804ffffffffffffffffffffffffffff000000051f8b08"
+        "000000000002030b636060e02ac84fd14d74a8562a4a4d2ccecf53b2520a4ece"
+        "484d29cd494d51d2514ace2fcd2b51b232ac657063606262b4425216509a83ae"
+        "2688818505629e0d92426720ab0443251b1b586512b2cae092c4227495871819"
+        "383818b630e25366544b892c03007659e4c907010000"
+    ),
+    'snappy': bytes.fromhex(
+        "0000000000000028000000b2000000000243553a0b0002000000040000018bcf"
+        "e568000000018bcfe56804ffffffffffffffffffffffffffff000000058702c4"
+        "560000000a706f642d61407b22726561736f6e223a225363686564756c656422"
+        "2c22636f756e74223a317d0046000202013a2a27000850756c3e24000c520004"
+        "04165000003c2a29001043726561743a4e000c52000606122a0000622e2a000c"
+        "537461723e2a001cc20100080800b4012a510042270004327dee1e000000"
+    ),
+    'lz4': bytes.fromhex(
+        "0000000000000028000000bf0000000002a340dcd40003000000040000018bcf"
+        "e568000000018bcfe56804ffffffffffffffffffffffffffff0000000504224d"
+        "186440a77b000000f723560000000a706f642d61407b22726561736f6e223a22"
+        "5363686564756c6564222c22636f756e74223a317d0046000202013a27003c50"
+        "756c240042520004045000173c29005b43726561744e0041520006062a001862"
+        "2a004c537461722a0087c20100080800b40151000d27002f327d1e002550223a"
+        "327d00000000003ad899ea"
+    ),
+    'zstd': bytes.fromhex(
+        "0000000000000028000000b30000000002cb7f52980004000000040000018bcf"
+        "e568000000018bcfe56804ffffffffffffffffffffffffffff0000000528b52f"
+        "fd640700a503003405560000000a706f642d61407b22726561736f6e223a2253"
+        "63686564756c6564222c22636f756e74223a317d0046000202013a50756c5200"
+        "04043c4372656174520006066253746172c20100080800b401327d000b00094a"
+        "42a5335021e64d21d414dfa62d894257a6864d61c847a121ca5050da904b14"
+    ),
+}
+
+
+@pytest.mark.parametrize("codec", list(_LEGACY_BATCHES))
+def test_record_batch_v2_decodes_legacy_encoder_batches(codec):
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _Reader,
+        decode_record_batch_v2,
+    )
+
+    assert decode_record_batch_v2(_Reader(_LEGACY_BATCHES[codec])) == [
+        (40 + i, k, v) for i, (k, v) in enumerate(_LEGACY_ENTRIES)
+    ]
+
+
+def _payloads():
+    """Random, repetitive and tiny-alphabet byte strings (the tiny
+    alphabet maximises match density and overlap runs)."""
+    from hypothesis import strategies as st
+
+    return st.one_of(
+        st.binary(max_size=3000),
+        st.binary(min_size=1, max_size=8).flatmap(
+            lambda unit: st.integers(1, 400).map(lambda n: unit * n)
+        ),
+        st.lists(st.sampled_from([b"ab", b"a", b"abc", b"\x00"]))
+        .map(b"".join),
+    )
+
+
+@pytest.mark.parametrize("codec", [None, "gzip", "snappy", "lz4", "zstd"])
+def test_record_batch_v2_roundtrip_property(codec):
+    """Hypothesis property: encode_record_batch_v2 ->
+    decode_record_batch_v2 is the identity for ANY records under every
+    codec, null keys and values included, across random, repetitive
+    and tiny-alphabet payloads (the tiny alphabet maximises match
+    density and overlap runs); the explicit example spans several
+    64 KiB lz4 blocks."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _Reader,
+        decode_record_batch_v2,
+        encode_record_batch_v2,
+    )
+
+    records = st.lists(
+        st.tuples(
+            st.none() | st.binary(max_size=16), st.none() | _payloads()
+        ),
+        min_size=1,
+        max_size=8,
+    )
+
+    @given(entries=records)
+    @example(entries=[(None, b"x" * 200_000), (b"k", bytes(range(256)) * 300)])
+    @settings(max_examples=100, deadline=None)
+    def prop(entries):
+        batch = encode_record_batch_v2(
+            entries, base_offset=3, compression=codec
+        )
+        assert decode_record_batch_v2(_Reader(batch)) == [
+            (3 + i, k, v) for i, (k, v) in enumerate(entries)
+        ]
+
+    prop()
+
+
 def test_snappy_codec_spec_vectors_and_roundtrip():
-    """The from-scratch snappy block codec: hand-built spec vectors
-    exercise every element type independently of the compressor
-    (literal, 1/2/4-byte-offset copies, the overlapping LZ77 run),
-    malformed streams raise, and compress->decompress is identity on
-    adversarial shapes."""
+    """The snappy block decoder: hand-built spec vectors exercise every
+    element type independently of the compressor (literal,
+    1/2/4-byte-offset copies, the overlapping LZ77 run), malformed
+    blocks raise from decode_record_batch_v2, and compress ->
+    decompress is identity on adversarial shapes."""
     import os
     import random
 
-    import pytest as pt
-
-    from event_stream_for_k8s_spark.functions.snappy_codec import (
-        snappy_compress,
-        snappy_decompress,
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _CODECS,
+        _decompress,
     )
+
+    def dec(blob):
+        return _decompress(2, blob, 0)
 
     # literal "abcde"; copy1 len4 off5 -> "abcd"; copy2 len2 off1
     # (overlap: the run doubles the last byte twice) -> "dd"
@@ -380,7 +525,7 @@ def test_snappy_codec_spec_vectors_and_roundtrip():
         + b"abcde"
         + bytes([(4 - 4) << 2 | 1, 5, ((2 - 1) << 2) | 2, 1, 0])
     )
-    assert snappy_decompress(hand) == b"abcdeabcddd"
+    assert dec(hand) == b"abcdeabcddd"
 
     # 4-byte-offset copy form (type 11)
     hand4 = (
@@ -388,27 +533,27 @@ def test_snappy_codec_spec_vectors_and_roundtrip():
         + b"wxyz"
         + bytes([((4 - 1) << 2) | 3, 4, 0, 0, 0])
     )
-    assert snappy_decompress(hand4) == b"wxyzwxyz"
+    assert dec(hand4) == b"wxyzwxyz"
 
     # long-literal length bytes (60-form: 1 length byte)
     lit = os.urandom(100)
     hand60 = bytes([100, 60 << 2, 99]) + lit
-    assert snappy_decompress(hand60) == lit
+    assert dec(hand60) == lit
 
     # 61-form: 2 little-endian length bytes — covers literals >255 bytes
     lit61 = os.urandom(300)
     hand61 = bytes([(300 & 0x7F) | 0x80, 300 >> 7, 61 << 2, 299 & 0xFF, 299 >> 8]) + lit61
-    assert snappy_decompress(hand61) == lit61
+    assert dec(hand61) == lit61
 
-    for bad, msg in [
-        (b"", "preamble"),
-        (bytes([5, (4 - 1) << 2]) + b"ab", "truncated literal"),
-        (bytes([4, ((4 - 1) << 2) | 2, 9, 0]), "offset out of range"),
-        (bytes([9, (5 - 1) << 2]) + b"abcde", "length mismatch"),
+    for bad in [
+        b"",  # no length preamble
+        bytes([5, (4 - 1) << 2]) + b"ab",  # truncated literal
+        bytes([4, ((4 - 1) << 2) | 2, 9, 0]),  # offset out of range
+        bytes([9, (5 - 1) << 2]) + b"abcde",  # length mismatch
     ]:
-        with pt.raises(ValueError, match=msg):
-            snappy_decompress(bad)
+        _assert_batch_rejects(2, bad)
 
+    compress = _CODECS[2][1]
     rng = random.Random(11)
     cases = [
         b"",
@@ -419,150 +564,153 @@ def test_snappy_codec_spec_vectors_and_roundtrip():
         b"x" * 100000,
     ]
     for c in cases:
-        z = snappy_compress(c)
-        assert snappy_decompress(z) == c
-    assert len(snappy_compress(b"x" * 100000)) < 6000  # it compresses
+        assert dec(compress(c)) == c
+    assert len(compress(b"x" * 100000)) < 6000  # it compresses
+
+
+def test_snappy_length_preamble_is_bounded():
+    """The uvarint length that opens a snappy block is broker input
+    the library would allocate up front: a preamble past 5 bytes, or a
+    length no block of this size can expand to, raises before any
+    allocation."""
+    from event_stream_for_k8s_spark.sources.kafka_wire import _decompress
+
+    # 6 bytes claiming 2**31: 0x80 0x80 0x80 0x80 0x08 + one literal
+    claim = bytes([0x80, 0x80, 0x80, 0x80, 0x08, 0x00])
+    with pytest.raises(ValueError, match="snappy length 2147483648"):
+        _decompress(2, claim, 0)
+    # an overlong 6-byte preamble, even for a length of 1
+    with pytest.raises(ValueError, match="length preamble"):
+        _decompress(2, bytes([0x81, 0x80, 0x80, 0x80, 0x80, 0x00]), 0)
+    _assert_batch_rejects(2, claim)
+
+
+# LZ4 frame header-checksum bytes, (xxh32(FLG BD) >> 8) & 0xFF per
+# lz4_Frame_format.md, for BD 0x40 (64 KiB blocks) and each FLG below
+_LZ4_HC = {0x40: 0xC0, 0x60: 0x82, 0x61: 0xA1, 0x64: 0xA7}
+
+
+def _lz4_frame(flg, blocks, tail=b""):
+    out = b"\x04\x22\x4d\x18" + bytes([flg, 0x40, _LZ4_HC[flg]])
+    for stored, payload in blocks:
+        size = len(payload) | (0x80000000 if stored else 0)
+        out += size.to_bytes(4, "little") + payload
+    return out + b"\x00\x00\x00\x00" + tail
 
 
 def test_xxh32_spec_vectors():
-    """xxHash32 against the published spec sanity vectors — the frame
-    codec's header/block/content checksums are all defined over it."""
-    from event_stream_for_k8s_spark.functions.lz4_codec import xxh32
+    """xxHash32 against the published spec vectors, as the lz4 frame
+    decoder checks them: a frame's content checksum is xxh32 of its
+    content, so a frame carrying the vector decodes and one carrying
+    the vector off by one raises."""
+    from event_stream_for_k8s_spark.sources.kafka_wire import _decompress
 
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"", 0x9E3779B1) == 0x36B78AE7  # seed = prime32-1
-    assert xxh32(b"a") == 0x550D7456
-    assert xxh32(b"abc") == 0x32D153FF
-    # >=16 bytes exercises the 4-lane stripe loop
-    assert xxh32(b"Call me Ishmael.") == xxh32(b"Call me Ishmael.")
-    assert xxh32(b"0123456789abcdef") != xxh32(b"0123456789abcdeg")
+    for content, xxh in [
+        (b"", 0x02CC5D05),
+        (b"a", 0x550D7456),
+        (b"abc", 0x32D153FF),
+    ]:
+        blocks = [(True, content)] if content else []
+        good = _lz4_frame(0x64, blocks, tail=xxh.to_bytes(4, "little"))
+        assert _decompress(3, good, 0) == content
+        bad = _lz4_frame(0x64, blocks, tail=(xxh ^ 1).to_bytes(4, "little"))
+        _assert_batch_rejects(3, bad)
 
 
 def test_lz4_block_hand_built_spec_vectors():
-    """lz4_block_decompress against HAND-BUILT sequence streams per
-    lz4_Block_format.md — every element type (plain literals, match,
-    overlap run, literal- and match-length 255-extensions) plus the
-    malformed-input raises, independent of lz4_block_compress."""
-    import pytest as pt
+    """The block format's sequences per lz4_Block_format.md, hand built
+    and decoded as block payloads of an lz4 frame: plain literals,
+    match, overlap run, literal- and match-length 255-extensions, and
+    the malformed-input raises. A block must end in at least 5
+    literals, so each vector that ends in a match carries the literal
+    tail ``VWXYZ``."""
+    from event_stream_for_k8s_spark.sources.kafka_wire import _decompress
 
-    from event_stream_for_k8s_spark.functions.lz4_codec import (
-        lz4_block_decompress,
-    )
+    def block(payload):
+        return _decompress(3, _lz4_frame(0x60, [(False, payload)]), 0)
 
+    tail = bytes([0x50]) + b"VWXYZ"  # final sequence: 5 literals
     # literal-only final sequence
-    assert lz4_block_decompress(bytes([0x30]) + b"abc") == b"abc"
-    # one match: 5 literals, offset 5, matchlen 4+0, final empty token
-    assert (
-        lz4_block_decompress(
-            bytes([0x50]) + b"abcde" + b"\x05\x00" + bytes([0x00])
-        )
-        == b"abcdeabcd"
+    assert block(bytes([0x30]) + b"abc") == b"abc"
+    # one match: 5 literals, offset 5, matchlen 4+0
+    assert block(bytes([0x50]) + b"abcde" + b"\x05\x00" + tail) == (
+        b"abcdeabcdVWXYZ"
     )
     # overlapping run: offset 2 < matchlen 6 replicates "ab"
-    assert (
-        lz4_block_decompress(
-            bytes([0x22]) + b"ab" + b"\x02\x00" + bytes([0x00])
-        )
-        == b"abababab"
+    assert block(bytes([0x22]) + b"ab" + b"\x02\x00" + tail) == (
+        b"ababababVWXYZ"
     )
     # literal length extension: 15 + 255 + 3 = 273 literals
     lit = bytes(range(256)) + b"Q" * 17
-    assert (
-        lz4_block_decompress(bytes([0xF0, 255, 3]) + lit) == lit
-    )
+    assert block(bytes([0xF0, 255, 3]) + lit) == lit
     # match length extension: 4 + 15 + 255 + 7 = 281 from offset 1
-    out = lz4_block_decompress(
-        bytes([0x1F]) + b"z" + b"\x01\x00" + bytes([255, 7, 0x00])
-    )
-    assert out == b"z" * 282
-    # dependent-block history: the match reaches into the prefix
-    assert (
-        lz4_block_decompress(
-            bytes([0x00]) + b"\x04\x00" + bytes([0x00]), prefix=b"abcd"
-        )
-        == b"abcd"
-    )
-    for bad, msg in [
-        (b"", "empty block"),
-        (bytes([0x50]) + b"ab", "truncated literals"),
-        (bytes([0x10]) + b"a" + b"\x09\x00" + bytes([0x00]), "offset out of range"),
-        (bytes([0x10]) + b"a" + b"\x00\x00" + bytes([0x00]), "offset out of range"),
-        (bytes([0x10]) + b"a" + b"\x01", "truncated match offset"),
-        (bytes([0xF0, 255]), "truncated literal length"),
-        (bytes([0x1F]) + b"z" + b"\x01\x00" + bytes([255]), "truncated match length"),
+    assert block(
+        bytes([0x1F]) + b"z" + b"\x01\x00" + bytes([255, 7]) + tail
+    ) == b"z" * 282 + b"VWXYZ"
+    for bad in [
+        b"",  # empty block: a zero size is the end mark, so junk follows
+        bytes([0x50]) + b"ab",  # truncated literals
+        bytes([0x10]) + b"a" + b"\x09\x00" + bytes([0x00]),  # offset > out
+        bytes([0x10]) + b"a" + b"\x00\x00" + bytes([0x00]),  # offset 0
+        bytes([0x10]) + b"a" + b"\x01",  # truncated match offset
+        bytes([0xF0, 255]),  # truncated literal length
+        bytes([0x1F]) + b"z" + b"\x01\x00" + bytes([255]),  # truncated ml
+        # ends in a match: the last 5 bytes must be literals
+        bytes([0x50]) + b"abcde" + b"\x05\x00" + bytes([0x00]),
     ]:
-        with pt.raises(ValueError, match=msg):
-            lz4_block_decompress(bad)
+        _assert_batch_rejects(3, _lz4_frame(0x60, [(False, bad)]))
 
 
 def test_lz4_frame_hand_built_and_features():
-    """lz4_frame_decompress against hand-assembled frames: computed
-    header-checksum byte, stored (uncompressed) blocks, skippable
-    frames, dependent blocks across a block boundary, and the
-    checksum/structure raises."""
-    import pytest as pt
+    """The lz4 frame decoder against hand-assembled frames: stored
+    (uncompressed) blocks, skippable frames, dependent blocks across a
+    block boundary, and the checksum/structure raises."""
+    from event_stream_for_k8s_spark.sources.kafka_wire import _decompress
 
-    from event_stream_for_k8s_spark.functions.lz4_codec import (
-        lz4_frame_decompress,
-        xxh32,
-    )
+    def dec(frame):
+        return _decompress(3, frame, 0)
 
-    def frame(flg, blocks, tail=b"", bd=0x40):
-        desc = bytes([flg, bd])
-        hc = (xxh32(desc) >> 8) & 0xFF
-        out = b"\x04\x22\x4d\x18" + desc + bytes([hc])
-        for stored, payload in blocks:
-            size = len(payload) | (0x80000000 if stored else 0)
-            out += size.to_bytes(4, "little") + payload
-        return out + b"\x00\x00\x00\x00" + tail
-
-    blk = bytes([0x30]) + b"abc"  # hand block from the vector test
-    assert lz4_frame_decompress(frame(0x60, [(False, blk)])) == b"abc"
+    tail = bytes([0x50]) + b"VWXYZ"  # final sequence: 5 literals
+    blk = bytes([0x30]) + b"abc"  # literal-only block: b"abc"
     # stored block (high size bit): payload passed through verbatim
-    assert lz4_frame_decompress(frame(0x60, [(True, b"RAW!")])) == b"RAW!"
+    assert dec(_lz4_frame(0x60, [(True, b"RAW!")])) == b"RAW!"
     # skippable frame before a real one
     skip = b"\x50\x2a\x4d\x18" + (3).to_bytes(4, "little") + b"xyz"
-    assert (
-        lz4_frame_decompress(skip + frame(0x60, [(False, blk)])) == b"abc"
-    )
+    assert dec(skip + _lz4_frame(0x60, [(False, blk)])) == b"abc"
     # dependent blocks (B.Indep off): block 2's match copies block 1's
     # decompressed output
-    dep2 = bytes([0x00]) + b"\x04\x00" + bytes([0x00])
-    assert (
-        lz4_frame_decompress(
-            frame(0x40, [(True, b"abcd"), (False, dep2)])
-        )
-        == b"abcdabcd"
+    dep2 = bytes([0x00]) + b"\x04\x00" + tail
+    assert dec(_lz4_frame(0x40, [(True, b"abcd"), (False, dep2)])) == (
+        b"abcdabcdVWXYZ"
     )
-    # content checksum verified (append the right one, then a wrong one)
-    good = frame(0x64, [(False, blk)], tail=xxh32(b"abc").to_bytes(4, "little"))
-    assert lz4_frame_decompress(good) == b"abc"
-    with pt.raises(ValueError, match="content checksum"):
-        lz4_frame_decompress(good[:-4] + b"\x00\x00\x00\x00")
+    # content checksum xxh32(b"abc") verified (the right one, then a
+    # wrong one)
+    good = _lz4_frame(0x64, [(False, blk)], tail=(0x32D153FF).to_bytes(4, "little"))
+    assert dec(good) == b"abc"
+    _assert_batch_rejects(3, good[:-4] + b"\x00\x00\x00\x00")
     # header checksum byte is actually checked
-    bad_hc = bytearray(frame(0x60, [(False, blk)]))
+    bad_hc = bytearray(_lz4_frame(0x60, [(False, blk)]))
     bad_hc[6] ^= 0xFF
-    with pt.raises(ValueError, match="header checksum"):
-        lz4_frame_decompress(bytes(bad_hc))
-    with pt.raises(ValueError, match="bad frame magic"):
-        lz4_frame_decompress(b"\x00\x00\x00\x00" + b"junk")
-    # dictionary frames stay at the declared boundary
-    with pt.raises(NotImplementedError, match="dictionary"):
-        lz4_frame_decompress(frame(0x61, [(False, blk)]))
+    _assert_batch_rejects(3, bytes(bad_hc))
+    # bad frame magic
+    _assert_batch_rejects(3, b"\x00\x00\x00\x00" + b"junk")
+    # a dictionary frame whose header omits the dictionary id
+    _assert_batch_rejects(3, _lz4_frame(0x61, [(False, blk)]))
 
 
 def test_lz4_codec_roundtrip():
-    """lz4_frame_compress -> lz4_frame_decompress identity across
-    content classes and flag combinations, genuinely compressing on
-    repetitive input and storing incompressible blocks raw."""
+    """The codec table's lz4 entry: compress -> _decompress identity
+    across content classes, genuinely compressing repetitive input and
+    spanning several 64 KiB blocks."""
     import os
     import random
 
-    from event_stream_for_k8s_spark.functions.lz4_codec import (
-        lz4_frame_compress,
-        lz4_frame_decompress,
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _CODECS,
+        _decompress,
     )
 
+    compress = _CODECS[3][1]
     rng = random.Random(11)
     cases = [
         b"",
@@ -574,71 +722,52 @@ def test_lz4_codec_roundtrip():
         os.urandom(70000),
     ]
     for c in cases:
-        assert lz4_frame_decompress(lz4_frame_compress(c)) == c
-        assert (
-            lz4_frame_decompress(
-                lz4_frame_compress(
-                    c, block_checksum=True, content_size=True
-                )
-            )
-            == c
-        )
-    assert len(lz4_frame_compress(b"x" * 200000)) < 2000  # it compresses
+        assert _decompress(3, compress(c), 0) == c
+    assert len(compress(b"x" * 200000)) < 2000  # it compresses
 
 
 def test_lz4_roundtrip_property():
-    """Hypothesis property: lz4 frame compress -> decompress is the
-    identity for ANY byte string (random, repetitive, tiny-alphabet —
-    the tiny-alphabet class maximizes match density and overlap runs),
-    under every checksum/size flag combination. Pure Python, so the
-    example budget is cheap."""
+    """Hypothesis property: the codec table's lz4 compress ->
+    _decompress is the identity for ANY byte string, and the streaming
+    decode (no size known) agrees with liblz4's one-shot decode given
+    the size."""
+    import pyarrow as pa
     from hypothesis import given, settings
-    from hypothesis import strategies as st
 
-    from event_stream_for_k8s_spark.functions.lz4_codec import (
-        lz4_frame_compress,
-        lz4_frame_decompress,
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _CODECS,
+        _decompress,
     )
 
-    payloads = st.one_of(
-        st.binary(max_size=3000),
-        st.binary(min_size=1, max_size=8).flatmap(
-            lambda unit: st.integers(1, 400).map(lambda n: unit * n)
-        ),
-        st.lists(st.sampled_from([b"ab", b"a", b"abc", b"\x00"]))
-        .map(b"".join),
-    )
+    compress = _CODECS[3][1]
+    codec = pa.Codec("lz4")
 
-    @given(data=payloads, bc=st.booleans(), cc=st.booleans(), cs=st.booleans())
-    @settings(max_examples=200, deadline=None)
-    def prop(data, bc, cc, cs):
-        frame = lz4_frame_compress(
-            data,
-            block_checksum=bc,
-            content_checksum=cc,
-            content_size=cs,
+    @given(data=_payloads())
+    @settings(max_examples=100, deadline=None)
+    def prop(data):
+        frame = compress(data)
+        assert _decompress(3, frame, 0) == data
+        one_shot = codec.decompress(
+            frame, decompressed_size=len(data), asbytes=True
         )
-        assert lz4_frame_decompress(frame) == data
+        assert one_shot == data
 
     prop()
 
 
 def test_xxh64_spec_vector_and_zstd_hand_built_frames():
-    """xxHash64 against the published empty-input vector, and
-    zstd_decompress against HAND-ASSEMBLED frames per RFC 8878:
-    Raw and RLE blocks, a compressed block with RLE literals +
-    zero sequences, a compressed block with Raw literals + ONE
+    """The zstd decoder against HAND-ASSEMBLED frames per RFC 8878:
+    Raw and RLE blocks, a compressed block with RLE literals + zero
+    sequences, a compressed block with Raw literals + ONE
     predefined-mode sequence exercising repcode 1, skippable frames,
-    and the malformed-input raises — all independent of both
-    encoders."""
-    import pytest as pt
+    and the malformed-input raises — all independent of the encoder.
+    The content checksum is the low 32 bits of xxHash64: the
+    published empty-input vector 0xEF46DB3751D8E999 and xxh64(b"ab")
+    are checked as the decoder verifies them."""
+    from event_stream_for_k8s_spark.sources.kafka_wire import _decompress
 
-    from event_stream_for_k8s_spark.functions.zstd_codec import (
-        xxh64,
-        zstd_decompress,
-    )
-
-    assert xxh64(b"") == 0xEF46DB3751D8E999
+    def dec(frame):
+        return _decompress(4, frame, 0)
 
     def frame(blocks, fhd=0x20, fcs=None, tail=b""):
         out = b"\x28\xb5\x2f\xfd" + bytes([fhd])
@@ -650,27 +779,18 @@ def test_xxh64_spec_vector_and_zstd_hand_built_frames():
         return out + tail
 
     # Raw block; single-segment 1-byte FCS
-    assert (
-        zstd_decompress(frame([(1, 0, 3, b"abc")], fcs=b"\x03")) == b"abc"
-    )
+    assert dec(frame([(1, 0, 3, b"abc")], fcs=b"\x03")) == b"abc"
     # RLE block: size field = regenerated size, one payload byte
-    assert (
-        zstd_decompress(frame([(1, 1, 5, b"z")], fcs=b"\x05")) == b"zzzzz"
-    )
+    assert dec(frame([(1, 1, 5, b"z")], fcs=b"\x05")) == b"zzzzz"
     # multi-block: raw then RLE
     assert (
-        zstd_decompress(
-            frame([(0, 0, 2, b"ab"), (1, 1, 3, b"c")], fcs=b"\x05")
-        )
+        dec(frame([(0, 0, 2, b"ab"), (1, 1, 3, b"c")], fcs=b"\x05"))
         == b"abccc"
     )
     # compressed block: RLE literals header (type=1, SF=00: RS=4 ->
     # byte 0b00100_0_01 = 0x21), literal byte 'q', then nbSeq=0
     cb = bytes([0x21]) + b"q" + bytes([0x00])
-    assert (
-        zstd_decompress(frame([(1, 2, len(cb), cb)], fcs=b"\x04"))
-        == b"qqqq"
-    )
+    assert dec(frame([(1, 2, len(cb), cb)], fcs=b"\x04")) == b"qqqq"
     # compressed block with ONE predefined-mode sequence: raw literals
     # "abcd" (header type=0 SF=00 RS=4 -> 0x20), nbSeq=1, modes byte 0
     # (all predefined). Backward bitstream, 17 bits + sentinel, in
@@ -682,10 +802,7 @@ def test_xxh64_spec_vector_and_zstd_hand_built_frames():
     # ll_code 4 -> ll 4. "abcd" then copy 3 back-1 -> "abcdddd".
     # Bit 13 set of 17 -> little-endian bytes 00 20, sentinel 02.
     cb2 = bytes([0x20]) + b"abcd" + bytes([0x01, 0x00, 0x00, 0x20, 0x02])
-    assert (
-        zstd_decompress(frame([(1, 2, len(cb2), cb2)], fcs=b"\x07"))
-        == b"abcdddd"
-    )
+    assert dec(frame([(1, 2, len(cb2), cb2)], fcs=b"\x07")) == b"abcdddd"
     # skippable frame between real frames
     skip = b"\x50\x2a\x4d\x18" + (3).to_bytes(4, "little") + b"xyz"
     two = (
@@ -693,45 +810,43 @@ def test_xxh64_spec_vector_and_zstd_hand_built_frames():
         + skip
         + frame([(1, 0, 2, b"ho")], fcs=b"\x02")
     )
-    assert zstd_decompress(two) == b"hiho"
+    assert dec(two) == b"hiho"
 
-    for bad, msg in [
-        (b"\x00\x00\x00\x00", "bad frame magic"),
-        (frame([(1, 3, 2, b"ab")], fcs=b"\x02"), "reserved block type"),
-        (frame([(1, 0, 9, b"ab")], fcs=b"\x02"), "truncated raw block"),
-        (frame([(1, 0, 2, b"ab")], fcs=b"\x09"), "content size mismatch"),
-        (frame([(1, 0, 2, b"ab")], fhd=0x21, fcs=b"\x02"), "dictionary"),
-        (frame([(1, 0, 2, b"ab")], fhd=0x28, fcs=b"\x02"), "reserved FHD"),
+    for bad in [
+        b"\x00\x00\x00\x00",  # bad frame magic
+        frame([(1, 3, 2, b"ab")], fcs=b"\x02"),  # reserved block type
+        frame([(1, 0, 9, b"ab")], fcs=b"\x02"),  # truncated raw block
+        frame([(1, 0, 2, b"ab")], fcs=b"\x09"),  # content size mismatch
+        frame([(1, 0, 2, b"ab")], fhd=0x21, fcs=b"\x02"),  # dictionary
+        frame([(1, 0, 2, b"ab")], fhd=0x28, fcs=b"\x02"),  # reserved FHD
     ]:
-        with pt.raises((ValueError, NotImplementedError), match=msg):
-            zstd_decompress(bad)
-    # checksummed frame with a corrupt checksum
-    good = frame(
-        [(1, 0, 2, b"ab")], fhd=0x24, fcs=b"\x02",
-        tail=(xxh64(b"ab") & 0xFFFFFFFF).to_bytes(4, "little"),
-    )
-    assert zstd_decompress(good) == b"ab"
-    with pt.raises(ValueError, match="content checksum"):
-        zstd_decompress(good[:-4] + b"\x00\x00\x00\x00")
+        _assert_batch_rejects(4, bad)
+    # checksummed frames, then the same with a corrupt checksum
+    for content, xxh64_lo in [(b"", 0x51D8E999), (b"ab", 0x92D04A61)]:
+        good = frame(
+            [(1, 0, len(content), content)],
+            fhd=0x24,
+            fcs=bytes([len(content)]),
+            tail=xxh64_lo.to_bytes(4, "little"),
+        )
+        assert dec(good) == content
+        _assert_batch_rejects(4, good[:-4] + b"\x00\x00\x00\x00")
 
 
 def test_zstd_differential_vs_libzstd():
-    """The decoder against a REAL implementation: pyarrow bundles
-    libzstd, so libzstd-compressed frames at several levels — which
-    exercise Huffman literals (FSE-compressed weights, 1- and
-    4-stream), FSE_Compressed/RLE/Repeat sequence tables, repcodes
-    and multi-block treeless paths — must decode byte-exactly here;
-    and this module's store-mode checksummed frames must decompress
-    under libzstd, which VERIFIES the XXH64 content checksum,
-    pinning that implementation too."""
+    """The streaming decode against libzstd's one-shot decode: frames
+    compressed at several levels (Huffman literals, FSE/RLE/Repeat
+    sequence tables, repcodes, multi-block) decode byte-exactly through
+    _decompress, which reads them without a size, and the codec table's
+    own frames decode under the one-shot call given the size."""
     import os
     import random
 
     import pyarrow as pa
 
-    from event_stream_for_k8s_spark.functions.zstd_codec import (
-        zstd_compress,
-        zstd_decompress,
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _CODECS,
+        _decompress,
     )
 
     rng = random.Random(15)
@@ -748,43 +863,34 @@ def test_zstd_differential_vs_libzstd():
         codec = pa.Codec("zstd", compression_level=lvl)
         for data in cases:
             z = codec.compress(data, asbytes=True)
-            assert zstd_decompress(z) == data, (lvl, len(data))
+            assert _decompress(4, z, 0) == data, (lvl, len(data))
     codec = pa.Codec("zstd")
     for data in cases:
-        z = zstd_compress(data)  # content_checksum=True
+        z = _CODECS[4][1](data)
         got = codec.decompress(z, decompressed_size=len(data), asbytes=True)
         assert got == data
-        assert zstd_decompress(z) == data  # self round trip
+        assert _decompress(4, z, 0) == data  # self round trip
 
 
 def test_zstd_roundtrip_property():
     """Hypothesis property: libzstd-compressed bytes of ANY shape
-    decode exactly, and store-mode frames round-trip, across random,
-    repetitive and tiny-alphabet payloads."""
+    decode exactly through _decompress, and the codec table's zstd
+    entry round-trips."""
     import pyarrow as pa
     from hypothesis import given, settings
-    from hypothesis import strategies as st
 
-    from event_stream_for_k8s_spark.functions.zstd_codec import (
-        zstd_compress,
-        zstd_decompress,
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        _CODECS,
+        _decompress,
     )
 
     codec = pa.Codec("zstd", compression_level=3)
-    payloads = st.one_of(
-        st.binary(max_size=3000),
-        st.binary(min_size=1, max_size=8).flatmap(
-            lambda unit: st.integers(1, 400).map(lambda n: unit * n)
-        ),
-        st.lists(st.sampled_from([b"ab", b"a", b"abc", b"\x00"]))
-        .map(b"".join),
-    )
 
-    @given(data=payloads)
-    @settings(max_examples=150, deadline=None)
+    @given(data=_payloads())
+    @settings(max_examples=100, deadline=None)
     def prop(data):
-        assert zstd_decompress(codec.compress(data, asbytes=True)) == data
-        assert zstd_decompress(zstd_compress(data)) == data
+        assert _decompress(4, codec.compress(data, asbytes=True), 0) == data
+        assert _decompress(4, _CODECS[4][1](data), 0) == data
 
     prop()
 

@@ -22,6 +22,7 @@ from event_stream_for_k8s_spark.streaming.dedup_pipeline import (
     run_reference_pipeline,
 )
 from event_stream_for_k8s_spark.streaming.prom_metrics import (
+    RECEIVED_OBSERVATION,
     K8sStreamMetrics,
 )
 
@@ -518,7 +519,7 @@ def test_prom_counters_monotone_under_replay(spark, tmp_path):
                 F.col("involvedObject.kind").alias("kind"),
                 F.col("involvedObject.namespace").alias("namespace"),
             )
-            .observe("kes_received", F.count(F.lit(1)).alias("n"))
+            .observe(RECEIVED_OBSERVATION, F.count(F.lit(1)).alias("n"))
         )
         deduped = (
             stream.withWatermark("time", "3600 seconds")
