@@ -683,7 +683,9 @@ class StubKafkaBroker:
         self._server = Server(("127.0.0.1", 0), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
+            target=self._server.serve_forever,
+            kwargs={"poll_interval": 0.05},
+            daemon=True,
         )
 
     def start(self) -> "StubKafkaBroker":

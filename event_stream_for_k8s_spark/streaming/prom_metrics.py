@@ -22,11 +22,11 @@ free metric registry (counters/gauges + text exposition rendering), a
 Spark aggregates (label-cardinality-bounded collect — the only rows
 that reach the driver are the per-label-combination counts, never
 events), and a stdlib HTTP endpoint serving ``GET /metrics``. At
-cluster scale the observer's single per-batch aggregation job runs on
+cluster scale the observer's one SQL execution per batch runs on
 executors and the registry lives on the driver, which is exactly
 where a scrape endpoint must live; for multi-query deployments attach
 one observer per query and serve one registry. The daemon's stdout
-mode skips that job: its rows already come to the driver to be
+mode skips that execution: its rows already come to the driver to be
 printed, so it counts the labels there as it prints them and hands
 the tally to the same accounting (``apply_batch``).
 
@@ -41,7 +41,6 @@ first-by-(event-time, id) order its channel delivery does.
 
 from __future__ import annotations
 
-import json
 import logging
 import threading
 from dataclasses import dataclass, field
@@ -171,7 +170,14 @@ EVENT_LABELS = ("event_type", "event_reason", "event_kind", "event_namespace")
 
 
 class K8sStreamMetrics:
-    """The reference's four metric families over a Spark k8s stream."""
+    """The reference's four metric families over a Spark k8s stream.
+
+    Deferred totals (``defer_totals_batch_id``) reconcile against one
+    floor, the highest batch id synced so far. It rests on one
+    assumption: one ``K8sStreamMetrics`` per checkpoint, whose batch
+    ids only grow (a restart resumes above the floor, and a replayed
+    batch reuses its id before its progress is posted).
+    """
 
     def __init__(self) -> None:
         self.registry = PromRegistry()
@@ -196,33 +202,12 @@ class K8sStreamMetrics:
         )
         self._items = 0
         self._bytes = 0
-        # batch_id -> the batch's ENTIRE staged increment set (miss
-        # count, per-label counts, byte totals) for deferred
-        # accounting when the received count comes from a pre-dedup
-        # .observe(). Staging everything (not just misses) makes a
-        # foreachBatch RETRY idempotent across the board: re-observing
-        # a batch overwrites its staged entry instead of double-
-        # incrementing events/sync_bytes while total reconciles once
-        # (ADVICE r05).
-        self._pending: dict[int, dict] = {}
-        # seen-batch bookkeeping is watermark-compacted: batch ids are
-        # monotone, so contiguous prefixes collapse into _synced_floor
-        # and the set stays O(out-of-order window), not O(daemon age)
-        self._synced_batches: set[int] = set()
-        self._synced_floor = -1
-        # progress-beats-observer repair ring (ADVICE r06): batch ids
-        # reconciled WITHOUT a staged observation (misses assumed 0,
-        # all received counted as cache_hits). A late observe_batch
-        # finds its id here and moves the miss count back out of
-        # cache_hits: counters only increment, so it increments
-        # cache_misses immediately and records the cache_hits
-        # overcount in _hit_overcount, which is repaid by withholding
-        # that many hits from FUTURE sync_received increments
-        # (monotone counters, convergent totals). Bounded at 256
-        # entries — an observe arriving later than that window keeps
-        # the old documented undercount.
-        self._default_synced: dict[int, int] = {}
-        self._hit_overcount = 0
+        # batch_id -> (labels, nbytes, misses), held until the batch's
+        # received count arrives. A foreachBatch retry overwrites its
+        # own entry, so every family applies once per batch.
+        self._pending: dict[int, tuple[list, int, int]] = {}
+        # the highest batch id reconciled; ids at or below it are done
+        self._synced = -1
         self._lock = self.registry._lock
 
     def observe_batch(
@@ -247,16 +232,16 @@ class K8sStreamMetrics:
         + the 8-byte u64 seen-timestamp sled stores per key,
         ``src/tasks.rs:123-126``).
 
-        ONE Spark job per batch: a per-key ``min_by`` picks the
+        One SQL execution per batch: a per-key ``min_by`` picks the
         first-occurrence labels, then a per-label-combination rollup
         — only label-cardinality-bounded rows reach the driver, where
         :meth:`apply_batch` applies them.
 
-        With ``defer_totals_batch_id`` set, the ``total``/``cache_hits``
-        counters are NOT incremented here: the caller observes the
-        PRE-dedup stream (where the reference counts every received
-        event, ``src/tasks.rs:132-140``) and later reconciles via
-        :meth:`sync_received` / :meth:`sync_from_query`.
+        With ``defer_totals_batch_id`` set, nothing is applied here:
+        the caller observes the PRE-dedup stream (where the reference
+        counts every received event, ``src/tasks.rs:132-140``) and
+        later reconciles via :meth:`sync_received` /
+        :meth:`sync_from_query`.
         """
         order_struct = F.struct(*[F.col(c) for c in order_cols])
         label_struct = F.struct(
@@ -304,199 +289,103 @@ class K8sStreamMetrics:
         driver from the rows it prints."""
         misses = sum(n for *_, n in labels)
         with self._lock:
-            if defer_totals_batch_id is None:
-                self._apply_labels_and_bytes(labels, nbytes)
-                self.processed.labels("total").inc(total)
-                self.processed.labels("cache_hits").inc(total - misses)
-                self.processed.labels("cache_misses").inc(misses)
-                # standalone (no state store in sight): cumulative
-                # insert accounting approximates the cache size
-                self.size.labels("items").set(self._items)
-                self.size.labels("bytes").set(self._bytes)
-            elif (
-                defer_totals_batch_id <= self._synced_floor
-                or defer_totals_batch_id in self._synced_batches
-            ):
-                # totals for this batch already reconciled (progress
-                # beat the observer): apply the label/byte increments
-                # directly — staging would strand them
-                self._apply_labels_and_bytes(labels, nbytes)
-                if defer_totals_batch_id in self._default_synced:
-                    # the reconcile assumed misses=0 and credited all
-                    # received rows to cache_hits — move this batch's
-                    # miss count to cache_misses now and repay the
-                    # cache_hits overcount against future syncs, so
-                    # sum(events) == cache_misses holds (ADVICE r06).
-                    # Repay only what was actually over-credited: the
-                    # default reconcile added max(0, received) hits,
-                    # so misses > received must clamp — otherwise one
-                    # oversized late observation withholds genuine
-                    # future cache_hits forever (ADVICE r07)
-                    received = self._default_synced.pop(
-                        defer_totals_batch_id
-                    )
-                    self.processed.labels("cache_misses").inc(misses)
-                    self._hit_overcount += min(misses, max(0, received))
-            else:
-                # EVERYTHING moves atomically in sync_received —
-                # incrementing misses now would let a scrape observe
-                # misses > total (A9 invariant), and incrementing
-                # events/sync_bytes now would double-count on a
-                # foreachBatch retry. Same-batch re-observation
-                # overwrites (idempotent).
-                self._pending[defer_totals_batch_id] = {
-                    "misses": misses,
-                    "labels": labels,
-                    "nbytes": nbytes,
-                }
-            # daemon mode: sync_from_query owns the size gauges and
-            # points them at the live dedup state store (which SHRINKS
-            # on watermark eviction, like the reference's sled db
-            # after its TTL cleaner runs)
+            if defer_totals_batch_id is not None:
+                # applying anything before the received count arrives
+                # would let a scrape see misses > total (A9 invariant)
+                self._pending[defer_totals_batch_id] = (
+                    labels, nbytes, misses
+                )
+                return misses
+            self._apply(labels, nbytes, misses, total)
+            # standalone (no state store in sight): cumulative insert
+            # accounting approximates the cache size. In daemon mode
+            # sync_from_query points these gauges at the dedup state
+            # store, which shrinks on watermark eviction like the
+            # reference's sled db after its TTL cleaner runs
+            self.size.labels("items").set(self._items)
+            self.size.labels("bytes").set(self._bytes)
         return misses
 
-    def _apply_labels_and_bytes(
+    def _apply(
         self,
         labels: list[tuple[str, str, str, str, int]],
         nbytes: int,
+        misses: int,
+        received: int,
     ) -> None:
-        """Apply one batch's per-label counts and byte totals. Caller
-        holds the lock."""
+        """Apply one batch to every counter family. Caller holds the
+        lock."""
         for l0, l1, l2, l3, n in labels:
             self.events.labels(l0, l1, l2, l3).inc(n)
         self.sync_bytes.labels().inc(nbytes)
-        self._items += sum(n for *_, n in labels)
+        self._items += misses
         self._bytes += nbytes
+        self.processed.labels("total").inc(received)
+        self.processed.labels("cache_hits").inc(max(0, received - misses))
+        self.processed.labels("cache_misses").inc(misses)
 
     def sync_received(self, batch_id: int, received: int) -> None:
         """Reconcile one batch's RECEIVED count (pre-dedup) with the
         misses its emitted batch recorded: ``total`` counts every
         received event and ``cache_hits`` the duplicate deliveries the
         dedup state absorbed — the reference writer's semantics
-        (``src/tasks.rs:132-140``). Idempotent per batch_id."""
+        (``src/tasks.rs:132-140``). Ids at or below the floor are
+        no-ops, so replayed progress counts once."""
         with self._lock:
-            if batch_id <= self._synced_floor or batch_id in self._synced_batches:
+            if batch_id <= self._synced:
                 return
-            if self._synced_floor == -1 and not self._synced_batches:
-                # first batch after construction: a checkpoint restart
-                # resumes at an arbitrary batch N, so the floor must
-                # seed from the first id seen, not from 0 — otherwise
-                # the contiguous-prefix compaction below never fires
-                # and the set grows for the daemon's lifetime
-                self._synced_floor = batch_id - 1
-            self._synced_batches.add(batch_id)
-            while self._synced_floor + 1 in self._synced_batches:
-                self._synced_floor += 1
-                self._synced_batches.discard(self._synced_floor)
-            if len(self._synced_batches) > 1024:
-                # a progress event fell out of the ~100-entry
-                # recentProgress ring and will never arrive: abandon
-                # the gap instead of letting the set grow unboundedly
-                # behind it. The abandoned batches' received counts
-                # and staged increments are LOST (permanent undercount
-                # of total/cache_hits) — make that observable to the
-                # operator instead of silent (ADVICE r05)
-                old_floor = self._synced_floor
-                self._synced_floor = min(self._synced_batches) - 1
-                while self._synced_floor + 1 in self._synced_batches:
-                    self._synced_floor += 1
-                    self._synced_batches.discard(self._synced_floor)
-                lost = [
-                    b for b in self._pending if b <= self._synced_floor
-                ]
+            self._synced = batch_id
+            # staged batches below the floor lost their progress out of
+            # the recentProgress ring: count what was emitted, so
+            # _pending stays bounded and hits + misses == total holds
+            lost = sorted(b for b in self._pending if b < batch_id)
+            if lost:
                 log.warning(
-                    "metrics observer: abandoned batch-id gap "
-                    "(%d, %d] — progress events lost; dropping %d "
-                    "staged batch(es) with %d pending misses; "
-                    "total/cache_hits will undercount from here",
-                    old_floor,
-                    self._synced_floor,
-                    len(lost),
-                    sum(self._pending[b]["misses"] for b in lost),
+                    "metrics: no progress read for batch(es) %s; "
+                    "counting their %d staged misses as received",
+                    lost,
+                    sum(self._pending[b][2] for b in lost),
                 )
-            staged = self._pending.pop(batch_id, None)
-            if staged is None:
-                # no observation yet (progress beat the observer, or a
-                # zero-data batch): remember the id so a LATE observe
-                # can move its miss count out of cache_hits
-                # (ADVICE r06); ring-bounded
-                self._default_synced[batch_id] = received
-                while len(self._default_synced) > 256:
-                    self._default_synced.pop(
-                        next(iter(self._default_synced))
-                    )
-                staged = {"misses": 0, "labels": [], "nbytes": 0}
-            # a pending entry whose progress event was lost must not
-            # pin memory
-            for bid in [b for b in self._pending if b <= self._synced_floor]:
-                del self._pending[bid]
-            self._apply_labels_and_bytes(staged["labels"], staged["nbytes"])
-            misses = staged["misses"]
-            self.processed.labels("total").inc(received)
-            self.processed.labels("cache_misses").inc(misses)
-            hits = max(0, received - misses)
-            # repay any cache_hits overcount left by a past
-            # default-reconciled batch whose observe arrived late
-            repay = min(self._hit_overcount, hits)
-            self._hit_overcount -= repay
-            self.processed.labels("cache_hits").inc(hits - repay)
+            for b in lost:
+                staged = self._pending.pop(b)
+                self._apply(*staged, received=staged[2])
+            self._apply(*self._pending.pop(batch_id, ([], 0, 0)), received)
 
     def sync_from_query(self, query) -> None:
         """Pull ``observedMetrics[RECEIVED_OBSERVATION]`` rows out of a
         streaming query's recent progress and apply them. Safe to call
         repeatedly (poll loop or one final flush after termination).
 
+        Progress without the observation is skipped: it is the idle
+        trigger Spark posts every ``noDataProgressEventInterval`` while
+        no data arrives, which carries the NEXT batch's id and is not a
+        batch. Reconciling it would close that id with 0 received and
+        drop the real batch's count when it runs.
+
         Also repoints the ``cachedb_size`` gauges at the live dedup
-        STATE STORE totals (``stateOperators.numRowsTotal`` /
-        state memory bytes): the reference's gauge tracks the sled db
-        after TTL eviction shrinks it (``src/tasks.rs:210-216``), so a
-        cumulative miss count would only ever grow — the state store
-        is the cache db here, and its row count is the honest twin."""
-        def as_dict(p) -> dict:
-            return p if isinstance(p, dict) else json.loads(p.json)
-
-        def batch_id(p) -> int:
-            # attribute access avoids parsing the full progress JSON
-            # just to discover the entry was already processed
-            if isinstance(p, dict):
-                return int(p["batchId"])
-            bid = getattr(p, "batchId", None)
-            return int(as_dict(p)["batchId"] if bid is None else bid)
-
-        for p in query.recentProgress:
-            bid = batch_id(p)
-            with self._lock:
-                seen = (
-                    bid <= self._synced_floor or bid in self._synced_batches
-                )
-            if seen:
+        STATE STORE totals (``numRowsTotal`` / ``memoryUsedBytes``):
+        the reference's gauge tracks the sled db after TTL eviction
+        shrinks it (``src/tasks.rs:210-216``), so a cumulative miss
+        count would only ever grow — the state store is the cache db
+        here, and its row count is the honest twin."""
+        progress = query.recentProgress
+        for p in progress:
+            if p["batchId"] <= self._synced:
                 continue
-            d = as_dict(p)
-            om = d.get("observedMetrics") or {}
-            row = om.get(RECEIVED_OBSERVATION)
-            # a zero-data batch carries no observation: record it as
-            # 0 received so the entry is marked seen (otherwise it
-            # would be re-parsed on every poll forever)
-            self.sync_received(bid, int(row["n"]) if row is not None else 0)
-        # size gauges need only the LATEST progress, not the ring
-        last = query.lastProgress
-        state_rows, state_bytes = None, None
-        if last is not None:
-            d = as_dict(last)
-            ops = d.get("stateOperators") or []
-            if ops:
-                state_rows, state_bytes = 0, 0
-                for o in ops:
-                    # one store per shuffle partition, one row per
-                    # resident key (the sled-items analog)
-                    state_rows += int(o.get("numRowsTotal", 0))
-                    state_bytes += int(
-                        o.get("stateMemory", o.get("memoryUsedBytes", 0))
-                    )
-        if state_rows is not None:
+            row = (p.get("observedMetrics") or {}).get(RECEIVED_OBSERVATION)
+            if row is not None:
+                self.sync_received(p["batchId"], int(row["n"]))
+        # one store per shuffle partition, one row per resident key
+        # (the sled-items analog); only the latest progress counts
+        ops = progress[-1].get("stateOperators") if progress else None
+        if ops:
             with self._lock:
-                self.size.labels("items").set(state_rows)
-                self.size.labels("bytes").set(state_bytes)
+                self.size.labels("items").set(
+                    sum(int(o["numRowsTotal"]) for o in ops)
+                )
+                self.size.labels("bytes").set(
+                    sum(int(o["memoryUsedBytes"]) for o in ops)
+                )
 
     def foreach_batch(self, key_col: str, order_cols: tuple[str, ...], **cols):
         """``writeStream.foreachBatch`` adapter."""
@@ -535,7 +424,9 @@ class ExpositionServer:
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self._httpd.server_address[1]
         self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
+            target=self._httpd.serve_forever,
+            kwargs={"poll_interval": 0.05},
+            daemon=True,
         )
 
     def start(self) -> "ExpositionServer":

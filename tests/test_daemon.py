@@ -223,6 +223,68 @@ def test_daemon_continuous_sigterm_graceful(spark, tmp_path):
         _signal.signal(_signal.SIGTERM, prev_term)
 
 
+def test_daemon_idle_gap_keeps_batch_totals(spark, tmp_path):
+    """A lull longer than ``noDataProgressEventInterval`` makes Spark
+    post idle-trigger progress carrying the NEXT batch's id and no
+    received-count observation. It is not a batch: after the lull the
+    batch that runs under that id still counts every received event,
+    so total == lines appended and hits + misses == total."""
+    import os
+    import time
+
+    key = "spark.sql.streaming.noDataProgressEventInterval"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "200ms")
+    cfg = DaemonConfig(
+        env={
+            "CACHE_TTL": "3600",
+            "CACHE_DB": str(tmp_path / "ck"),
+            "KES_SPOOL": str(tmp_path / "spool"),
+            "METRICS_PORT": "0",
+        }
+    )
+    spool = os.path.join(cfg.spool_dir, "watch.jsonl")
+    os.makedirs(cfg.spool_dir)
+    open(spool, "w").close()
+    # 10 unique events; each half redelivers two of them
+    ev = [_event(f"u{i}", i, ("BackOff", "Failed")[i % 2], f"ns-{i % 3}")
+          for i in range(10)]
+    halves = (ev[:6] + ev[:2], ev[6:] + ev[5:7])
+    lines: list[str] = []
+    try:
+        query, metrics, mserver = run_daemon(
+            spark, cfg, emit=lines.append, available_now=False,
+            install_signal_handlers=False,
+        )
+        try:
+            for i, half in enumerate(halves):
+                if i:
+                    time.sleep(2)  # ten idle-trigger intervals
+                with open(spool, "a") as f:
+                    for e in half:
+                        f.write(json.dumps(e) + "\n")
+                query.processAllAvailable()
+        finally:
+            query.stop()
+            mserver.stop()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert any(
+        "observedMetrics" not in p or not p["observedMetrics"]
+        for p in query.recentProgress
+    )  # the lull did post idle progress
+    assert len(lines) == len(ev)
+    metrics.sync_from_query(query)
+    s = m_samples(metrics)
+    assert s[("total",)] == sum(map(len, halves))
+    assert s[("cache_hits",)] + s[("cache_misses",)] == s[("total",)]
+    assert sum(metrics.events.samples.values()) == s[("cache_misses",)]
+    assert s[("cache_misses",)] == len(ev)
+
+
 def test_daemon_restart_resumes_from_checkpoint(spark, tmp_path):
     """A15 parity at the daemon level: a restart over the same
     CACHE_DB (checkpoint) and spool re-emits NOTHING — the file

@@ -14,6 +14,7 @@ import urllib.request
 from event_stream_for_k8s_spark.streaming.prom_metrics import (
     CONTENT_TYPE,
     ExpositionServer,
+    RECEIVED_OBSERVATION,
     K8sStreamMetrics,
     PromRegistry,
 )
@@ -190,25 +191,76 @@ def test_pipeline_to_exposition_end_to_end(spark, tmp_path):
         srv.stop()
 
 
-def test_sync_received_watermark_compaction():
-    """Long-daemon memory bound: seen-batch bookkeeping collapses
-    contiguous prefixes into a floor (O(out-of-order window), not
-    O(daemon age)); replays below the floor are ignored; pending miss
-    entries whose progress was lost are pruned."""
+def test_sync_received_watermark_compaction(caplog):
+    """Deferred totals reconcile against one batch-id floor: ordered
+    ids apply once, replayed progress at or below the floor is a
+    no-op, and a staged batch whose progress left the recentProgress
+    ring unread is applied on the next sync with received = its
+    misses (and a warning), so no staged entry outlives the floor and
+    hits + misses == total holds."""
+    import logging
+
     m = K8sStreamMetrics()
-    stage = lambda n: {"misses": n, "labels": [], "nbytes": 0}  # noqa: E731
-    m._pending.update({0: stage(1), 1: stage(2), 5: stage(1)})
-    for b in (0, 1, 2, 3, 4):  # ordered arrivals collapse
+
+    def stage(batch_id, misses):
+        m.apply_batch([("Warning", "BackOff", "Pod", "ns", misses)],
+                      nbytes=10 * misses, total=misses,
+                      defer_totals_batch_id=batch_id)
+
+    stage(0, 1)
+    stage(1, 2)
+    stage(5, 1)
+    for b in (0, 1, 2, 3, 4):  # ordered arrivals each apply once
         m.sync_received(b, 10)
-    assert m._synced_floor == 4 and m._synced_batches == set()
-    m.sync_received(6, 10)  # out-of-order: held
-    assert m._synced_floor == 4 and m._synced_batches == {6}
-    m.sync_received(5, 10)  # gap fills -> floor jumps past both
-    assert m._synced_floor == 6 and m._synced_batches == set()
-    m.sync_received(3, 99)  # replay below floor: no double count
     s = m.processed.samples
-    assert s[("total",)] == 70
-    assert s[("cache_hits",)] == 66  # 70 received - 4 misses popped
+    assert s[("total",)] == 50
+    assert s[("cache_misses",)] == 3
+    assert s[("cache_hits",)] == 47
+    m.sync_received(3, 99)  # replay below the floor: no double count
+    m.sync_received(4, 99)  # replay at the floor: no double count
+    assert s[("total",)] == 50
+    # batch 5's progress was never read; batch 6 closes it
+    with caplog.at_level(logging.WARNING):
+        m.sync_received(6, 10)
+    assert "[5]" in caplog.text
+    assert s[("total",)] == 61  # 50 + batch 5's 1 miss + 10
+    assert s[("cache_misses",)] == 4
+    assert s[("cache_hits",)] == 57
+    assert s[("cache_hits",)] + s[("cache_misses",)] == s[("total",)]
+    assert sum(m.events.samples.values()) == 4
+    assert m.sync_bytes.samples[()] == 40
+    m.sync_received(5, 10)  # its late progress is below the floor
+    assert s[("total",)] == 61
+
+
+def _fake_query(*progress):
+    """A stand-in for a StreamingQuery: progress records are dicts."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(recentProgress=list(progress))
+
+
+# the idle-trigger progress Spark posts during a lull: the NEXT batch's
+# id, no received-count observation
+IDLE_2 = {"batchId": 2}
+BATCH_2 = {"batchId": 2, "observedMetrics": {RECEIVED_OBSERVATION: {"n": 5}}}
+
+
+def test_idle_progress_does_not_close_the_next_batch():
+    """Idle-trigger progress is not a batch: a poll during the lull
+    changes nothing, and the batch that then runs under that id counts
+    all 5 received events (3 staged misses, 2 hits)."""
+    m = K8sStreamMetrics()
+    m.sync_from_query(_fake_query(IDLE_2))
+    assert m.processed.samples == {}
+    m.apply_batch([("Warning", "BackOff", "Pod", "ns", 3)], nbytes=30,
+                  total=3, defer_totals_batch_id=2)
+    m.sync_from_query(_fake_query(IDLE_2, BATCH_2))
+    fam = m.processed.samples
+    assert fam[("total",)] == 5
+    assert fam[("cache_hits",)] == 2
+    assert fam[("cache_misses",)] == 3
+    assert sum(m.events.samples.values()) == 3
 
 
 def test_deferred_observe_retry_is_fully_idempotent(spark):
@@ -237,77 +289,35 @@ def test_deferred_observe_retry_is_fully_idempotent(spark):
     m.sync_received(7, 5)
     assert sum(m.events.samples.values()) == 3
 
-    # progress-beats-observer race: totals reconciled first (misses
-    # unknown -> 0, all 5 received credited to cache_hits), the late
-    # observe applies label/bytes directly AND repairs the split
-    # (ADVICE r06): misses move to cache_misses immediately, and the
-    # cache_hits overcount is repaid by withholding hits from FUTURE
-    # syncs — counters stay monotone, totals converge
+    # the same observe + retry under id 2, polled through idle-trigger
+    # progress for that id before and after the batch ran
     m2 = K8sStreamMetrics()
-    m2.sync_received(3, 5)
-    m2.observe_batch(b, key_col="k", order_cols=("t",),
-                     defer_totals_batch_id=3)
-    assert sum(m2.events.samples.values()) == 3  # not stranded
-    assert m2._pending == {}
-    fam2 = m2.processed.samples
-    # the events==misses invariant holds right after the late observe
-    assert fam2[("cache_misses",)] == 3
-    assert sum(m2.events.samples.values()) == fam2[("cache_misses",)]
-    # transient overcount: hits still carry the 3 mis-credited rows
-    assert fam2[("cache_hits",)] == 5
-    assert m2._hit_overcount == 3
-    # next clean batch (4 received, 2 misses staged) repays: its 2
-    # hits are withheld against the overcount instead of incrementing
-    m2._pending[4] = {"misses": 2, "labels": [("a", "-", "-", "-", 2)],
-                      "nbytes": 0}
-    m2.sync_received(4, 4)
-    fam2 = m2.processed.samples
-    assert fam2[("total",)] == 9
-    assert fam2[("cache_misses",)] == 5
-    assert fam2[("cache_hits",)] == 5  # unchanged: 2 hits repaid
-    assert m2._hit_overcount == 1
-    # converged view: total == hits + misses - remaining overcount
-    assert fam2[("total",)] == (
-        fam2[("cache_hits",)] + fam2[("cache_misses",)]
-        - m2._hit_overcount
-    )
-    # an observe for a batch NEVER default-reconciled takes the
-    # normal path: replaying batch 4's observe is idempotent (stays
-    # out of the ring, no double repair)
-    assert 4 not in m2._default_synced
-    assert 3 not in m2._default_synced
+    m2.sync_from_query(_fake_query(IDLE_2))
+    kw["defer_totals_batch_id"] = 2
+    m2.observe_batch(b, **kw)
+    m2.sync_from_query(_fake_query(IDLE_2))
+    m2.observe_batch(b, **kw)
+    assert m2.processed.samples == {}
+    for _ in range(2):  # the second poll replays the same ring
+        m2.sync_from_query(_fake_query(IDLE_2, BATCH_2, IDLE_2))
+        assert m2.processed.samples == fam
+        assert sum(m2.events.samples.values()) == 3
+        assert m2.sync_bytes.samples[()] == 31
 
-def test_late_observe_overcount_clamped_to_received(spark):
-    """A late observation whose misses EXCEED the batch's received
-    count (possible when the progress event undercounted, e.g. a
-    replayed source segment) must repay only what the default
-    reconcile actually over-credited — max(0, received) hits. The
-    unclamped form banked the full miss count as overcount and
-    withheld genuine future cache_hits forever (ADVICE r07)."""
-    m = K8sStreamMetrics()
-    b = _batch(spark)  # observe_batch stages 3 misses
-    # default-reconcile batch 3 with received=1 < misses=3: the
-    # reconcile credited only 1 hit, so at most 1 is repayable
-    m.sync_received(3, 1)
-    fam = m.processed.samples
-    assert fam[("cache_hits",)] == 1
-    m.observe_batch(b, key_col="k", order_cols=("t",),
-                    defer_totals_batch_id=3)
-    fam = m.processed.samples
-    assert fam[("cache_misses",)] == 3
-    # clamp: overcount is min(misses=3, received=1) == 1, not 3
-    assert m._hit_overcount == 1
-    # a clean future batch with 2 genuine hits: 1 repaid, 1 credited
-    # (the unclamped bug would have withheld both)
-    m._pending[4] = {"misses": 0, "labels": [], "nbytes": 0}
-    m.sync_received(4, 2)
-    fam = m.processed.samples
-    assert fam[("cache_hits",)] == 1 + 1  # not stuck at 1
-    assert m._hit_overcount == 0
-    # received=0 default reconcile: nothing was over-credited, so a
-    # late observe must bank zero overcount
-    m2 = K8sStreamMetrics()
-    m2.sync_received(7, 0)
-    m2.observe_batch(b, key_col="k", order_cols=("t",),
-                     defer_totals_batch_id=7)
-    assert m2._hit_overcount == 0
+
+def test_server_stop_is_prompt():
+    """``stop()`` returns within one short poll of the serve loop, not
+    the stdlib's 0.5 s default, for the scrape endpoint and the stub
+    Kafka broker alike."""
+    import time
+
+    from event_stream_for_k8s_spark.sources.kafka_wire import (
+        StubKafkaBroker,
+    )
+
+    for srv in (ExpositionServer(PromRegistry()), StubKafkaBroker({})):
+        srv.start()
+        time.sleep(0.1)  # let serve_forever enter its poll
+        t0 = time.perf_counter()
+        srv.stop()
+        assert time.perf_counter() - t0 < 0.2, type(srv).__name__
