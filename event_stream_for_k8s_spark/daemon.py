@@ -55,6 +55,12 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from event_stream_for_k8s_spark.sources.k8s_events import (
+    event_key,
+    event_struct,
+    event_time,
+    parse_events,
+)
 from event_stream_for_k8s_spark.streaming.dedup_pipeline import (
     dedup_within_ttl,
 )
@@ -83,17 +89,15 @@ class DaemonConfig:
 def _keyed_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
     """Spool -> keyed envelope stream.
 
-    The ``k8s-events`` source extracts the reference's field set as
-    FLAT string columns on executors (k8s_datasource._to_batch); this
-    builds from that projection: A4 timestamp precedence
-    (types.rs:40-51, falling back to now() exactly as the reference
-    does for timestamp-less events), the A5 ``uid:resourceVersion``
-    key with ``''`` for missing parts, the 4-dim label columns with
-    ``'-'`` defaults (tasks.rs:109-121), and the {time,
-    kubernetes_event} envelope (types.rs:10-18) the NDJSON emit
-    serializes.
+    The ``k8s-events`` source serves the spool's lines; ``parse_events``
+    parses them once, on the JVM, and ``sources.k8s_events`` supplies
+    the rest: the A4 time (``event_time``, falling back to now()
+    exactly as the reference does for timestamp-less events), the
+    nested ``kubernetes_event`` the NDJSON emit serializes
+    (``event_struct``, types.rs:10-18) and the A5
+    ``uid:resourceVersion`` key (``event_key``). The 4-dim label
+    columns default to ``'-'`` (tasks.rs:109-121).
     """
-    from event_stream_for_k8s_spark.operators.dedup import dedup_key
     from event_stream_for_k8s_spark.sources.k8s_datasource import register
 
     register(spark)
@@ -102,51 +106,20 @@ def _keyed_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
         .option("path", os.path.join(spool_dir, "watch.jsonl"))
         .load()
     )
-    ts = lambda c: F.col(c).cast("timestamp")  # noqa: E731 (ISO8601)
-    # the reference serializes the FULL nested k8s Event (types.rs:
-    # 10-18: metadata.uid, involvedObject.{kind,name,namespace},
-    # count, source.component, ...); rebuild that shape from the
-    # source's flat projection so NDJSON consumers keying on any of
-    # those fields (ADVICE r05: involvedObject.name in particular)
-    # parse ours unchanged. to_json drops null fields, matching
-    # serde's Option-skipping — an Event without source/count omits
-    # them here too.
-    nested_event = F.struct(
-        F.struct(
-            F.col("uid").alias("uid"),
-            F.col("resource_version").alias("resourceVersion"),
-            F.col("meta_namespace").alias("namespace"),
-            F.col("creation_timestamp").alias("creationTimestamp"),
-        ).alias("metadata"),
-        F.struct(
-            F.col("kind").alias("kind"),
-            F.col("obj_name").alias("name"),
-            F.col("namespace").alias("namespace"),
-        ).alias("involvedObject"),
-        F.col("type").alias("type"),
-        F.col("reason").alias("reason"),
-        F.col("message").alias("message"),
-        F.col("count").cast("int").alias("count"),
-        F.when(
-            F.col("source_component").isNotNull(),
-            F.struct(F.col("source_component").alias("component")),
-        ).alias("source"),
-        F.col("first_timestamp").alias("firstTimestamp"),
-        F.col("last_timestamp").alias("lastTimestamp"),
-    )
-    return raw.select(
-        F.coalesce(
-            ts("last_timestamp"),
-            ts("first_timestamp"),
-            ts("creation_timestamp"),
-            F.current_timestamp(),
-        ).alias("time"),
-        nested_event.alias("kubernetes_event"),
-        dedup_key([F.col("uid"), F.col("resource_version")]).alias("k"),
-        F.coalesce(F.col("type"), F.lit("-")).alias("etype"),
-        F.coalesce(F.col("reason"), F.lit("-")).alias("ereason"),
-        F.coalesce(F.col("kind"), F.lit("-")).alias("ekind"),
-        F.coalesce(F.col("namespace"), F.lit("-")).alias("ens"),
+    labels = {
+        "etype": "type",
+        "ereason": "reason",
+        "ekind": "involvedObject.kind",
+        "ens": "involvedObject.namespace",
+    }
+    return parse_events(raw).select(
+        event_time().alias("time"),
+        event_struct().alias("kubernetes_event"),
+        event_key().alias("k"),
+        *(
+            F.coalesce(F.col(c), F.lit("-")).alias(a)
+            for a, c in labels.items()
+        ),
     )
 
 

@@ -457,6 +457,7 @@ FROM events
 )
 def source_k8s_watch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from event_stream_for_k8s_spark.sources.k8s_datasource import register
+    from event_stream_for_k8s_spark.sources.k8s_events import parse_events
 
     def build(out: str) -> None:
         ev = load(spark, sf_dir, "events")
@@ -495,9 +496,15 @@ def source_k8s_watch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"k8sw_{abs(hash(sf_dir)) % 10**8}"
     q = (
-        stream.select(
-            "uid", "resource_version", "type", "reason", "kind", "namespace",
-            "last_timestamp",
+        parse_events(stream)
+        .select(
+            F.col("metadata.uid").alias("uid"),
+            F.col("metadata.resourceVersion").alias("resource_version"),
+            "type",
+            "reason",
+            F.col("involvedObject.kind").alias("kind"),
+            F.col("involvedObject.namespace").alias("namespace"),
+            F.col("lastTimestamp").alias("last_timestamp"),
         )
         .writeStream.format("memory")
         .queryName(sink)

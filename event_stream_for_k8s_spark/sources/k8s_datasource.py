@@ -3,11 +3,12 @@ via Spark's Python Data Source API (pyspark >= 4.0).
 
 SURVEY.md §2 A1 marks a native k8s source as the stretch goal beyond
 the out-of-band collector. This implements the engine-side contract:
-a replayable, offset-tracked stream of Event JSON. The transport here
-tails an NDJSON file (what a sidecar collector writes); swapping the
-executor ``read`` body for an HTTP list-then-watch against the k8s
-API (kube-apiserver watch bookmarks ARE resume offsets) changes
-nothing in the Spark-facing surface.
+a replayable, offset-tracked stream of Event JSON lines. The transport
+here tails an NDJSON file (what a sidecar collector or
+``K8sWatchSpooler`` writes); swapping the executor ``read`` body for
+an HTTP list-then-watch against the k8s API (kube-apiserver watch
+bookmarks ARE resume offsets) changes nothing in the Spark-facing
+surface.
 
 Offsets are BYTE positions — monotonic, replayable, checkpointable: a
 restart seeks to the committed position and re-reads forward, and the
@@ -17,18 +18,19 @@ reference's sled state absorbs the startup re-list
 
 Scale design (VERDICT r01 "What's wrong" #4): this is a full
 ``DataSourceStreamReader``, not a Simple one — the driver only does
-offset arithmetic (stat + a bounded newline probe); JSON parsing and
-row materialization happen in EXECUTOR tasks, one per byte-range
-partition (``maxbytesperpartition``, TextInputFormat-style split
-semantics: a line belongs to the partition holding its first byte).
-A fat collector file therefore scans in parallel and the driver never
-touches event bytes. Rows cross the Python->JVM boundary as Arrow
-RecordBatches, not per-row pickled tuples.
+offset arithmetic (stat + a bounded newline probe); line reads happen
+in EXECUTOR tasks, one per byte-range partition
+(``maxbytesperpartition``, TextInputFormat-style split semantics: a
+line belongs to the partition holding its first byte). A fat
+collector file therefore scans in parallel and the driver never
+touches event bytes. The source serves each line as it is, one
+``value`` string per Event; rows cross the Python->JVM boundary as
+Arrow RecordBatches of those lines, and the JSON parse runs on the
+JVM (``k8s_events.parse_events``).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyarrow as pa
@@ -38,69 +40,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-
-K8S_DS_SCHEMA = (
-    "uid string, resource_version string, type string, reason string,"
-    " kind string, namespace string, obj_name string,"
-    " meta_namespace string, message string, count string,"
-    " source_component string,"
-    " last_timestamp string, first_timestamp string, creation_timestamp string"
-)
-
-_FIELDS = (
-    "uid",
-    "resource_version",
-    "type",
-    "reason",
-    "kind",
-    "namespace",
-    "obj_name",
-    "meta_namespace",
-    "message",
-    "count",
-    "source_component",
-    "last_timestamp",
-    "first_timestamp",
-    "creation_timestamp",
-)
-
-
-def _to_batch(lines: list[str]) -> pa.RecordBatch:
-    cols: dict[str, list] = {k: [] for k in _FIELDS}
-    for ln in lines:
-        if not ln.strip():
-            continue
-        ev = json.loads(ln)
-        meta = ev.get("metadata") or {}
-        obj = ev.get("involvedObject") or {}
-        cols["uid"].append(meta.get("uid"))
-        cols["resource_version"].append(meta.get("resourceVersion"))
-        cols["type"].append(ev.get("type"))
-        cols["reason"].append(ev.get("reason"))
-        cols["kind"].append(obj.get("kind"))
-        # the Event object's OWN namespace (metadata.namespace) is a
-        # distinct field from the involved object's — the 4-dim label
-        # uses the involvedObject one (tasks.rs:109-121), the nested
-        # NDJSON re-serialization needs both
-        cols["namespace"].append(obj.get("namespace"))
-        cols["obj_name"].append(obj.get("name"))
-        cols["meta_namespace"].append(meta.get("namespace"))
-        cols["message"].append(ev.get("message"))
-        # count is int in the Event API; carried as string in the flat
-        # projection (all-string Arrow batch), re-typed at the nested
-        # NDJSON re-serialization boundary
-        c = ev.get("count")
-        cols["count"].append(None if c is None else str(c))
-        cols["source_component"].append(
-            (ev.get("source") or {}).get("component")
-        )
-        cols["last_timestamp"].append(ev.get("lastTimestamp"))
-        cols["first_timestamp"].append(ev.get("firstTimestamp"))
-        cols["creation_timestamp"].append(meta.get("creationTimestamp"))
-    return pa.RecordBatch.from_pydict(
-        cols, schema=pa.schema([(k, pa.string()) for k in _FIELDS])
-    )
-
 
 class ByteRange(InputPartition):
     """[start, end) byte span of the NDJSON file; ``batch_start`` marks
@@ -224,7 +163,7 @@ class K8sEventsStreamReader(DataSourceStreamReader):
         self._pos = max(self._pos, end["pos"])
         self._seeded = True
 
-    # ---- executor side: parse the byte range --------------------------
+    # ---- executor side: read the byte range's lines ------------------
 
     def read(self, partition: ByteRange):
         if partition.end <= partition.start or not os.path.exists(
@@ -246,9 +185,12 @@ class K8sEventsStreamReader(DataSourceStreamReader):
                 ln = f.readline()
                 if not ln or not ln.endswith(b"\n"):
                     break  # torn tail (excluded by latestOffset anyway)
-                lines.append(ln.decode("utf-8"))
+                if ln.strip():
+                    lines.append(ln[:-1].decode("utf-8"))
         if lines:
-            yield _to_batch(lines)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(lines, pa.string())], names=["value"]
+            )
 
 
 class K8sEventsDataSource(DataSource):
@@ -259,7 +201,7 @@ class K8sEventsDataSource(DataSource):
         return "k8s-events"
 
     def schema(self) -> str:
-        return K8S_DS_SCHEMA
+        return "value string"
 
     def streamReader(self, schema) -> K8sEventsStreamReader:
         return K8sEventsStreamReader(self.options)

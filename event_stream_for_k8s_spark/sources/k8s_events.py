@@ -1,15 +1,19 @@
-"""Kubernetes Event source boundary.
+"""Kubernetes Event source boundary: the one Event schema, parse and
+projection every consumer uses.
 
 The reference watches core/v1 Events cluster-wide (tasks.rs:150-182).
 Per SURVEY.md §2 A1, k8s event COLLECTION stays out-of-band (an
-off-cluster collector writes NDJSON to a directory or Kafka topic);
-the engine's boundary is "a stream of Event JSON", read here with an
-explicit schema — list-then-watch re-delivery on restart is absorbed
-by the dedup stage exactly as the reference's sled state does.
+off-cluster collector or ``K8sWatchSpooler`` writes NDJSON); the
+engine's boundary is "a stream of Event JSON lines", parsed here once,
+on the JVM, by ``from_json`` against ``K8S_EVENT_SCHEMA`` —
+list-then-watch re-delivery on restart is absorbed by the dedup stage
+exactly as the reference's sled state does.
 
-Schema mirrors the fields the reference touches (types.rs:24-34,
-tasks.rs:109-121) plus the opaque carried ones; everything nullable,
-like the k8s OpenAPI model.
+The schema is the field set the reference touches and emits
+(types.rs:10-58, tasks.rs:109-121), in emit order; everything
+nullable, like the k8s OpenAPI model. Timestamps stay strings so the
+emitted Event echoes what the apiserver sent; ``event_time`` casts
+them.
 """
 
 from __future__ import annotations
@@ -18,11 +22,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
-    MapType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from event_stream_for_k8s_spark.operators.dedup import dedup_key
@@ -32,41 +34,43 @@ def _s(name: str, t=None) -> StructField:
     return StructField(name, t or StringType(), nullable=True)
 
 
+def _struct(name: str, *fields: str) -> StructField:
+    return _s(name, StructType([_s(f) for f in fields]))
+
+
 K8S_EVENT_SCHEMA = StructType(
     [
-        StructField(
-            "metadata",
-            StructType(
-                [
-                    _s("uid"),
-                    _s("resourceVersion"),
-                    _s("name"),
-                    _s("namespace"),
-                    _s("creationTimestamp", TimestampType()),
-                    _s("labels", MapType(StringType(), StringType())),
-                    _s("annotations", MapType(StringType(), StringType())),
-                ]
-            ),
+        _struct(
+            "metadata", "uid", "resourceVersion", "namespace",
+            "creationTimestamp",
         ),
+        _struct("involvedObject", "kind", "name", "namespace"),
         _s("type"),
         _s("reason"),
         _s("message"),
         _s("count", IntegerType()),
-        _s("lastTimestamp", TimestampType()),
-        _s("firstTimestamp", TimestampType()),
-        StructField(
-            "involvedObject",
-            StructType([_s("kind"), _s("namespace"), _s("name"), _s("uid")]),
-        ),
+        _struct("source", "component"),
+        _s("firstTimestamp"),
+        _s("lastTimestamp"),
     ]
 )
+
+
+def parse_events(lines: DataFrame) -> DataFrame:
+    """Event JSON lines (a ``value`` string column) -> one row per
+    Event with its fields as top-level columns. A malformed line fails
+    the query (FAILFAST) rather than becoming a null Event keyed
+    ``:``."""
+    ev = F.from_json("value", K8S_EVENT_SCHEMA, {"mode": "FAILFAST"})
+    return lines.select(ev.alias("e")).select("e.*")
 
 
 def read_events_jsonl(
     spark: SparkSession, path: str, streaming: bool = True
 ) -> DataFrame:
     reader = spark.readStream if streaming else spark.read
-    return reader.schema(K8S_EVENT_SCHEMA).json(path)
+    # blank lines are skipped, as the k8s-events source skips them
+    return parse_events(reader.text(path).where(F.trim("value") != ""))
 
 
 def event_time(now_fallback: Column | None = None) -> Column:
@@ -74,9 +78,9 @@ def event_time(now_fallback: Column | None = None) -> Column:
     creation -> now(). Checked queries pass a literal fallback instead
     of current_timestamp() for determinism."""
     return F.coalesce(
-        F.col("lastTimestamp"),
-        F.col("firstTimestamp"),
-        F.col("metadata.creationTimestamp"),
+        F.col("lastTimestamp").cast("timestamp"),
+        F.col("firstTimestamp").cast("timestamp"),
+        F.col("metadata.creationTimestamp").cast("timestamp"),
         now_fallback if now_fallback is not None else F.current_timestamp(),
     )
 
@@ -86,9 +90,35 @@ def event_key() -> Column:
     return dedup_key([F.col("metadata.uid"), F.col("metadata.resourceVersion")])
 
 
+def event_struct() -> Column:
+    """The emitted ``kubernetes_event`` (types.rs:10-18). ``metadata``
+    and ``involvedObject`` are required in the k8s Event, so they are
+    always emitted, as ``{}`` when absent; ``source`` only when its
+    ``component`` is set. to_json drops the other null fields, like
+    serde's Option-skipping."""
+
+    def required(name: str) -> Column:
+        fields = K8S_EVENT_SCHEMA[name].dataType.fieldNames()
+        return F.struct(*(F.col(f"{name}.{f}").alias(f) for f in fields))
+
+    return F.struct(
+        required("metadata").alias("metadata"),
+        required("involvedObject").alias("involvedObject"),
+        "type",
+        "reason",
+        "message",
+        "count",
+        F.when(F.col("source.component").isNotNull(), F.col("source")).alias(
+            "source"
+        ),
+        "firstTimestamp",
+        "lastTimestamp",
+    )
+
+
 def envelope(df: DataFrame, now_fallback: Column | None = None) -> DataFrame:
     """A4 envelope: {time, kubernetes_event} (types.rs:10-18)."""
     return df.select(
         event_time(now_fallback).alias("time"),
-        F.struct(*df.columns).alias("kubernetes_event"),
+        event_struct().alias("kubernetes_event"),
     )

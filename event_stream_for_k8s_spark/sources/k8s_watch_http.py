@@ -20,8 +20,9 @@ appends to shared storage; Spark's throughput is decoupled from
 apiserver chunk timing.
 
 Endpoints (k8s API conventions):
-  LIST  GET {base}/api/v1/events?limit=...
-        -> {"kind": "EventList", "metadata": {"resourceVersion": rv},
+  LIST  GET {base}/api/v1/events?limit=...[&continue=token]
+        -> {"kind": "EventList",
+            "metadata": {"resourceVersion": rv, "continue": token?},
             "items": [Event, ...]}
   WATCH GET {base}/api/v1/events?watch=true&resourceVersion=rv
         -> chunked NDJSON of {"type": ADDED|MODIFIED|BOOKMARK|ERROR,
@@ -49,6 +50,7 @@ import logging
 import os
 import ssl
 import urllib.error
+import urllib.parse
 import urllib.request
 
 log = logging.getLogger(__name__)
@@ -184,13 +186,35 @@ class K8sWatchSpooler:
         return len(events)
 
     def list_once(self) -> int:
-        """Initial LIST: spool current Events, remember resourceVersion."""
-        with self._open("limit=10000") as resp:
-            body = json.load(resp)
-        self.resource_version = (body.get("metadata") or {}).get(
-            "resourceVersion"
-        )
-        return self._append(body.get("items") or [])
+        """Initial LIST: spool every page of current Events, following
+        ``metadata.continue`` (the reference's kube-runtime watcher
+        pages through the whole list, tasks.rs:150-182), then remember
+        the list's resourceVersion. The offset is set only after the
+        last page, so a failure mid-list re-lists from scratch; a 410
+        on an expired continue token raises ``_WatchExpired``, which
+        re-lists too. Pages spooled before a failure are re-delivered,
+        and the downstream dedup drops them."""
+        n, token, rv = 0, None, None
+        while True:
+            q = "limit=10000"
+            if token:
+                q += "&continue=" + urllib.parse.quote(token, safe="")
+            try:
+                with self._open(q) as resp:
+                    body = json.load(resp)
+            except urllib.error.HTTPError as e:
+                if e.code == 410:
+                    raise _WatchExpired(f"HTTP 410 on list continue "
+                                        f"token {token}") from e
+                raise
+            meta = body.get("metadata") or {}
+            rv = meta.get("resourceVersion", rv)
+            n += self._append(body.get("items") or [])
+            token = meta.get("continue")
+            if not token:
+                break
+        self.resource_version = rv
+        return n
 
     def watch(self, max_events: int | None = None) -> int:
         """WATCH from the last seen resourceVersion; returns events
@@ -262,18 +286,20 @@ class K8sWatchSpooler:
         return n
 
     def run(self, max_events: int | None = None) -> int:
-        """LIST (if never listed) then WATCH; re-list on expiry."""
-        n = 0
-        if self.resource_version is None:
-            n += self.list_once()
-        if max_events is not None and n >= max_events:
-            return n
+        """LIST (if never listed) then WATCH; re-list once on expiry
+        of the watch's resourceVersion or of a LIST continue token.
+        Returns the events spooled."""
+        start = self.events_spooled
         try:
-            n += self.watch(None if max_events is None else max_events - n)
+            if self.resource_version is None:
+                self.list_once()
+            n = self.events_spooled - start
+            if max_events is None or n < max_events:
+                self.watch(None if max_events is None else max_events - n)
         except _WatchExpired:
             self.resource_version = None
-            n += self.list_once()
-        return n
+            self.list_once()
+        return self.events_spooled - start
 
     def run_with_reconnect(
         self,

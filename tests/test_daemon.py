@@ -419,8 +419,9 @@ def test_daemon_executor_sink_only(spark, tmp_path):
 
 
 def _drain(spark, root, events, emit, sink_dir=None):
-    """Bounded file-tail drain of ``events`` through ``run_daemon``
-    from an empty checkpoint; returns (query, metrics)."""
+    """Bounded file-tail drain of ``events`` (dicts, or raw line
+    strings) through ``run_daemon`` from an empty checkpoint; returns
+    (query, metrics)."""
     import os
 
     cfg = DaemonConfig(
@@ -433,8 +434,8 @@ def _drain(spark, root, events, emit, sink_dir=None):
     )
     os.makedirs(cfg.spool_dir)
     with open(os.path.join(cfg.spool_dir, "watch.jsonl"), "w") as f:
-        for ev in events:
-            f.write(json.dumps(ev) + "\n")
+        for ev in events:  # a str is written as the raw line
+            f.write((ev if isinstance(ev, str) else json.dumps(ev)) + "\n")
     query, metrics, mserver = run_daemon(
         spark, cfg, emit=emit, sink_dir=sink_dir, available_now=True,
         install_signal_handlers=False,
@@ -445,6 +446,98 @@ def _drain(spark, root, events, emit, sink_dir=None):
         mserver.stop()
     return query, metrics
 
+
+def _golden_events():
+    """Edge-case Events, each with a timestamp so ``time`` is fixed."""
+    meta = {"uid": "g1", "resourceVersion": "11", "namespace": "ns-a",
+            "creationTimestamp": "2024-03-01T10:00:00Z"}
+    obj = {"kind": "Pod", "namespace": "ns-a", "name": "web-0"}
+    return [
+        # every field set
+        {"metadata": meta, "involvedObject": obj, "type": "Warning",
+         "reason": "BackOff", "message": "restarting", "count": 3,
+         "source": {"component": "kubelet"},
+         "firstTimestamp": "2024-03-01T10:00:01Z",
+         "lastTimestamp": "2024-03-01T10:00:05Z"},
+        # empty source; only firstTimestamp (A4 second rung)
+        {"metadata": {**meta, "uid": "g2"}, "involvedObject": obj,
+         "type": "Normal", "reason": "Pulled", "source": {},
+         "firstTimestamp": "2024-03-01T10:01:00Z"},
+        # source without component; only creationTimestamp (third rung)
+        {"metadata": {**meta, "uid": "g3"}, "involvedObject": obj,
+         "type": "Normal", "reason": "Created",
+         "source": {"host": "node-1"}},
+        # unknown fields at every level are dropped
+        {"metadata": {**meta, "uid": "g4", "name": "web-0.17a",
+                      "labels": {"app": "web"}, "managedFields": []},
+         "involvedObject": {**obj, "uid": "pod-uid", "apiVersion": "v1"},
+         "type": "Normal", "reason": "Started", "action": "Starting",
+         "reportingComponent": "kubelet", "eventTime": None,
+         "lastTimestamp": "2024-03-01T10:02:00Z"},
+        # no metadata and no involvedObject: key ':' and '-' labels
+        {"reason": "Orphan", "lastTimestamp": "2024-03-01T10:03:00Z"},
+        # uid without resourceVersion, and resourceVersion without uid
+        {"metadata": {"uid": "g6", "namespace": "ns-a"},
+         "involvedObject": obj, "type": "Warning", "reason": "NoRv",
+         "lastTimestamp": "2024-03-01T10:04:00Z"},
+        {"metadata": {"resourceVersion": "17"}, "involvedObject": obj,
+         "type": "Warning", "reason": "NoUid",
+         "lastTimestamp": "2024-03-01T10:05:00Z"},
+        # escaped non-ASCII message; the Event lives in another
+        # namespace than the object it is about
+        {"metadata": {**meta, "uid": "g8", "namespace": "meta-ns"},
+         "involvedObject": {**obj, "namespace": "obj-ns"},
+         "type": "Normal", "reason": "Scheduled",
+         "message": "café ☃ “quoted”", "count": 1,
+         "source": {"component": "default-scheduler"},
+         "lastTimestamp": "2024-03-01T10:06:00Z"},
+    ]
+
+
+# the daemon's NDJSON for _golden_events, sorted
+GOLDEN_LINES = [
+    '{"time":"2024-03-01T10:00:00.000Z","kubernetes_event":{"metadata":{"uid":"g3","resourceVersion":"11","namespace":"ns-a","creationTimestamp":"2024-03-01T10:00:00Z"},"involvedObject":{"kind":"Pod","name":"web-0","namespace":"ns-a"},"type":"Normal","reason":"Created"}}',
+    '{"time":"2024-03-01T10:00:05.000Z","kubernetes_event":{"metadata":{"uid":"g1","resourceVersion":"11","namespace":"ns-a","creationTimestamp":"2024-03-01T10:00:00Z"},"involvedObject":{"kind":"Pod","name":"web-0","namespace":"ns-a"},"type":"Warning","reason":"BackOff","message":"restarting","count":3,"source":{"component":"kubelet"},"firstTimestamp":"2024-03-01T10:00:01Z","lastTimestamp":"2024-03-01T10:00:05Z"}}',
+    '{"time":"2024-03-01T10:01:00.000Z","kubernetes_event":{"metadata":{"uid":"g2","resourceVersion":"11","namespace":"ns-a","creationTimestamp":"2024-03-01T10:00:00Z"},"involvedObject":{"kind":"Pod","name":"web-0","namespace":"ns-a"},"type":"Normal","reason":"Pulled","firstTimestamp":"2024-03-01T10:01:00Z"}}',
+    '{"time":"2024-03-01T10:02:00.000Z","kubernetes_event":{"metadata":{"uid":"g4","resourceVersion":"11","namespace":"ns-a","creationTimestamp":"2024-03-01T10:00:00Z"},"involvedObject":{"kind":"Pod","name":"web-0","namespace":"ns-a"},"type":"Normal","reason":"Started","lastTimestamp":"2024-03-01T10:02:00Z"}}',
+    '{"time":"2024-03-01T10:03:00.000Z","kubernetes_event":{"metadata":{},"involvedObject":{},"reason":"Orphan","lastTimestamp":"2024-03-01T10:03:00Z"}}',
+    '{"time":"2024-03-01T10:04:00.000Z","kubernetes_event":{"metadata":{"uid":"g6","namespace":"ns-a"},"involvedObject":{"kind":"Pod","name":"web-0","namespace":"ns-a"},"type":"Warning","reason":"NoRv","lastTimestamp":"2024-03-01T10:04:00Z"}}',
+    '{"time":"2024-03-01T10:05:00.000Z","kubernetes_event":{"metadata":{"resourceVersion":"17"},"involvedObject":{"kind":"Pod","name":"web-0","namespace":"ns-a"},"type":"Warning","reason":"NoUid","lastTimestamp":"2024-03-01T10:05:00Z"}}',
+    '{"time":"2024-03-01T10:06:00.000Z","kubernetes_event":{"metadata":{"uid":"g8","resourceVersion":"11","namespace":"meta-ns","creationTimestamp":"2024-03-01T10:00:00Z"},"involvedObject":{"kind":"Pod","name":"web-0","namespace":"obj-ns"},"type":"Normal","reason":"Scheduled","message":"café ☃ “quoted”","count":1,"source":{"component":"default-scheduler"},"lastTimestamp":"2024-03-01T10:06:00Z"}}',
+]
+
+
+def test_daemon_golden_ndjson(spark, tmp_path):
+    """Edge-case Events emit fixed NDJSON: empty or component-less
+    ``source`` is omitted, unknown fields are dropped, absent
+    ``metadata``/``involvedObject`` emit as ``{}``, missing key parts
+    key as ``''``, non-ASCII text is emitted unescaped, a blank spool
+    line is skipped, and the ``event_namespace`` label is the
+    involvedObject's namespace, not the Event's own."""
+    events: list = _golden_events()
+    events.insert(3, "")  # a blank line
+    lines: list[str] = []
+    query, metrics = _drain(spark, tmp_path, events, lines.append)
+    assert sorted(lines) == GOLDEN_LINES
+    metrics.sync_from_query(query)
+    body = metrics.registry.render()
+    assert 'event_reason="Scheduled",event_kind="Pod",' \
+        'event_namespace="obj-ns"} 1' in body
+    assert 'event_namespace="meta-ns"' not in body
+
+
+def test_daemon_malformed_line_fails_the_query(spark, tmp_path):
+    """A truncated JSON line in the spool fails the drain loudly; it is
+    never emitted as an empty Event keyed ``:``."""
+    from pyspark.errors import StreamingQueryException
+    import pytest as _pytest
+
+    good = _event("a", 1, "BackOff", "ns")
+    events = [good, json.dumps(good)[:40], _event("c", 1, "BackOff", "ns")]
+    lines: list[str] = []
+    with _pytest.raises(StreamingQueryException):
+        _drain(spark, tmp_path, events, lines.append)
+    assert lines == []
 
 def test_daemon_runs_dedup_plan_once_per_batch(spark, tmp_path):
     """The metrics and the NDJSON emit share ONE execution of the

@@ -14,6 +14,7 @@ from event_stream_for_k8s_spark.sources.k8s_events import (
     envelope,
     event_key,
     event_time,
+    parse_events,
     read_events_jsonl,
 )
 from event_stream_for_k8s_spark.streaming.dedup_pipeline import (
@@ -66,6 +67,7 @@ def k8s_dir(tmp_path_factory):
     with open(d / "events.json", "w") as f:
         for row in _k8s_fixture_rows():
             f.write(json.dumps(row) + "\n")
+        f.write("\n")  # a blank line is skipped, not read as an Event
     return str(d)
 
 
@@ -210,7 +212,7 @@ def test_k8s_datasource_offsets_and_batching(spark, k8s_dir, tmp_path):
 
     register(spark)
     path = os.path.join(k8s_dir, "events.json")
-    stream = (
+    stream = parse_events(
         spark.readStream.format("k8s-events")
         .option("path", path)
         .option("maxeventsperbatch", 3)
@@ -232,7 +234,7 @@ def test_k8s_datasource_offsets_and_batching(spark, k8s_dir, tmp_path):
         q.awaitTermination()
     got = spark.table("k8s_ds_test")
     assert got.count() == 8  # all fixture rows, no dup, no loss
-    assert got.filter(F.col("uid") == "u5").count() == 2
+    assert got.filter(F.col("metadata.uid") == "u5").count() == 2
 
 
 def test_k8s_datasource_partition_split_exactness(spark, tmp_path):
@@ -261,7 +263,7 @@ def test_k8s_datasource_partition_split_exactness(spark, tmp_path):
                 )
                 + "\n"
             )
-    stream = (
+    stream = parse_events(
         spark.readStream.format("k8s-events")
         .option("path", path)
         .option("maxbytesperpartition", 256)
@@ -276,7 +278,10 @@ def test_k8s_datasource_partition_split_exactness(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-    got = [r["uid"] for r in spark.table("k8s_split_test").collect()]
+    got = [
+        r["uid"]
+        for r in spark.table("k8s_split_test").select("metadata.uid").collect()
+    ]
     assert sorted(got, key=lambda u: int(u[1:])) == [f"u{i}" for i in range(n)]
     assert len(set(got)) == n  # no dup, no loss
 
@@ -365,9 +370,11 @@ def test_k8s_http_watch_spooler(spark, tmp_path):
 
         register(spark)
         q = (
-            spark.readStream.format("k8s-events")
-            .option("path", spool)
-            .load()
+            parse_events(
+                spark.readStream.format("k8s-events")
+                .option("path", spool)
+                .load()
+            )
             .writeStream.format("memory")
             .queryName("k8s_http_test")
             .outputMode("append")
@@ -377,7 +384,10 @@ def test_k8s_http_watch_spooler(spark, tmp_path):
         )
         q.awaitTermination()
         uids = sorted(
-            r["uid"] for r in spark.table("k8s_http_test").collect()
+            r["uid"]
+            for r in spark.table("k8s_http_test")
+            .select("metadata.uid")
+            .collect()
         )
         assert uids == ["u1", "u2", "u3", "u4", "u5"]
     finally:
@@ -1107,6 +1117,85 @@ def test_k8s_watch_http_410_status_relists(tmp_path):
         srv.server_close()
 
 
+def test_k8s_watch_list_follows_continue_pages(tmp_path):
+    """The initial LIST follows ``metadata.continue`` through every
+    page (a cluster with more Events than one page's ``limit``), and
+    the WATCH starts from the list's resourceVersion. A 410 on an
+    expired continue token re-lists from the first page."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, HTTPServer
+    from urllib.parse import parse_qs, urlsplit
+
+    from event_stream_for_k8s_spark.sources.k8s_watch_http import (
+        K8sWatchSpooler,
+    )
+
+    token = "page/2=="  # continue tokens are opaque base64
+    pages = {
+        None: {"metadata": {"resourceVersion": "7", "continue": token},
+               "items": [{"metadata": {"uid": f"u{i}"}} for i in (1, 2)]},
+        token: {"metadata": {"resourceVersion": "7"},
+                "items": [{"metadata": {"uid": f"u{i}"}} for i in (3, 4, 5)]},
+    }
+    watch_rvs: list[str] = []
+    expire_next_token = [False]
+
+    class Handler(BaseHTTPRequestHandler):
+        def log_message(self, *a):
+            pass
+
+        def do_GET(self):
+            q = parse_qs(urlsplit(self.path).query)
+            if "watch" in q:
+                watch_rvs.append(q["resourceVersion"][0])
+                self.send_response(200)
+                self.end_headers()
+                return
+            cont = q.get("continue", [None])[0]
+            if cont and expire_next_token[0]:
+                expire_next_token[0] = False
+                self.send_error(410, "Gone")
+                return
+            self.send_response(200)
+            self.end_headers()
+            self.wfile.write(json.dumps(pages[cont]).encode())
+
+    srv = HTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+
+    def spooled(path):
+        with open(path) as f:
+            return [json.loads(ln)["metadata"]["uid"] for ln in f]
+
+    try:
+        spool = str(tmp_path / "spool.jsonl")
+        sp = K8sWatchSpooler(f"http://127.0.0.1:{srv.server_port}", spool)
+        assert sp.run() == 5  # 2 + 3 listed, nothing watched
+        assert spooled(spool) == ["u1", "u2", "u3", "u4", "u5"]
+        assert watch_rvs == ["7"]
+
+        # the token expires between pages: page 1 is spooled, then the
+        # 410 re-lists from scratch (dedup drops the re-delivered page)
+        expire_next_token[0] = True
+        spool2 = str(tmp_path / "spool2.jsonl")
+        sp2 = K8sWatchSpooler(f"http://127.0.0.1:{srv.server_port}", spool2)
+        sp2.run_with_reconnect(max_rounds=2, sleep=lambda s: None)
+        assert spooled(spool2) == ["u1", "u2", "u1", "u2", "u3", "u4", "u5"]
+        assert sp2.resource_version == "7"
+        assert watch_rvs == ["7", "7"]
+
+        # the one-shot pull re-lists the same way
+        expire_next_token[0] = True
+        spool3 = str(tmp_path / "spool3.jsonl")
+        sp3 = K8sWatchSpooler(f"http://127.0.0.1:{srv.server_port}", spool3)
+        assert sp3.run() == 7
+        assert spooled(spool3) == spooled(spool2)
+        assert sp3.resource_version == "7"
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
 def test_k8s_watch_http_fatal_codes_bounded_retry(tmp_path):
     """401/403/404 are retried a BOUNDED number of times with backoff
     (a 403 during token rotation / RBAC propagation is transient —
@@ -1406,27 +1495,6 @@ def test_dedup_on_rocksdb_state_store(spark, tmp_path):
         f.write(_json.dumps({"k": "c", "time": "2024-01-01T00:10:01"}) + "\n")
     second, _ = run_once()
     assert second == ["c"]  # 'a' deduped by RocksDB-resident state
-
-
-def test_to_batch_distinguishes_metadata_and_object_namespace():
-    """metadata.namespace and involvedObject.namespace are distinct
-    JSON paths (types.rs Event shape); the flat projection carries
-    both so the daemon's nested re-serialization can be faithful."""
-    import json as _json
-
-    from event_stream_for_k8s_spark.sources.k8s_datasource import _to_batch
-
-    ev = {
-        "metadata": {"uid": "u", "resourceVersion": "1",
-                     "namespace": "meta-ns"},
-        "involvedObject": {"kind": "Pod", "namespace": "obj-ns"},
-        "type": "Normal",
-        "reason": "Started",
-    }
-    batch = _to_batch([_json.dumps(ev)])
-    d = batch.to_pydict()
-    assert d["namespace"] == ["obj-ns"]       # 4-dim label source
-    assert d["meta_namespace"] == ["meta-ns"]  # nested emit source
 
 
 def test_stream_doc_dedup_kills_cross_batch_redelivery(spark):
