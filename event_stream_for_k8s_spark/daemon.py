@@ -14,7 +14,7 @@ mapped Spark-first:
 
 | reference task | here |
 |---|---|
-| kube watcher + backoff | `K8sWatchSpooler.run_with_reconnect` in a daemon thread, spooling NDJSON that the partition-capable `k8s-events` source serves to executors |
+| kube watcher + backoff | `K8sWatchSpooler.run_with_reconnect` in a daemon thread, spooling NDJSON that the `k8s-events` source reads on the driver, in Spark's source runner, and ships to the JVM with each micro-batch's plan |
 | sled cache + writer | `dedup_within_ttl` (watermark-bounded `dropDuplicatesWithinWatermark`; the checkpointed state store IS the cache db) + foreachBatch NDJSON emit |
 | cache cleaner | watermark state eviction (no separate task needed) |
 | prometheus_exporter | `K8sStreamMetrics` + `ExpositionServer` |
@@ -34,7 +34,10 @@ Env config (reference names kept where they exist):
 Scale note: stdout NDJSON mirrors the reference's emit
 (``tasks.rs:105``); the print point is inherently a single process.
 A micro-batch costs ONE Spark job, a ``collect()`` of its deduped
-rows, and the driver counts the metric labels as it prints them.
+rows, and the driver counts the metric labels as it prints them. Its
+spool lines are read on the driver too (``k8s_datasource``), so the
+job's tasks run no Python: the batch is parsed in one task, and the
+dedup stage after the shuffle keeps its parallelism.
 Driver memory is O(batch), bounded by the source's
 ``maxEventsPerBatch`` / ``maxBytesPerBatch`` options
 (``toLocalIterator`` would hold one partition at a time, but run one

@@ -491,7 +491,6 @@ def source_k8s_watch(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format("k8s-events")
         .option("path", os.path.join(src, "watch.jsonl"))
-        .option("maxeventsperbatch", 10_000_000)
         .load()
     )
     sink = f"k8sw_{abs(hash(sf_dir)) % 10**8}"

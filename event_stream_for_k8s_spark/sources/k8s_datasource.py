@@ -5,33 +5,49 @@ SURVEY.md §2 A1 marks a native k8s source as the stretch goal beyond
 the out-of-band collector. This implements the engine-side contract:
 a replayable, offset-tracked stream of Event JSON lines. The transport
 here tails an NDJSON file (what a sidecar collector or
-``K8sWatchSpooler`` writes); swapping the executor ``read`` body for
-an HTTP list-then-watch against the k8s API (kube-apiserver watch
-bookmarks ARE resume offsets) changes nothing in the Spark-facing
-surface.
+``K8sWatchSpooler`` writes); swapping the file read for an HTTP
+list-then-watch against the k8s API (kube-apiserver watch bookmarks
+ARE resume offsets) changes nothing in the Spark-facing surface.
 
 Offsets are BYTE positions — monotonic, replayable, checkpointable: a
 restart seeks to the committed position and re-reads forward, and the
 downstream watermark dedup absorbs re-delivery exactly like the
 reference's sled state absorbs the startup re-list
-(tasks.rs:159-163).
+(tasks.rs:159-163). Every end offset falls on a line boundary: the
+``maxeventsperbatch`` / ``maxbytesperbatch`` caps count complete lines
+only, and a torn tail stays unclaimed until its newline lands. Spark
+runs ``Trigger.AvailableNow`` over a Python source as one batch, so a
+capped availableNow query serves only the first capped batch.
 
-Scale design (VERDICT r01 "What's wrong" #4): this is a full
-``DataSourceStreamReader``, not a Simple one — the driver only does
-offset arithmetic (stat + a bounded newline probe); line reads happen
-in EXECUTOR tasks, one per byte-range partition
-(``maxbytesperpartition``, TextInputFormat-style split semantics: a
-line belongs to the partition holding its first byte). A fat
-collector file therefore scans in parallel and the driver never
-touches event bytes. The source serves each line as it is, one
-``value`` string per Event; rows cross the Python->JVM boundary as
-Arrow RecordBatches of those lines, and the JSON parse runs on the
-JVM (``k8s_events.parse_events``).
+Driver-side read: the source serves a ``SimpleDataSourceStreamReader``.
+Spark keeps one long-lived Python process per query on the driver to
+answer offset calls; there, ``read(start)`` runs inside
+``latestOffset``, returning the batch's end offset together with its
+lines as one Arrow ``value`` batch. Spark ships that batch to the JVM
+with the partition plan, so a micro-batch's tasks are JVM-only. The
+reference prints each event in-process as it drains its channel
+(tasks.rs:76-105); here a live batch of a few dozen events would
+otherwise pay one executor Python task, ~200-250 ms of fixed cost on a
+4-vCPU host before the read even starts. The trade-off: a batch's lines
+are read by one process and parsed in one task, because the prefetched
+batch is one partition; the dedup stage after the shuffle keeps its
+parallelism. The spool is written by the driver's own watch thread, so
+executors need not see it, except on the restart path: a batch that is
+in the offset log but not committed is replayed through
+``readBetweenOffsets`` in an executor task, since its prefetched lines
+died with the old runner. Spark caches no prefetch for an empty range,
+so a fresh query's first batch over an empty spool also runs one
+(empty) executor read. Each line is served as it is, one ``value``
+string per Event; the JSON parse runs on the JVM
+(``k8s_events.parse_events``).
 """
 
 from __future__ import annotations
 
 import os
+from array import array
+from bisect import bisect_right
+from itertools import accumulate
 
 import pyarrow as pa
 
@@ -39,54 +55,50 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 
-class ByteRange(InputPartition):
-    """[start, end) byte span of the NDJSON file; ``batch_start`` marks
-    the micro-batch's first byte (a known line boundary)."""
-
-    def __init__(self, path: str, start: int, end: int, batch_start: int):
-        self.path = path
-        self.start = start
-        self.end = end
-        self.batch_start = batch_start
+# line bytes per Arrow batch, under the int32 string offsets' limit
+_BATCH_BYTES = 1 << 30
 
 
-class K8sEventsStreamReader(DataSourceStreamReader):
+def _value_batches(lines: list[bytes]) -> list[pa.RecordBatch]:
+    """``lines`` as ``value`` string batches, built from buffers:
+    ``pa.array`` over a Python list imports pandas, ~0.26 s on the
+    first call in each query's fresh runner process. The full
+    validation still fails invalid UTF-8."""
+    ends = list(accumulate(map(len, lines), initial=0))
+    out, lo = [], 0
+    while lo < len(lines):
+        hi = max(lo + 1, bisect_right(ends, ends[lo] + _BATCH_BYTES) - 1)
+        col = pa.StringArray.from_buffers(
+            hi - lo,
+            pa.py_buffer(array("i", (e - ends[lo] for e in ends[lo:hi + 1]))),
+            pa.py_buffer(b"".join(lines[lo:hi])),
+        )
+        col.validate(full=True)
+        out.append(pa.RecordBatch.from_arrays([col], names=["value"]))
+        lo = hi
+    return out
+
+
+class _Spool:
+    """Offset arithmetic and line reads over one NDJSON spool file."""
+
     def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("k8s-events source requires option 'path'")
-        # Cap on lines per micro-batch (collector-rate control). The
-        # driver pays an O(new bytes) newline count only when this cap
-        # is active; with the default (unbounded) it does pure stat math.
+        # Caps on lines / bytes per micro-batch (collector-rate
+        # control). The reader pays an O(new bytes) newline count only
+        # when the line cap is active; otherwise it scans backward from
+        # the cap for the last newline.
         self.max_lines = int(options.get("maxeventsperbatch", 0))
         self.max_bytes = int(options.get("maxbytesperbatch", 0))
-        self.bytes_per_part = int(
-            options.get("maxbytesperpartition", 4 * 1024 * 1024)
-        )
-        # High-water mark of offsets handed to the engine. After a
-        # checkpoint restart it resyncs on the first partitions()/
-        # commit() call (the engine passes the restored offset there).
-        # Until that resync the rate caps are suspended (see
-        # latestOffset): a capped offset computed from byte 0 could
-        # land BELOW the engine's restored offset and make it record a
-        # regressed end / replay committed byte ranges.
-        self._pos = 0
-        self._seeded = False
-
-    # ---- driver side: offset arithmetic only --------------------------
-
-    def initialOffset(self) -> dict:
-        # Only called on a FRESH start (no checkpoint), so pos 0 is the
-        # true start and the rate caps may apply from the first batch.
-        self._seeded = True
-        return {"pos": 0}
 
     def _complete_boundary(self, start: int, cap: int) -> int:
         """Largest byte position in (start, cap] that ends a complete
-        line, found by scanning BACKWARD in bounded chunks — the driver
-        never reads the event payload region linearly."""
+        line, found by scanning BACKWARD in bounded chunks."""
         chunk = 64 * 1024
         with open(self.path, "rb") as f:
             hi = cap
@@ -106,7 +118,8 @@ class K8sEventsStreamReader(DataSourceStreamReader):
         one. Never a mid-line byte: while a collector is appending, the
         torn tail stays unclaimed until its newline lands (otherwise
         the committed offset would split a line — the bytes before it
-        dropped by read(), the bytes after it parsed as corrupt JSON)."""
+        served in one batch, the bytes after it parsed as corrupt
+        JSON in the next)."""
         seen, pos, last = 0, start, start
         chunk = 256 * 1024
         with open(self.path, "rb") as f:
@@ -125,72 +138,82 @@ class K8sEventsStreamReader(DataSourceStreamReader):
                 pos += len(buf)
         return last
 
-    def latestOffset(self) -> dict:
+    def _end(self, start: int) -> int:
+        """End offset of the batch that starts at ``start``: the caps
+        applied, on a line boundary, never below ``start``."""
         try:
             size = os.path.getsize(self.path)
         except OSError:
-            return {"pos": self._pos}
-        cap = size
-        # After a checkpoint restart, initialOffset is skipped and the
-        # engine's restored offset is unknown until partitions()/
-        # commit() — one uncapped poll (complete boundary of the whole
-        # file, monotonic, never below any previously committed offset)
-        # instead of a capped offset that could regress below it.
-        caps_active = self._seeded
-        if self.max_bytes and caps_active:
-            cap = min(cap, self._pos + self.max_bytes)
-        if self.max_lines and caps_active:
-            end = self._nth_line_boundary(self._pos, cap, self.max_lines)
+            return start
+        cap = min(size, start + self.max_bytes) if self.max_bytes else size
+        if self.max_lines:
+            end = self._nth_line_boundary(start, cap, self.max_lines)
         else:
-            end = self._complete_boundary(self._pos, cap)
-        self._pos = max(end, self._pos)
+            end = self._complete_boundary(start, cap)
+        if end == start and cap < size:
+            # a line longer than maxbytesperbatch is served alone
+            # rather than stalling the stream
+            end = self._nth_line_boundary(start, size, 1)
+        return end
+
+    def _batches(self, start: int, end: int) -> list[pa.RecordBatch]:
+        """The complete, non-blank lines of [start, end), without their
+        newlines."""
+        if end <= start:
+            return []
+        try:
+            with open(self.path, "rb") as f:
+                f.seek(start)
+                data = f.read(end - start)
+        except FileNotFoundError:
+            return []
+        # a torn tail (the file cut short under us) is never served
+        data = data[: data.rfind(b"\n") + 1]
+        return _value_batches([ln for ln in data.split(b"\n") if ln.strip()])
+
+
+class K8sEventsSimpleStreamReader(_Spool, SimpleDataSourceStreamReader):
+    """The reader the engine runs: ``read`` on the driver, and
+    ``readBetweenOffsets`` in an executor task only for a batch with no
+    prefetched lines (an uncommitted batch replayed after a restart, or
+    an empty first batch)."""
+
+    def initialOffset(self) -> dict:
+        return {"pos": 0}
+
+    def read(self, start: dict):
+        end = self._end(start["pos"])
+        return iter(self._batches(start["pos"], end)), {"pos": end}
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return iter(self._batches(start["pos"], end["pos"]))
+
+
+class ByteRange(InputPartition):
+    """[start, end) byte span of the spool, on line boundaries."""
+
+    def __init__(self, start: int, end: int):
+        self.start = start
+        self.end = end
+
+
+class K8sEventsStreamReader(_Spool, DataSourceStreamReader):
+    """The same offsets and reads behind the partitioned reader API,
+    one ``ByteRange`` per batch. The engine does not use it;
+    ``perfbench`` times its ``read`` in-process as
+    ``k8s_datasource.read_eps``."""
+
+    _pos = 0
+
+    def latestOffset(self) -> dict:
+        self._pos = self._end(self._pos)
         return {"pos": self._pos}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        s, e = start["pos"], end["pos"]
-        self._pos = max(self._pos, e)
-        self._seeded = True
-        if e <= s:
-            return [ByteRange(self.path, s, s, s)]
-        n = max(1, -(-(e - s) // self.bytes_per_part))
-        step = (e - s) // n
-        cuts = [s + i * step for i in range(n)] + [e]
-        return [
-            ByteRange(self.path, cuts[i], cuts[i + 1], s) for i in range(n)
-        ]
-
-    def commit(self, end: dict) -> None:
-        self._pos = max(self._pos, end["pos"])
-        self._seeded = True
-
-    # ---- executor side: read the byte range's lines ------------------
+        return [ByteRange(start["pos"], end["pos"])]
 
     def read(self, partition: ByteRange):
-        if partition.end <= partition.start or not os.path.exists(
-            partition.path
-        ):
-            return
-        with open(partition.path, "rb") as f:
-            pos = partition.start
-            if pos > partition.batch_start:
-                # TextInputFormat rule: a line belongs to the partition
-                # containing its first byte — skip the partial line the
-                # previous partition will finish.
-                f.seek(pos - 1)
-                f.readline()
-            else:
-                f.seek(pos)
-            lines: list[str] = []
-            while f.tell() < partition.end:
-                ln = f.readline()
-                if not ln or not ln.endswith(b"\n"):
-                    break  # torn tail (excluded by latestOffset anyway)
-                if ln.strip():
-                    lines.append(ln[:-1].decode("utf-8"))
-        if lines:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(lines, pa.string())], names=["value"]
-            )
+        return iter(self._batches(partition.start, partition.end))
 
 
 class K8sEventsDataSource(DataSource):
@@ -203,8 +226,8 @@ class K8sEventsDataSource(DataSource):
     def schema(self) -> str:
         return "value string"
 
-    def streamReader(self, schema) -> K8sEventsStreamReader:
-        return K8sEventsStreamReader(self.options)
+    def simpleStreamReader(self, schema) -> K8sEventsSimpleStreamReader:
+        return K8sEventsSimpleStreamReader(self.options)
 
 
 def register(spark) -> None:

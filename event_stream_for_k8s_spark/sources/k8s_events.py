@@ -115,10 +115,3 @@ def event_struct() -> Column:
         "lastTimestamp",
     )
 
-
-def envelope(df: DataFrame, now_fallback: Column | None = None) -> DataFrame:
-    """A4 envelope: {time, kubernetes_event} (types.rs:10-18)."""
-    return df.select(
-        event_time(now_fallback).alias("time"),
-        event_struct().alias("kubernetes_event"),
-    )

@@ -5,17 +5,17 @@ core/v1 Events, then a WATCH from the list's resourceVersion; on
 reconnect it resumes from the last seen resourceVersion (kube watch
 bookmarks ARE resume offsets). This module reproduces that contract
 with only the stdlib HTTP client and spools the stream to NDJSON —
-one Event JSON object per line — which the partition-capable
-``k8s-events`` Data Source (k8s_datasource.py) then serves to
-executors as byte-range partitions. The Spark-facing surface is
+one Event JSON object per line — which the ``k8s-events`` Data
+Source (k8s_datasource.py) then reads, one micro-batch's byte range
+at a time. The Spark-facing surface is
 IDENTICAL for a file-tailing sidecar and this live transport; only
 the process that appends to the spool differs.
 
 Why spool instead of reading HTTP inside the stream reader: a watch
-is one ordered TCP stream — it cannot be split across executors — but
-a spool file can, and it doubles as the replay log that makes offsets
-deterministic across micro-batch retries (the same property the
-reference gets from sled). At scale one spooler per watched cluster
+is one ordered TCP stream that cannot be re-read, but a spool file
+can: it is the replay log that makes offsets deterministic across
+micro-batch retries and restarts (the same property the reference
+gets from sled). At scale one spooler per watched cluster
 appends to shared storage; Spark's throughput is decoupled from
 apiserver chunk timing.
 

@@ -43,11 +43,6 @@ def dedup_within_ttl(
     ).dropDuplicatesWithinWatermark([key_col])
 
 
-def ndjson(df: DataFrame) -> DataFrame:
-    """A7: one JSON line per surviving event."""
-    return df.select(F.to_json(F.struct(*df.columns)).alias("line"))
-
-
 def batch_metrics(batch_df: DataFrame, key_col: str) -> dict[str, int]:
     """A9: per-batch totals — total drained, unique (misses), dups
     (hits); hits + misses == total, the reference's invariant

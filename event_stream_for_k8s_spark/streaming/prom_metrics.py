@@ -367,8 +367,18 @@ class K8sStreamMetrics:
         the reference's gauge tracks the sled db after TTL eviction
         shrinks it (``src/tasks.rs:210-216``), so a cumulative miss
         count would only ever grow — the state store is the cache db
-        here, and its row count is the honest twin."""
-        progress = query.recentProgress
+        here, and its row count is the honest twin.
+
+        Reads ``lastProgress`` and falls back to the ``recentProgress``
+        ring only on a gap (its id above the floor + 1): each py4j call
+        rebuilds the whole ring, 116-246 ms for 60 entries on a 4-vCPU
+        host against 1-7 ms for the last one."""
+        last = query.lastProgress
+        if last is None:
+            return
+        progress = [last]
+        if last["batchId"] > self._synced + 1:
+            progress = query.recentProgress
         for p in progress:
             if p["batchId"] <= self._synced:
                 continue
@@ -377,7 +387,7 @@ class K8sStreamMetrics:
                 self.sync_received(p["batchId"], int(row["n"]))
         # one store per shuffle partition, one row per resident key
         # (the sled-items analog); only the latest progress counts
-        ops = progress[-1].get("stateOperators") if progress else None
+        ops = progress[-1].get("stateOperators")
         if ops:
             with self._lock:
                 self.size.labels("items").set(

@@ -233,11 +233,22 @@ def test_sync_received_watermark_compaction(caplog):
     assert s[("total",)] == 61
 
 
-def _fake_query(*progress):
-    """A stand-in for a StreamingQuery: progress records are dicts."""
-    from types import SimpleNamespace
+class _FakeQuery:
+    """A stand-in for a StreamingQuery: progress records are dicts;
+    ``ring_reads`` counts the reads of the ``recentProgress`` ring."""
 
-    return SimpleNamespace(recentProgress=list(progress))
+    def __init__(self, *progress):
+        self.progress = list(progress)
+        self.ring_reads = 0
+
+    @property
+    def lastProgress(self):
+        return self.progress[-1] if self.progress else None
+
+    @property
+    def recentProgress(self):
+        self.ring_reads += 1
+        return list(self.progress)
 
 
 # the idle-trigger progress Spark posts during a lull: the NEXT batch's
@@ -251,16 +262,45 @@ def test_idle_progress_does_not_close_the_next_batch():
     changes nothing, and the batch that then runs under that id counts
     all 5 received events (3 staged misses, 2 hits)."""
     m = K8sStreamMetrics()
-    m.sync_from_query(_fake_query(IDLE_2))
+    m.sync_from_query(_FakeQuery(IDLE_2))
     assert m.processed.samples == {}
     m.apply_batch([("Warning", "BackOff", "Pod", "ns", 3)], nbytes=30,
                   total=3, defer_totals_batch_id=2)
-    m.sync_from_query(_fake_query(IDLE_2, BATCH_2))
+    m.sync_from_query(_FakeQuery(IDLE_2, BATCH_2))
     fam = m.processed.samples
     assert fam[("total",)] == 5
     assert fam[("cache_hits",)] == 2
     assert fam[("cache_misses",)] == 3
     assert sum(m.events.samples.values()) == 3
+
+
+def test_sync_reads_the_ring_only_on_a_gap():
+    """Consecutive batches are reconciled from ``lastProgress`` alone;
+    the ``recentProgress`` ring is read once, when the last progress
+    skips past a batch the floor has not reached, and that batch's
+    received count is applied from it."""
+
+    def batch(i, n):
+        return {"batchId": i,
+                "observedMetrics": {RECEIVED_OBSERVATION: {"n": n}}}
+
+    m = K8sStreamMetrics()
+    q = _FakeQuery()
+    m.sync_from_query(q)  # no progress yet
+    for i in range(3):
+        q.progress.append(batch(i, 2))
+        m.sync_from_query(q)
+        m.sync_from_query(q)  # a repeated poll changes nothing
+    q.progress.append({"batchId": 3})  # idle-trigger progress
+    m.sync_from_query(q)
+    assert q.ring_reads == 0
+    assert m.processed.samples[("total",)] == 6
+    q.progress += [batch(3, 4), batch(4, 5)]  # batch 3 went unpolled
+    m.sync_from_query(q)
+    assert q.ring_reads == 1
+    assert m.processed.samples[("total",)] == 15
+    m.sync_from_query(q)
+    assert q.ring_reads == 1
 
 
 def test_deferred_observe_retry_is_fully_idempotent(spark):
@@ -292,14 +332,14 @@ def test_deferred_observe_retry_is_fully_idempotent(spark):
     # the same observe + retry under id 2, polled through idle-trigger
     # progress for that id before and after the batch ran
     m2 = K8sStreamMetrics()
-    m2.sync_from_query(_fake_query(IDLE_2))
+    m2.sync_from_query(_FakeQuery(IDLE_2))
     kw["defer_totals_batch_id"] = 2
     m2.observe_batch(b, **kw)
-    m2.sync_from_query(_fake_query(IDLE_2))
+    m2.sync_from_query(_FakeQuery(IDLE_2))
     m2.observe_batch(b, **kw)
     assert m2.processed.samples == {}
-    for _ in range(2):  # the second poll replays the same ring
-        m2.sync_from_query(_fake_query(IDLE_2, BATCH_2, IDLE_2))
+    for _ in range(2):  # a second poll of the same progress is a no-op
+        m2.sync_from_query(_FakeQuery(IDLE_2, BATCH_2, IDLE_2))
         assert m2.processed.samples == fam
         assert sum(m2.events.samples.values()) == 3
         assert m2.sync_bytes.samples[()] == 31

@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from event_stream_for_k8s_spark.sources.k8s_events import (
-    envelope,
     event_key,
     event_time,
     parse_events,
@@ -19,7 +18,6 @@ from event_stream_for_k8s_spark.sources.k8s_events import (
 )
 from event_stream_for_k8s_spark.streaming.dedup_pipeline import (
     batch_metrics,
-    ndjson,
     run_reference_pipeline,
 )
 from event_stream_for_k8s_spark.streaming.prom_metrics import (
@@ -94,13 +92,19 @@ def test_missing_key_collision_and_batch_dup(spark, k8s_dir):
     assert deduped.count() == 6
 
 
-def test_envelope_shape(spark, k8s_dir):
-    df = read_events_jsonl(spark, k8s_dir, streaming=False)
-    env = envelope(df, F.lit("1970-01-01").cast("timestamp"))
-    assert set(env.columns) == {"time", "kubernetes_event"}
-    lines = ndjson(env).collect()
-    parsed = json.loads(lines[0]["line"])
-    assert "kubernetes_event" in parsed and "time" in parsed
+def test_envelope_shape(spark, k8s_dir, tmp_path):
+    """A7: every line ``run_daemon`` emits is one JSON object holding
+    exactly ``time`` and ``kubernetes_event`` (types.rs:10-18)."""
+    from tests.test_daemon import _drain
+
+    with open(os.path.join(k8s_dir, "events.json")) as f:
+        raw = f.read().splitlines()
+    lines: list[str] = []
+    _drain(spark, tmp_path, raw, emit=lines.append)
+    assert len(lines) == 6  # 8 rows, 6 keys
+    for line in lines:
+        parsed = json.loads(line)
+        assert set(parsed) == {"time", "kubernetes_event"}
 
 
 def test_metrics_invariant(spark, k8s_dir):
@@ -237,53 +241,87 @@ def test_k8s_datasource_offsets_and_batching(spark, k8s_dir, tmp_path):
     assert got.filter(F.col("metadata.uid") == "u5").count() == 2
 
 
-def test_k8s_datasource_partition_split_exactness(spark, tmp_path):
-    """Byte-range partitions with TextInputFormat split semantics must
-    deliver every line exactly once regardless of where cut points land
-    (mid-line, on a newline, at range edges). Tiny maxbytesperpartition
-    forces many splits across varied line lengths."""
-    import time as _t
+def _batch_values(it) -> list[str]:
+    """The ``value`` strings of a reader's Arrow batches."""
+    return [v for b in it for v in b.column("value").to_pylist()]
 
-    from event_stream_for_k8s_spark.sources.k8s_datasource import register
 
-    register(spark)
+def test_k8s_datasource_capped_batch_exactness(spark, tmp_path, monkeypatch):
+    """A tiny ``maxbytesperbatch`` over lines of varied length, some
+    longer than the cap: every batch ends on a line boundary, holds
+    at most the cap's bytes unless it is one over-long line, and every
+    line is delivered exactly once, by the reader and through the
+    engine. A read over one Arrow batch's byte budget is served as
+    several batches."""
+    from event_stream_for_k8s_spark.sources import k8s_datasource
+    from event_stream_for_k8s_spark.sources.k8s_datasource import (
+        K8sEventsSimpleStreamReader,
+        register,
+    )
+
     path = str(tmp_path / "events.json")
-    n = 200
+    n, cap = 10, 256
     with open(path, "w") as f:
         for i in range(n):
-            # line lengths vary so cut points land everywhere
+            # line lengths vary (~110-290 bytes) so cut points land
+            # everywhere, and some lines exceed the cap
             f.write(
                 json.dumps(
                     {
                         "metadata": {"uid": f"u{i}", "resourceVersion": "1"},
                         "type": "Normal",
-                        "reason": "R" + "x" * (i % 37),
+                        "reason": "R" + "x" * (i * 37 % 181),
                         "involvedObject": {"kind": "Pod", "namespace": "d"},
                     }
                 )
                 + "\n"
             )
+    body = open(path, "rb").read()
+    assert max(map(len, body.splitlines(True))) > cap
+    r = K8sEventsSimpleStreamReader({"path": path, "maxbytesperbatch": cap})
+    start, got = r.initialOffset(), []
+    while True:
+        it, end = r.read(start)
+        if end == start:
+            break
+        chunk = body[start["pos"]:end["pos"]]
+        assert chunk.endswith(b"\n")
+        assert len(chunk) <= cap or chunk.count(b"\n") == 1
+        got += _batch_values(it)
+        start = end
+    assert start == {"pos": len(body)}
+    assert got == body.decode().splitlines()
+    monkeypatch.setattr(k8s_datasource, "_BATCH_BYTES", cap)
+    it, end = K8sEventsSimpleStreamReader({"path": path}).read({"pos": 0})
+    batches = list(it)
+    assert end == {"pos": len(body)} and len(batches) > 1
+    assert _batch_values(batches) == got
+
+    register(spark)
     stream = parse_events(
         spark.readStream.format("k8s-events")
         .option("path", path)
-        .option("maxbytesperpartition", 256)
+        .option("maxbytesperbatch", cap)
         .load()
     )
     q = (
         stream.writeStream.format("memory")
-        .queryName("k8s_split_test")
+        .queryName("k8s_capped_test")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    got = [
+    try:
+        q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    uids = [
         r["uid"]
-        for r in spark.table("k8s_split_test").select("metadata.uid").collect()
+        for r in spark.table("k8s_capped_test").select("metadata.uid").collect()
     ]
-    assert sorted(got, key=lambda u: int(u[1:])) == [f"u{i}" for i in range(n)]
-    assert len(set(got)) == n  # no dup, no loss
+    assert sorted(uids, key=lambda u: int(u[1:])) == [f"u{i}" for i in range(n)]
+    assert len(batches) > n // 2  # the cap split the file
 
 
 def test_k8s_http_watch_spooler(spark, tmp_path):
@@ -844,71 +882,167 @@ def test_tws_processor_logic():
 
 
 def test_k8s_datasource_torn_tail_with_line_cap(tmp_path):
-    """With maxeventsperbatch set, latestOffset must never commit an
-    offset inside a torn (non-newline-terminated) line — the common
+    """With maxeventsperbatch set, ``read(start)`` must never end a
+    batch inside a torn (non-newline-terminated) line — the common
     state while a collector is actively appending. A capped boundary
-    that lands past the last newline would drop the torn line's head
+    that lands past the last newline would serve the torn line's head
     and replay its tail as corrupt JSON (ADVICE r02, high)."""
     from event_stream_for_k8s_spark.sources.k8s_datasource import (
-        K8sEventsStreamReader,
+        K8sEventsSimpleStreamReader,
     )
 
     path = str(tmp_path / "torn.json")
     complete = b'{"reason":"a"}\n{"reason":"b"}\n{"reason":"c"}\n'
     with open(path, "wb") as f:
         f.write(complete + b'{"reason":"torn')  # appender mid-write
-    r = K8sEventsStreamReader({"path": path, "maxeventsperbatch": "10"})
-    r.initialOffset()
-    # cap (10) exceeds available newlines (3): boundary must be the
+    r = K8sEventsSimpleStreamReader({"path": path, "maxeventsperbatch": "10"})
+    # cap (10) exceeds available newlines (3): the end must be the
     # last complete line end, not the raw file size
-    assert r.latestOffset() == {"pos": len(complete)}
-    # the appender finishes the line -> next poll claims it
+    it, end = r.read(r.initialOffset())
+    assert end == {"pos": len(complete)}
+    assert _batch_values(it) == ['{"reason":"a"}', '{"reason":"b"}',
+                                 '{"reason":"c"}']
+    # the torn tail alone advances nothing
+    it, same = r.read(end)
+    assert same == end and _batch_values(it) == []
+    # the appender finishes the line -> the next read claims it
     with open(path, "ab") as f:
         f.write(b'"}\n')
-    assert r.latestOffset() == {"pos": os.path.getsize(path)}
+    it, end = r.read(end)
+    assert end == {"pos": os.path.getsize(path)}
+    assert _batch_values(it) == ['{"reason":"torn"}']
     # a range with NO newline at all advances nothing
     path2 = str(tmp_path / "torn2.json")
     with open(path2, "wb") as f:
         f.write(b'{"reason":"never-finished')
-    r2 = K8sEventsStreamReader({"path": path2, "maxeventsperbatch": "5"})
-    r2.initialOffset()
-    assert r2.latestOffset() == {"pos": 0}
+    r2 = K8sEventsSimpleStreamReader({"path": path2, "maxeventsperbatch": "5"})
+    it, end = r2.read({"pos": 0})
+    assert end == {"pos": 0} and _batch_values(it) == []
 
 
 def test_k8s_datasource_restart_never_regresses_offset(tmp_path):
-    """After a checkpoint restart (initialOffset skipped, _pos reset),
-    a capped latestOffset computed from byte 0 could land BELOW the
-    engine's restored offset, recording a regressed range and
-    replaying committed bytes (ADVICE r02, medium). The first
-    post-restart poll must suspend the caps; once the engine reveals
-    its offset via partitions()/commit(), caps re-engage from there."""
+    """After a checkpoint restart Spark hands the reader its restored
+    offset as ``start`` (ADVICE r02, medium: an end computed from byte
+    0 could land below it and replay committed bytes). From a
+    mid-file start the capped reads never end below ``start``, never
+    split a line, serve exactly the lines after it, and a start past a
+    truncated file's end advances nothing."""
     from event_stream_for_k8s_spark.sources.k8s_datasource import (
-        K8sEventsStreamReader,
+        K8sEventsSimpleStreamReader,
     )
 
     path = str(tmp_path / "events.json")
     lines = [b'{"reason":"e%d"}\n' % i for i in range(20)]
     with open(path, "wb") as f:
         f.writelines(lines)
-    size = os.path.getsize(path)
     committed = sum(len(ln) for ln in lines[:12])  # mid-file checkpoint
 
     # fresh reader simulating restart: NO initialOffset call
-    r = K8sEventsStreamReader(
+    r = K8sEventsSimpleStreamReader(
         {"path": path, "maxeventsperbatch": "3", "maxbytesperbatch": "64"}
     )
-    first = r.latestOffset()["pos"]
-    assert first >= committed  # uncapped poll: whole-file boundary
-    assert first == size
-    # engine hands back the restored offset; caps re-engage after
-    r.partitions({"pos": committed}, {"pos": first})
-    # append more lines; now the 3-line cap applies from the high-water
-    with open(path, "ab") as f:
-        f.writelines(b'{"reason":"x%d"}\n' % i for i in range(10))
-    nxt = r.latestOffset()["pos"]
-    assert nxt > size
+    start, got = {"pos": committed}, []
+    with open(path, "ab") as f:  # a torn tail after the complete lines
+        f.write(b'{"reason":"to')
     body = open(path, "rb").read()
-    assert body[size:nxt].count(b"\n") == 3  # line cap active again
+    while True:
+        it, end = r.read(start)
+        assert end["pos"] >= start["pos"]
+        assert body[end["pos"] - 1:end["pos"]] == b"\n"
+        assert body[start["pos"]:end["pos"]].count(b"\n") <= 3
+        if end == start:
+            break
+        got += _batch_values(it)
+        start = end
+    assert start == {"pos": sum(len(ln) for ln in lines)}
+    assert got == [ln[:-1].decode() for ln in lines[12:]]
+    # a start past the end of a truncated file advances nothing
+    with open(path, "wb") as f:
+        f.writelines(lines[:2])
+    it, end = r.read({"pos": committed})
+    assert end == {"pos": committed} and _batch_values(it) == []
+
+
+def _collect_stream(spark, path, ck, seen):
+    """One availableNow run of the raw ``k8s-events`` source over
+    ``path``, appending each batch's (batch id, sorted values)."""
+    from event_stream_for_k8s_spark.sources.k8s_datasource import register
+
+    register(spark)
+    q = (
+        spark.readStream.format("k8s-events").option("path", path).load()
+        .writeStream.foreachBatch(
+            lambda df, i: seen.append(
+                (i, sorted(r[0] for r in df.collect()))
+            )
+        )
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def test_k8s_datasource_replays_uncommitted_batch(spark, tmp_path):
+    """A batch in the offset log but not committed is replayed after a
+    restart (its prefetched lines died with the old driver-side
+    reader): deleting the last ``commits/N`` re-emits exactly that
+    batch's lines, and the next batch starts after them."""
+    path, ck = str(tmp_path / "spool.jsonl"), str(tmp_path / "ck")
+    seen: list = []
+
+    def append(*values):
+        with open(path, "a") as f:
+            f.writelines(v + "\n" for v in values)
+
+    append('{"a":1}', '{"a":2}')
+    _collect_stream(spark, path, ck, seen)
+    append('{"b":1}', "  ", '{"b":2}', '{"b":3}')
+    _collect_stream(spark, path, ck, seen)
+    assert seen == [(0, ['{"a":1}', '{"a":2}']),
+                    (1, ['{"b":1}', '{"b":2}', '{"b":3}'])]
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ck, "commits", name))
+    seen.clear()
+    _collect_stream(spark, path, ck, seen)
+    assert seen == [(1, ['{"b":1}', '{"b":2}', '{"b":3}'])]
+    append('{"c":1}')
+    seen.clear()
+    _collect_stream(spark, path, ck, seen)
+    assert seen == [(2, ['{"c":1}'])]
+
+
+def test_k8s_datasource_invalid_utf8_fails_the_query(spark, tmp_path):
+    """A spool line that is not UTF-8 fails the query; it is never
+    served as a replacement-character string."""
+    from pyspark.errors import StreamingQueryException
+
+    path = str(tmp_path / "spool.jsonl")
+    with open(path, "wb") as f:
+        f.write(b'{"a":1}\n{"a":"\xff\xfe"}\n')
+    with pytest.raises(StreamingQueryException, match="UTF8|UTF-8|utf-8"):
+        _collect_stream(spark, path, str(tmp_path / "ck"), [])
+
+
+def test_k8s_datasource_serves_a_simple_reader():
+    """The source serves a ``SimpleDataSourceStreamReader``, so Spark
+    reads each batch in its driver-side source runner and the batch's
+    tasks run no Python."""
+    from pyspark.sql.datasource import SimpleDataSourceStreamReader
+    from pyspark.sql.datasource_internal import (
+        _SimpleStreamReaderWrapper,
+        _streamReader,
+    )
+    from pyspark.sql.types import StructType
+
+    from event_stream_for_k8s_spark.sources.k8s_datasource import (
+        K8sEventsDataSource,
+    )
+
+    ds = K8sEventsDataSource({"path": "spool.jsonl"})
+    reader = _streamReader(ds, StructType.fromDDL(ds.schema()))
+    assert isinstance(reader, _SimpleStreamReaderWrapper)
+    assert isinstance(reader.simple_reader, SimpleDataSourceStreamReader)
 
 
 def test_k8s_watch_reconnect_410_no_loss(spark, tmp_path):
