@@ -15,9 +15,12 @@ downstream watermark dedup absorbs re-delivery exactly like the
 reference's sled state absorbs the startup re-list
 (tasks.rs:159-163). Every end offset falls on a line boundary: the
 ``maxeventsperbatch`` / ``maxbytesperbatch`` caps count complete lines
-only, and a torn tail stays unclaimed until its newline lands. Spark
-runs ``Trigger.AvailableNow`` over a Python source as one batch, so a
-capped availableNow query serves only the first capped batch.
+only, and a torn tail stays unclaimed until its newline lands. The
+caps bound every batch of a run but its first, which takes every
+complete line: Spark runs ``Trigger.AvailableNow`` over a Python
+source as one batch per run (``SingleBatchExecutor``), so a capped
+first batch would end an availableNow run before it had read what was
+available when it started.
 
 Driver-side read: the source serves a ``SimpleDataSourceStreamReader``.
 Spark keeps one long-lived Python process per query on the driver to
@@ -32,12 +35,17 @@ otherwise pay one executor Python task, ~200-250 ms of fixed cost on a
 are read by one process and parsed in one task, because the prefetched
 batch is one partition; the dedup stage after the shuffle keeps its
 parallelism. The spool is written by the driver's own watch thread, so
-executors need not see it, except on the restart path: a batch that is
-in the offset log but not committed is replayed through
-``readBetweenOffsets`` in an executor task, since its prefetched lines
-died with the old runner. Spark caches no prefetch for an empty range,
-so a fresh query's first batch over an empty spool also runs one
-(empty) executor read. Each line is served as it is, one ``value``
+executors need not see it, except on the restart path. On a restart
+the engine calls ``setLatestSeenOffset`` with the offset log's latest
+end (``PythonMicroBatchStream`` implements ``AcceptsLatestSeenOffset``);
+the JVM forwards it to the runner as a ``partitions`` call whose start
+and end are that offset, and Spark's Simple-reader wrapper takes it as
+the start of the next ``read``, so a restarted run never reads a
+committed byte. A batch that is in the offset log but not committed
+is replayed through ``readBetweenOffsets`` in an executor task, since
+its prefetched lines died with the old runner. Spark caches no
+prefetch for an empty range, so a fresh query's first batch over an
+empty spool also runs one (empty) executor read. Each line is served as it is, one ``value``
 string per Event; the JSON parse runs on the JVM
 (``k8s_events.parse_events``).
 """
@@ -138,15 +146,18 @@ class _Spool:
                 pos += len(buf)
         return last
 
-    def _end(self, start: int) -> int:
+    def _end(self, start: int, capped: bool = True) -> int:
         """End offset of the batch that starts at ``start``: the caps
-        applied, on a line boundary, never below ``start``."""
+        applied if ``capped``, on a line boundary, never below
+        ``start``."""
         try:
             size = os.path.getsize(self.path)
         except OSError:
             return start
-        cap = min(size, start + self.max_bytes) if self.max_bytes else size
-        if self.max_lines:
+        cap = size
+        if capped and self.max_bytes:
+            cap = min(size, start + self.max_bytes)
+        if capped and self.max_lines:
             end = self._nth_line_boundary(start, cap, self.max_lines)
         else:
             end = self._complete_boundary(start, cap)
@@ -176,13 +187,17 @@ class K8sEventsSimpleStreamReader(_Spool, SimpleDataSourceStreamReader):
     """The reader the engine runs: ``read`` on the driver, and
     ``readBetweenOffsets`` in an executor task only for a batch with no
     prefetched lines (an uncommitted batch replayed after a restart, or
-    an empty first batch)."""
+    an empty first batch). One reader serves one run of a query; its
+    first ``read`` is uncapped (see the module docstring)."""
+
+    _first_read = True
 
     def initialOffset(self) -> dict:
         return {"pos": 0}
 
     def read(self, start: dict):
-        end = self._end(start["pos"])
+        end = self._end(start["pos"], capped=not self._first_read)
+        self._first_read = False
         return iter(self._batches(start["pos"], end)), {"pos": end}
 
     def readBetweenOffsets(self, start: dict, end: dict):

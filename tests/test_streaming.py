@@ -208,8 +208,8 @@ def test_observed_metrics_and_state_gauges(spark, k8s_dir, tmp_path):
 
 def test_k8s_datasource_offsets_and_batching(spark, k8s_dir, tmp_path):
     """Custom Python Data Source (A1 stretch): offset-tracked batches —
-    maxeventsperbatch bounds each micro-batch, offsets advance, and the
-    full file is eventually delivered exactly once."""
+    offsets advance under maxeventsperbatch, and the full file is
+    eventually delivered exactly once."""
     import time as _t
 
     from event_stream_for_k8s_spark.sources.k8s_datasource import register
@@ -248,11 +248,11 @@ def _batch_values(it) -> list[str]:
 
 def test_k8s_datasource_capped_batch_exactness(spark, tmp_path, monkeypatch):
     """A tiny ``maxbytesperbatch`` over lines of varied length, some
-    longer than the cap: every batch ends on a line boundary, holds
-    at most the cap's bytes unless it is one over-long line, and every
-    line is delivered exactly once, by the reader and through the
-    engine. A read over one Arrow batch's byte budget is served as
-    several batches."""
+    longer than the cap: after a run's uncapped first read, every
+    batch ends on a line boundary, holds at most the cap's bytes
+    unless it is one over-long line, and every line is delivered
+    exactly once, by the reader and through the engine. A read over
+    one Arrow batch's byte budget is served as several batches."""
     from event_stream_for_k8s_spark.sources import k8s_datasource
     from event_stream_for_k8s_spark.sources.k8s_datasource import (
         K8sEventsSimpleStreamReader,
@@ -261,25 +261,31 @@ def test_k8s_datasource_capped_batch_exactness(spark, tmp_path, monkeypatch):
 
     path = str(tmp_path / "events.json")
     n, cap = 10, 256
-    with open(path, "w") as f:
-        for i in range(n):
-            # line lengths vary (~110-290 bytes) so cut points land
-            # everywhere, and some lines exceed the cap
-            f.write(
-                json.dumps(
-                    {
-                        "metadata": {"uid": f"u{i}", "resourceVersion": "1"},
-                        "type": "Normal",
-                        "reason": "R" + "x" * (i * 37 % 181),
-                        "involvedObject": {"kind": "Pod", "namespace": "d"},
-                    }
+
+    def write(lo, hi):
+        with open(path, "a") as f:
+            for i in range(lo, hi):
+                # line lengths vary (~110-290 bytes) so cut points land
+                # everywhere, and some lines exceed the cap
+                f.write(
+                    json.dumps(
+                        {
+                            "metadata": {"uid": f"u{i}", "resourceVersion": "1"},
+                            "type": "Normal",
+                            "reason": "R" + "x" * (i * 37 % 181),
+                            "involvedObject": {"kind": "Pod", "namespace": "d"},
+                        }
+                    )
+                    + "\n"
                 )
-                + "\n"
-            )
+
+    write(0, 1)
+    r = K8sEventsSimpleStreamReader({"path": path, "maxbytesperbatch": cap})
+    it, start = r.read(r.initialOffset())
+    got = _batch_values(it)
+    write(1, n)
     body = open(path, "rb").read()
     assert max(map(len, body.splitlines(True))) > cap
-    r = K8sEventsSimpleStreamReader({"path": path, "maxbytesperbatch": cap})
-    start, got = r.initialOffset(), []
     while True:
         it, end = r.read(start)
         if end == start:
@@ -298,6 +304,8 @@ def test_k8s_datasource_capped_batch_exactness(spark, tmp_path, monkeypatch):
     assert _batch_values(batches) == got
 
     register(spark)
+    os.rename(path, path + ".all")
+    write(0, 1)
     stream = parse_events(
         spark.readStream.format("k8s-events")
         .option("path", path)
@@ -312,6 +320,8 @@ def test_k8s_datasource_capped_batch_exactness(spark, tmp_path, monkeypatch):
         .start()
     )
     try:
+        q.processAllAvailable()
+        write(1, n)
         q.processAllAvailable()
         batches = [p for p in q.recentProgress if p["numInputRows"]]
     finally:
@@ -924,9 +934,12 @@ def test_k8s_datasource_restart_never_regresses_offset(tmp_path):
     """After a checkpoint restart Spark hands the reader its restored
     offset as ``start`` (ADVICE r02, medium: an end computed from byte
     0 could land below it and replay committed bytes). From a
-    mid-file start the capped reads never end below ``start``, never
-    split a line, serve exactly the lines after it, and a start past a
-    truncated file's end advances nothing."""
+    mid-file start the run's first read takes every complete line
+    after it, the capped reads that follow never end below ``start``,
+    never split a line and serve exactly the lines after it, and a
+    start past a truncated file's end advances nothing.
+    ``test_k8s_datasource_engine_restart_reads_past_committed`` drives
+    the same restart through the engine."""
     from event_stream_for_k8s_spark.sources.k8s_datasource import (
         K8sEventsSimpleStreamReader,
     )
@@ -934,15 +947,19 @@ def test_k8s_datasource_restart_never_regresses_offset(tmp_path):
     path = str(tmp_path / "events.json")
     lines = [b'{"reason":"e%d"}\n' % i for i in range(20)]
     with open(path, "wb") as f:
-        f.writelines(lines)
+        f.writelines(lines[:16])
     committed = sum(len(ln) for ln in lines[:12])  # mid-file checkpoint
 
     # fresh reader simulating restart: NO initialOffset call
     r = K8sEventsSimpleStreamReader(
         {"path": path, "maxeventsperbatch": "3", "maxbytesperbatch": "64"}
     )
-    start, got = {"pos": committed}, []
-    with open(path, "ab") as f:  # a torn tail after the complete lines
+    it, start = r.read({"pos": committed})
+    assert start == {"pos": sum(len(ln) for ln in lines[:16])}
+    got = _batch_values(it)
+    assert got == [ln[:-1].decode() for ln in lines[12:16]]
+    with open(path, "ab") as f:  # then a torn tail after more lines
+        f.writelines(lines[16:])
         f.write(b'{"reason":"to')
     body = open(path, "rb").read()
     while True:
@@ -963,14 +980,15 @@ def test_k8s_datasource_restart_never_regresses_offset(tmp_path):
     assert end == {"pos": committed} and _batch_values(it) == []
 
 
-def _collect_stream(spark, path, ck, seen):
+def _collect_stream(spark, path, ck, seen, **options):
     """One availableNow run of the raw ``k8s-events`` source over
     ``path``, appending each batch's (batch id, sorted values)."""
     from event_stream_for_k8s_spark.sources.k8s_datasource import register
 
     register(spark)
     q = (
-        spark.readStream.format("k8s-events").option("path", path).load()
+        spark.readStream.format("k8s-events").option("path", path)
+        .options(**options).load()
         .writeStream.foreachBatch(
             lambda df, i: seen.append(
                 (i, sorted(r[0] for r in df.collect()))
@@ -1010,6 +1028,107 @@ def test_k8s_datasource_replays_uncommitted_batch(spark, tmp_path):
     seen.clear()
     _collect_stream(spark, path, ck, seen)
     assert seen == [(2, ['{"c":1}'])]
+
+
+def _batch_ends(ck) -> list[int]:
+    """The source's end offset of each batch in a checkpoint's offset
+    log, by batch id."""
+    log = os.path.join(ck, "offsets")
+    ids = sorted(int(n) for n in os.listdir(log) if n.isdigit())
+    return [
+        json.loads(open(os.path.join(log, str(i))).read().splitlines()[-1])[
+            "pos"
+        ]
+        for i in ids
+    ]
+
+
+def test_k8s_datasource_engine_restart_reads_past_committed(spark, tmp_path):
+    """A capped query restarted on its checkpoint after its last batch
+    was committed: the restarted run delivers exactly the lines added
+    since, no batch's end falls below the one before it, and the
+    committed bytes are never read again (they are overwritten with
+    invalid UTF-8, which would fail the query). Batches after a run's
+    first hold at most ``maxeventsperbatch`` lines."""
+    from event_stream_for_k8s_spark.sources.k8s_datasource import register
+
+    register(spark)
+    path, ck = str(tmp_path / "spool.jsonl"), str(tmp_path / "ck")
+    seen: list = []
+
+    def append(lo, hi):
+        with open(path, "a") as f:
+            f.writelines('{"e":%d}\n' % i for i in range(lo, hi))
+
+    def start():
+        return (
+            spark.readStream.format("k8s-events").option("path", path)
+            .option("maxeventsperbatch", 2).load()
+            .writeStream.foreachBatch(
+                lambda df, i: seen.append(
+                    (i, sorted(r[0] for r in df.collect()))
+                )
+            )
+            .option("checkpointLocation", ck)
+            .start()
+        )
+
+    def values(lo, hi):
+        return sorted('{"e":%d}' % i for i in range(lo, hi))
+
+    append(0, 1)
+    q = start()
+    try:
+        q.processAllAvailable()
+        append(1, 6)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    first_run = [v for _, b in seen for v in b]
+    assert sorted(first_run) == values(0, 6)
+    assert all(len(b) <= 2 for _, b in seen[1:])
+    committed = os.path.getsize(path)
+    with open(path, "r+b") as f:  # same length, line ends kept
+        old = f.read().splitlines(True)
+        f.seek(0)
+        f.write(b"".join(b"\xff" * (len(ln) - 1) + b"\n" for ln in old))
+    assert os.path.getsize(path) == committed
+    seen.clear()
+    append(6, 10)
+    q = start()
+    try:
+        q.processAllAvailable()
+        append(10, 13)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(v for _, b in seen for v in b) == values(6, 13)
+    assert seen[0][1] == values(6, 10)  # the run's first batch is uncapped
+    assert all(len(b) <= 2 for _, b in seen[1:])
+    ends = _batch_ends(ck)
+    assert ends == sorted(ends) and ends[-1] == os.path.getsize(path)
+
+
+def test_k8s_datasource_capped_available_now_drains(spark, tmp_path):
+    """Spark runs ``Trigger.AvailableNow`` over a Python source as one
+    batch per run, so the run's first batch ignores the caps: a capped
+    availableNow run serves every line available when it starts, on a
+    fresh checkpoint and on a restart, instead of stopping after the
+    cap."""
+    path, ck = str(tmp_path / "spool.jsonl"), str(tmp_path / "ck")
+    seen: list = []
+
+    def append(lo, hi):
+        with open(path, "a") as f:
+            f.writelines('{"e":%d}\n' % i for i in range(lo, hi))
+
+    for lo in (0, 10):
+        append(lo, lo + 10)
+        _collect_stream(spark, path, ck, seen, maxeventsperbatch=3)
+    assert seen == [
+        (0, sorted('{"e":%d}' % i for i in range(10))),
+        (1, sorted('{"e":%d}' % i for i in range(10, 20))),
+    ]
 
 
 def test_k8s_datasource_invalid_utf8_fails_the_query(spark, tmp_path):
