@@ -37,7 +37,10 @@ A micro-batch costs ONE Spark job, a ``collect()`` of its deduped
 rows, and the driver counts the metric labels as it prints them. Its
 spool lines are read on the driver too (``k8s_datasource``), so the
 job's tasks run no Python: the batch is parsed in one task, and the
-dedup stage after the shuffle keeps its parallelism.
+dedup stage after the shuffle keeps its parallelism. The checkpoint
+(offset log, commit log, one state delta per state partition) is
+written through Hadoop's ``FileSystem`` API (``session.get_spark``),
+so a batch's renames fork no ``readlink`` (SCALING.md §5).
 Driver memory is O(batch), bounded by the source's
 ``maxEventsPerBatch`` / ``maxBytesPerBatch`` options
 (``toLocalIterator`` would hold one partition at a time, but run one

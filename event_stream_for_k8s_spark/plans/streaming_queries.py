@@ -795,6 +795,18 @@ def stream_right_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(joined)
 
 
+def _cdc_src(spark: SparkSession, sf_dir: str) -> str:
+    """events as four ``_write_batches`` files, sliced by a hash of
+    ``event_id`` (total: a NULL id hashes too), so every build replays
+    the same four micro-batches in the same order."""
+    def build(out: str) -> None:
+        base = events_as_micros(spark, sf_dir)
+        slot = F.pmod(F.hash("event_id"), F.lit(4))
+        _write_batches(out, [base.filter(slot == i) for i in range(4)])
+
+    return materialize(spark, sf_dir, "events_stream4_batches", build)
+
+
 @query(
     "stream_cdc_upsert",
     oracle="""
@@ -822,15 +834,7 @@ FROM (
     "per batch)",
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = materialize(
-        spark,
-        sf_dir,
-        "events_stream4_json",
-        lambda out: events_as_micros(spark, sf_dir)
-        .repartition(4)
-        .write.mode("overwrite")
-        .json(out),
-    )
+    src = _cdc_src(spark, sf_dir)
     state = os.path.join(cache_dir(sf_dir, "cdc_state"), "snapshot")
     tmp = state + "_tmp"
     shutil.rmtree(os.path.dirname(state), ignore_errors=True)

@@ -46,6 +46,18 @@ def get_spark(
         "spark.ui.enabled": "false",
         # Keep driver-side results bounded even when tests collect.
         "spark.driver.maxResultSize": "4g",
+        # Streaming offsets, commits and state deltas go through Hadoop's
+        # FileSystem API. The default FileContext manager's rename forks
+        # `readlink` (FileUtil.readLink) wherever libhadoop is absent:
+        # 80 forks per live daemon micro-batch (tools/checkpoint_forks.py),
+        # walCommit 37 -> 10 ms and state commit 428 -> 27 ms per batch.
+        # Same temp-file + rename and FileAlreadyExistsException on a
+        # second write of a log entry (SCALING.md §5). Object-store
+        # checkpoints override this through ``extra_conf``.
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
     }
     if extra_conf:
         conf.update(extra_conf)

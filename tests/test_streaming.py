@@ -1678,3 +1678,30 @@ def test_write_batches_replays_frames_in_order(spark, tmp_path):
     want = [[] if s is None else [s, s + 1, s + 2] for s in starts]
     assert seen[: len(want)] == want
     assert all(not rows for rows in seen[len(want):])
+
+
+def test_cdc_fixture_replays_the_same_batches_on_every_build(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """``stream_cdc_upsert``'s feed is four ``_write_batches`` files, so
+    two fresh builds hold the same rows in the same ``batch_0..3.json``
+    and replay them in the same mtime order, and the four slices
+    together hold every event once."""
+    from pathlib import Path
+
+    from event_stream_for_k8s_spark.plans.streaming_queries import _cdc_src
+    from event_stream_for_k8s_spark.sources import roundtrip
+
+    names = [f"batch_{i}.json" for i in range(4)]
+    builds = []
+    for fresh in ("a", "b"):
+        monkeypatch.setattr(roundtrip, "CACHE_ROOT", str(tmp_path / fresh))
+        out = _cdc_src(spark, sf_dir)
+        files = sorted(f for f in os.listdir(out) if f.endswith(".json"))
+        assert files == names
+        mtimes = [os.stat(os.path.join(out, n)).st_mtime_ns for n in names]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+        builds.append([Path(out, n).read_bytes() for n in names])
+    assert builds[0] == builds[1]
+    lines = [ln for blob in builds[0] for ln in blob.splitlines()]
+    assert len(lines) == roundtrip.events_as_micros(spark, sf_dir).count()
