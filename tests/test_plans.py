@@ -3,6 +3,8 @@ queries scale must not silently regress (SURVEY.md §4.2)."""
 
 from __future__ import annotations
 
+import pytest
+
 from event_stream_for_k8s_spark.plans import REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -628,7 +630,19 @@ def test_shuffle_census_gate(spark):
     )
 
 
-def test_materialize_serializes_concurrent_writers(spark, tmp_path):
+@pytest.fixture
+def _private_cache(tmp_path, monkeypatch):
+    """Point the materialize cache into this test's ``tmp_path``. The
+    shared ``.data_cache`` is keyed by the ``sf_dir`` path, and pytest
+    reuses numbered temp paths once its base temp dir is emptied, so a
+    leftover ``_DONE`` from an earlier run would let ``materialize``
+    return before any writer or lock is exercised."""
+    from event_stream_for_k8s_spark.sources import roundtrip
+
+    monkeypatch.setattr(roundtrip, "CACHE_ROOT", str(tmp_path / "cache"))
+
+
+def test_materialize_serializes_concurrent_writers(spark, tmp_path, _private_cache):
     """Two threads materializing the SAME fixture: exactly one build
     runs (the O_EXCL lock), the loser blocks until _DONE then reuses
     the winner's files — no interleaved overwrite-mode writes
@@ -666,7 +680,7 @@ def test_materialize_serializes_concurrent_writers(spark, tmp_path):
         assert f.read() == "payload"
 
 
-def test_materialize_failed_writer_hands_off(spark, tmp_path):
+def test_materialize_failed_writer_hands_off(spark, tmp_path, _private_cache):
     """If the winning writer RAISES (lock released, no marker), a
     waiting thread takes over the build instead of timing out."""
     import threading
@@ -707,7 +721,7 @@ def test_materialize_failed_writer_hands_off(spark, tmp_path):
         assert f.read() == "recovered"
 
 
-def test_materialize_reclaims_dead_writer_lock(spark, tmp_path):
+def test_materialize_reclaims_dead_writer_lock(spark, tmp_path, _private_cache):
     """A hard-killed writer (SIGKILL/OOM) dies while HOLDING the
     flock; the kernel releases it with the process, so a later caller
     acquires immediately instead of blocking 600 s and raising. (The
@@ -759,7 +773,7 @@ def test_materialize_reclaims_dead_writer_lock(spark, tmp_path):
     assert not os.path.exists(lock)
 
 
-def test_materialize_live_lock_not_reclaimed(spark, tmp_path):
+def test_materialize_live_lock_not_reclaimed(spark, tmp_path, _private_cache):
     """A lock HELD by a live writer is never taken, no matter how
     long it has been held: a waiter polls until the writer's _DONE
     appears. The flock formulation makes stealing structurally
