@@ -14,8 +14,9 @@ mapped Spark-first:
 
 | reference task | here |
 |---|---|
-| kube watcher + backoff | `K8sWatchSpooler.run_with_reconnect` in a daemon thread, spooling NDJSON that the `k8s-events` source reads on the driver, in Spark's source runner, and ships to the JVM with each micro-batch's plan |
-| sled cache + writer | `dedup_within_ttl` (watermark-bounded `dropDuplicatesWithinWatermark`; the checkpointed state store IS the cache db) + foreachBatch NDJSON emit |
+| kube watcher + backoff | `K8sWatchSpooler.run_with_reconnect` in a daemon thread started once the query runs, spooling NDJSON that the `k8s-events` source reads on the driver, in Spark's source runner, and ships to the JVM with each micro-batch's plan |
+| sled cache + writer | `dedup_within_ttl` (watermark-bounded `dropDuplicatesWithinWatermark`; the checkpointed state store IS the cache db) + one foreachBatch sink that prints and counts each batch (emit, then commit: at-least-once, as the reference) |
+| select_all shutdown | the watch thread stops the query when the watch ends (``main.rs:75``) |
 | cache cleaner | watermark state eviction (no separate task needed) |
 | prometheus_exporter | `K8sStreamMetrics` + `ExpositionServer` |
 | SIGTERM/SIGINT handling | `signal` -> `StreamingQuery.stop()` (graceful: the current batch commits, then the query ends) |
@@ -44,10 +45,7 @@ so a batch's renames fork no ``readlink`` (SCALING.md §5).
 Driver memory is O(batch), bounded by the source's
 ``maxEventsPerBatch`` / ``maxBytesPerBatch`` options
 (``toLocalIterator`` would hold one partition at a time, but run one
-job per partition). A cluster deployment passes ``emit=None`` and a
-``sink_dir`` instead: executors write the NDJSON, one Spark aggregate
-computes the metrics, and the batch is cached for the call so the
-stateful dedup plan runs once.
+job per partition).
 """
 
 from __future__ import annotations
@@ -129,36 +127,10 @@ def _keyed_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
     )
 
 
-def _stop_on_watch_exit(state: dict) -> None:
-    """select_all shutdown (main.rs:75), race-free and idempotent:
-    called by the watch thread after it sets ``watch_done`` AND by the
-    starter after it publishes ``query`` — whichever runs second sees
-    both writes, and the ``stop_lock`` makes the stopped test-and-set
-    atomic so exactly ONE caller performs the drain-and-stop (ADVICE
-    r05: the bare check-then-set let both enter and interleave
-    processAllAvailable()/stop()). A bounded watch that completed
-    normally drains the spooled events through the stream before
-    stopping; a fatal exit stops immediately."""
-    q = state.get("query")
-    if q is None or not state["watch_done"].is_set():
-        return
-    with state["stop_lock"]:
-        if state.get("stopped"):
-            return
-        state["stopped"] = True
-    try:
-        if state.get("watch_ok"):
-            q.processAllAvailable()
-        q.stop()
-    except Exception:  # noqa: BLE001 - best-effort teardown
-        pass
-
-
 def run_daemon(
     spark: SparkSession,
     config: DaemonConfig | None = None,
     emit=print,
-    sink_dir: str | None = None,
     available_now: bool = False,
     install_signal_handlers: bool = True,
     spool_max_events: int | None = None,
@@ -168,22 +140,15 @@ def run_daemon(
     ``available_now=True`` gives the bounded batch-catch-up mode
     (tests, replay); the default runs continuously until a signal.
     ``emit`` receives each NDJSON line driver-side (the reference's
-    stdout contract); pass ``emit=None`` with ``sink_dir`` to write
-    NDJSON from executors instead (the cluster deployment shape).
+    stdout contract); with ``emit=None`` each batch is still counted,
+    and nothing is printed. In continuous mode with ``KES_API_URL`` the
+    watch thread starts once the query has started, and it stops the
+    query when the watch ends: after draining the spool if the watch
+    ended normally (a ``spool_max_events`` bound), at once if it died.
     """
     cfg = config or DaemonConfig()
     os.makedirs(cfg.spool_dir, exist_ok=True)
     spool_path = os.path.join(cfg.spool_dir, "watch.jsonl")
-    # set after the query starts; the continuous-mode watch thread
-    # reads it to shut the daemon down if the watch loop dies
-    _daemon_state: dict = {
-        "query": None,
-        "watch_done": threading.Event(),
-        "watch_ok": False,
-        "stopped": False,
-        "stop_lock": threading.Lock(),
-    }
-    watch_thread: threading.Thread | None = None
 
     if cfg.api_url:
         from event_stream_for_k8s_spark.sources.k8s_watch_http import (
@@ -218,52 +183,11 @@ def run_daemon(
                         f"{spool_max_events} events within 120s; "
                         "raise the timeout or lower the bound"
                     )
-        else:
-            # main.rs:75 parity (select_all): when ANY task ends, the
-            # whole daemon shuts down. If the watch loop dies — a
-            # fatal 401/403/404 raises out of run_with_reconnect — the
-            # query must stop too, not keep running against a spool
-            # that will never grow again. A bounded watch that ends
-            # NORMALLY first drains the spooled events through the
-            # stream before stopping (the available_now path gets the
-            # same guarantee by joining the spooler pre-start).
-            # Handoff is race-free: the thread SETS watch_done before
-            # reading the query slot, the starter PUBLISHES the query
-            # before checking watch_done — whichever side loses the
-            # race still observes the other's write (_stop_on_watch_
-            # exit is idempotent).
-            def _spool_loop() -> None:
-                ok = False
-                try:
-                    spooler.run_with_reconnect(max_events=spool_max_events)
-                    ok = True
-                except Exception:  # noqa: BLE001 - shutdown IS the handling
-                    # the watch module already logged the specific
-                    # failure; stopping the daemon below is the
-                    # select_all response, so don't re-raise into an
-                    # unhandlable thread exception
-                    log.exception("watch loop died; stopping the daemon")
-                finally:
-                    _daemon_state["watch_ok"] = ok
-                    _daemon_state["watch_done"].set()
-                    _stop_on_watch_exit(_daemon_state)
-
-            watch_thread = threading.Thread(
-                target=_spool_loop,
-                daemon=True,
-                name="kes-watch-spooler",
-            )
-            watch_thread.start()
     elif not os.path.exists(spool_path):
         # file-tail mode: the collector appends; start from empty
         open(spool_path, "a").close()
 
     metrics = K8sStreamMetrics()
-    server = ExpositionServer(
-        metrics.registry, port=cfg.metrics_port, host=cfg.metrics_host
-    )
-    server.start()
-
     # `total`/`cache_hits` count EVERY received event (duplicates
     # included, tasks.rs:132-140), so the received count is observed
     # PRE-dedup; the post-dedup sink records the misses and the two
@@ -288,7 +212,8 @@ def run_daemon(
         ).collect()
         tally: Counter = Counter()
         for r in rows:
-            emit(r[0])
+            if emit is not None:
+                emit(r[0])
             tally[r[1:5]] += 1
         metrics.apply_batch(
             [(*lbl, n) for lbl, n in tally.items()],
@@ -297,49 +222,46 @@ def run_daemon(
             defer_totals_batch_id=batch_id,
         )
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        # the foreachBatch frame re-runs the stateful dedup plan on
-        # every action, so when the executor write is a second
-        # consumer the frame is cached for the call (Spark's documented
-        # foreachBatch multi-consumer pattern)
-        shared = sink_dir is not None
-        if shared:
-            batch.persist()
-        try:
-            if emit is not None:
-                emit_and_count(batch, batch_id)
-            else:
-                # rows never reach the driver: count them on executors
-                metrics.observe_batch(
-                    batch,
-                    key_col="k",
-                    order_cols=("time",),
-                    type_col="etype",
-                    reason_col="ereason",
-                    kind_col="ekind",
-                    namespace_col="ens",
-                    defer_totals_batch_id=batch_id,
-                )
-            if shared:
-                batch.select(line).write.mode("append").text(sink_dir)
-        finally:
-            if shared:
-                batch.unpersist()
-
     writer = (
-        deduped.writeStream.foreachBatch(sink)
+        deduped.writeStream.foreachBatch(emit_and_count)
         .option("checkpointLocation", cfg.cache_db)
         .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    _daemon_state["query"] = query
-    if _daemon_state["watch_done"].is_set():
-        # the watch loop ended before the query was published (e.g. a
-        # fatal auth error on the first connect) — don't zombie; the
-        # helper is idempotent with the thread's own call
-        _stop_on_watch_exit(_daemon_state)
+    server = ExpositionServer(
+        metrics.registry, port=cfg.metrics_port, host=cfg.metrics_host
+    )
+    server.start()
+    try:
+        query = writer.start()
+    except Exception:
+        server.stop()
+        raise
+
+    if cfg.api_url and not available_now:
+        # main.rs:75 parity (select_all): when ANY task ends, the
+        # whole daemon shuts down. If the watch loop dies (a fatal
+        # 401/403/404 raises out of run_with_reconnect), the query
+        # stops too, not left running against a spool that will never
+        # grow again. A bounded watch that ends NORMALLY first drains
+        # the spooled events through the stream.
+        def _spool_loop() -> None:
+            try:
+                try:
+                    spooler.run_with_reconnect(max_events=spool_max_events)
+                except Exception:  # noqa: BLE001 - shutdown IS the handling
+                    # the watch module already logged the failure
+                    log.exception("watch loop died; stopping the daemon")
+                else:
+                    query.processAllAvailable()
+                query.stop()
+            except Exception:  # noqa: BLE001 - best-effort teardown
+                pass
+
+        threading.Thread(
+            target=_spool_loop, daemon=True, name="kes-watch-spooler"
+        ).start()
 
     # received-count reconciliation: progress (with the received-count
     # observation) is emitted after each batch commits; a light poll

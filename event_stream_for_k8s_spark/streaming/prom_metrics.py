@@ -21,14 +21,15 @@ free metric registry (counters/gauges + text exposition rendering), a
 ``foreachBatch`` observer that computes the per-batch increments as
 Spark aggregates (label-cardinality-bounded collect — the only rows
 that reach the driver are the per-label-combination counts, never
-events), and a stdlib HTTP endpoint serving ``GET /metrics``. At
-cluster scale the observer's one SQL execution per batch runs on
-executors and the registry lives on the driver, which is exactly
-where a scrape endpoint must live; for multi-query deployments attach
-one observer per query and serve one registry. The daemon's stdout
-mode skips that execution: its rows already come to the driver to be
-printed, so it counts the labels there as it prints them and hands
-the tally to the same accounting (``apply_batch``).
+events), and a stdlib HTTP endpoint serving ``GET /metrics``. The
+observer (``observe_batch``, used by the ``prom_k8s_exposition``
+registry query) runs one SQL execution per batch on executors, while
+the registry lives on the driver, which is exactly where a scrape
+endpoint must live; for multi-query deployments attach one observer
+per query and serve one registry. The daemon does not run the
+observer: its rows already come to the driver to be printed, so it
+counts the labels there as it prints them and hands the tally to the
+same accounting (``apply_batch``).
 
 Cache seen-ness here is batch-local (first occurrence of a key inside
 the micro-batch = miss): the CROSS-batch state belongs to the dedup
@@ -215,10 +216,6 @@ class K8sStreamMetrics:
         batch_df: DataFrame,
         key_col: str,
         order_cols: tuple[str, ...],
-        type_col: str = "type",
-        reason_col: str = "reason",
-        kind_col: str = "kind",
-        namespace_col: str = "namespace",
         defer_totals_batch_id: int | None = None,
     ) -> int:
         """Apply one micro-batch's increments; returns the miss count.
@@ -226,7 +223,8 @@ class K8sStreamMetrics:
         ``key_col`` is the A5 dedup key; a batch row is a cache MISS
         iff it is the first occurrence of its key in
         ``order_cols``-order (see module docstring on batch-local
-        seen-ness). Misses drive the 4-dim counter (with the
+        seen-ness). The labels are read from the fixed columns
+        ``type``, ``reason``, ``kind`` and ``namespace``. Misses drive the 4-dim counter (with the
         reference's ``'-'`` label defaults), the hit/miss/total
         counters, and the sync-bytes/cache-size accounting (key bytes
         + the 8-byte u64 seen-timestamp sled stores per key,
@@ -244,12 +242,10 @@ class K8sStreamMetrics:
         :meth:`sync_from_query`.
         """
         order_struct = F.struct(*[F.col(c) for c in order_cols])
-        label_struct = F.struct(
-            F.coalesce(type_col, F.lit("-")).alias("l0"),
-            F.coalesce(reason_col, F.lit("-")).alias("l1"),
-            F.coalesce(kind_col, F.lit("-")).alias("l2"),
-            F.coalesce(namespace_col, F.lit("-")).alias("l3"),
-        )
+        label_struct = F.struct(*(
+            F.coalesce(c, F.lit("-")).alias(f"l{i}")
+            for i, c in enumerate(("type", "reason", "kind", "namespace"))
+        ))
         per_key = batch_df.groupBy(key_col).agg(
             F.count("*").alias("_rows"),
             F.min_by(label_struct, order_struct).alias("_lbl"),

@@ -33,9 +33,9 @@ def _event(uid, rv, reason, ns):
     }
 
 
-def test_daemon_end_to_end(spark, tmp_path):
-    # LIST returns u1,u2; WATCH redelivers u2 (same uid:rv -> dedup
-    # must drop it) and adds u3
+def _fake_apiserver():
+    """A local HTTP apiserver: LIST returns u1,u2; WATCH redelivers u2
+    (same uid:rv -> dedup must drop it) and adds u3, then ends."""
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):
             pass
@@ -66,7 +66,11 @@ def test_daemon_end_to_end(spark, tmp_path):
 
     srv = HTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv
 
+
+def test_daemon_end_to_end(spark, tmp_path):
+    srv = _fake_apiserver()
     cfg = DaemonConfig(
         env={
             "CACHE_TTL": "3600",
@@ -77,13 +81,11 @@ def test_daemon_end_to_end(spark, tmp_path):
         }
     )
     lines: list[str] = []
-    sink_dir = str(tmp_path / "ndjson_out")
     try:
         query, metrics, mserver = run_daemon(
             spark,
             cfg,
             emit=lines.append,
-            sink_dir=sink_dir,
             available_now=True,
             spool_max_events=4,
         )
@@ -121,9 +123,6 @@ def test_daemon_end_to_end(spark, tmp_path):
                 == o["kubernetes_event"]["involvedObject"]["namespace"]
                 for o in objs
             )
-            # the executor-side NDJSON sink got the same 3 lines
-            sunk = spark.read.text(sink_dir).count()
-            assert sunk == 3
             # reference writer semantics (tasks.rs:132-140): total
             # counts every RECEIVED event (4, duplicates included);
             # the u2 redelivery the dedup state absorbed is a hit
@@ -383,42 +382,80 @@ def test_daemon_stops_when_watch_dies_fatally(spark, tmp_path):
         srv.server_close()
 
 
-def test_daemon_executor_sink_only(spark, tmp_path):
-    """The cluster deployment shape: emit=None + sink_dir — NDJSON is
-    written from executors, nothing streams through the driver."""
-    import os
+def test_daemon_bounded_watch_drains_then_stops(spark, tmp_path):
+    """Continuous mode with a ``spool_max_events`` bound: once the
+    watch has spooled that many events, the daemon drains them through
+    the stream and stops itself, without error. Every unique event is
+    emitted once, and total/cache_hits count the redelivery."""
+    import time
 
+    srv = _fake_apiserver()
     cfg = DaemonConfig(
         env={
             "CACHE_TTL": "3600",
             "CACHE_DB": str(tmp_path / "ck"),
             "KES_SPOOL": str(tmp_path / "spool"),
+            "KES_API_URL": f"http://127.0.0.1:{srv.server_port}",
             "METRICS_PORT": "0",
         }
     )
-    os.makedirs(cfg.spool_dir, exist_ok=True)
-    with open(os.path.join(cfg.spool_dir, "watch.jsonl"), "w") as f:
-        for uid in ("a", "b", "a"):  # one duplicate
-            f.write(json.dumps(_event(uid, 1, "BackOff", "ns")) + "\n")
-    sink_dir = str(tmp_path / "out")
-    query, metrics, mserver = run_daemon(
-        spark, cfg, emit=None, sink_dir=sink_dir, available_now=True
-    )
-    query.awaitTermination()
-    mserver.stop()
-    lines = [json.loads(r["value"])
-             for r in spark.read.text(sink_dir).collect()]
-    assert {ln["kubernetes_event"]["metadata"]["uid"]
-            for ln in lines} == {"a", "b"}
-    assert len(lines) == 2
+    lines: list[str] = []
+    try:
+        query, metrics, mserver = run_daemon(
+            spark, cfg, emit=lines.append, available_now=False,
+            install_signal_handlers=False, spool_max_events=4,
+        )
+        try:
+            deadline = time.time() + 60
+            while time.time() < deadline and query.isActive:
+                time.sleep(0.5)
+            assert not query.isActive
+            assert query.exception() is None
+        finally:
+            mserver.stop()
+            if query.isActive:
+                query.stop()
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    uids = sorted(json.loads(ln)["kubernetes_event"]["metadata"]["uid"]
+                  for ln in lines)
+    assert uids == ["u1", "u2", "u3"]
     metrics.sync_from_query(query)
-    s = metrics.processed.samples
-    assert s[("total",)] == 3
+    s = m_samples(metrics)
+    assert s[("total",)] == 4
     assert s[("cache_hits",)] == 1
-    assert s[("cache_misses",)] == 2
+    assert s[("cache_misses",)] == 3
 
 
-def _drain(spark, root, events, emit, sink_dir=None):
+def test_daemon_failed_start_stops_metrics_server(spark, tmp_path):
+    """When the query cannot start (its checkpoint directory lies under
+    a regular file), ``run_daemon`` raises and leaves no exposition
+    server listening on the metrics port."""
+    import socket
+
+    import pytest as _pytest
+
+    (tmp_path / "file").write_text("")
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    cfg = DaemonConfig(
+        env={
+            "CACHE_DB": str(tmp_path / "file" / "ck"),
+            "KES_SPOOL": str(tmp_path / "spool"),
+            "METRICS_PORT": str(port),
+            "METRICS_HOST": "127.0.0.1",
+        }
+    )
+    with _pytest.raises(Exception):
+        run_daemon(spark, cfg, emit=None, available_now=False,
+                   install_signal_handlers=False)
+    with _pytest.raises(ConnectionRefusedError):
+        socket.create_connection(("127.0.0.1", port), timeout=5).close()
+
+
+def _drain(spark, root, events, emit):
     """Bounded file-tail drain of ``events`` (dicts, or raw line
     strings) through ``run_daemon`` from an empty checkpoint; returns
     (query, metrics)."""
@@ -437,7 +474,7 @@ def _drain(spark, root, events, emit, sink_dir=None):
         for ev in events:  # a str is written as the raw line
             f.write((ev if isinstance(ev, str) else json.dumps(ev)) + "\n")
     query, metrics, mserver = run_daemon(
-        spark, cfg, emit=emit, sink_dir=sink_dir, available_now=True,
+        spark, cfg, emit=emit, available_now=True,
         install_signal_handlers=False,
     )
     try:
@@ -599,10 +636,17 @@ def test_daemon_emit_runs_one_job_per_batch(spark, tmp_path):
 
 def test_daemon_driver_tally_matches_observe_batch(spark, tmp_path,
                                                    monkeypatch):
-    """For a batch of unique keys, the emit-mode sink's driver tally
-    stages exactly what ``observe_batch`` (the executor-sink mode's
-    Spark aggregate) stages: the same per-label counts and byte
-    totals, for the same batch id."""
+    """For a batch of unique keys, the daemon sink's driver tally
+    stages exactly what ``observe_batch`` (the Spark aggregate) stages
+    over the same events as a static frame: the same per-label counts
+    and byte totals, for the same batch id."""
+    from pyspark.sql import functions as F
+
+    from event_stream_for_k8s_spark.sources.k8s_events import (
+        event_key,
+        event_time,
+        read_events_jsonl,
+    )
     from event_stream_for_k8s_spark.streaming.prom_metrics import (
         K8sStreamMetrics,
     )
@@ -633,8 +677,20 @@ def test_daemon_driver_tally_matches_observe_batch(spark, tmp_path,
     lines: list[str] = []
     _drain(spark, tmp_path / "emit", events, lines.append)
     assert len(lines) == len(events)
-    _drain(spark, tmp_path / "sink", events, None,
-           sink_dir=str(tmp_path / "out"))
+    frame = read_events_jsonl(
+        spark, str(tmp_path / "emit" / "spool" / "watch.jsonl"),
+        streaming=False,
+    ).select(
+        event_key().alias("k"),
+        event_time().alias("time"),
+        "type",
+        "reason",
+        F.col("involvedObject.kind").alias("kind"),
+        F.col("involvedObject.namespace").alias("namespace"),
+    )
+    K8sStreamMetrics().observe_batch(
+        frame, "k", ("time",), defer_totals_batch_id=staged[0][0]
+    )
     assert len(staged) == 2
     assert staged[0] == staged[1]
     assert staged[0][1][0] == ("-", "-", "-", "-", 1)

@@ -557,8 +557,6 @@ def test_prom_counters_monotone_under_replay(spark, tmp_path):
     def sink(batch_df, batch_id):
         m.observe_batch(
             batch_df, key_col="dedup_key", order_cols=("time",),
-            type_col="type", reason_col="reason",
-            kind_col="kind", namespace_col="namespace",
             defer_totals_batch_id=batch_id,
         )
         snapshot()

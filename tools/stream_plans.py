@@ -3,6 +3,7 @@
 
     python tools/stream_plans.py --sf SF_DIR --tag after stream_dedup_ttl ...
     python tools/stream_plans.py --sf SF_DIR --tag before --out DIR ...
+    python tools/stream_plans.py --sf SF_DIR --tag after daemon
 
 ``tools/explain.py`` shows only the batch DataFrame a streaming query
 returns (a memory-sink scan). This tool records every
@@ -12,7 +13,11 @@ writes the plan of each query's last micro-batch
 Run-specific noise is normalised so two checkouts' dumps diff clean:
 expression ids (``#N``), ``plan_id=N``, ``@hash`` object ids, run and
 query UUIDs, the checkout root, temp/checkpoint paths and a batch's
-processing-time stamp.
+processing-time stamp (epoch milliseconds, or a timestamp literal).
+
+The name ``daemon`` is not a registry query: it drains a small seeded
+spool (``perfbench/gen.py spool --seed 3``) through a file-tail
+``run_daemon(available_now=True)`` and dumps that query's plan.
 """
 
 from __future__ import annotations
@@ -20,7 +25,9 @@ from __future__ import annotations
 import argparse
 import os
 import re
+import subprocess
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -49,15 +56,55 @@ def _clock(m: re.Match) -> str:
     return "<now_ms>" if near else m.group(0)
 
 
+def _clock_ts(m: re.Match) -> str:
+    # the batch's current_timestamp() folded to a literal (the daemon's
+    # event-time fallback), in the session's local time zone
+    t = time.mktime(time.strptime(m.group(1), "%Y-%m-%d %H:%M:%S"))
+    return "<now_ts>" if abs(t - time.time()) < 86_400 else m.group(0)
+
+
 def normalise(text: str) -> str:
     for rx, sub in _NORMALISE:
         text = rx.sub(sub, text)
+    text = re.sub(r"\b(\d{4}-\d\d-\d\d \d\d:\d\d:\d\d)(\.\d+)?", _clock_ts,
+                  text)
     return re.sub(r"\b\d{13}\b", _clock, text)
+
+
+def _daemon_drain(spark) -> None:
+    """A file-tail ``run_daemon(available_now=True)`` drain of a seeded
+    500-event spool, from an empty checkpoint."""
+    from event_stream_for_k8s_spark.daemon import DaemonConfig, run_daemon
+
+    work = tempfile.mkdtemp(prefix="stream_plans_daemon_")
+    spool = os.path.join(work, "spool")
+    os.makedirs(spool)
+    subprocess.run(
+        [sys.executable, os.path.join(ROOT, "perfbench", "gen.py"), "spool",
+         "--seed", "3", "--events", "500",
+         "--out", os.path.join(spool, "watch.jsonl")],
+        check=True,
+    )
+    cfg = DaemonConfig(env={
+        "CACHE_DB": os.path.join(work, "ck"),
+        "KES_SPOOL": spool,
+        "METRICS_PORT": "0",
+        "METRICS_HOST": "127.0.0.1",
+    })
+    query, _, server = run_daemon(
+        spark, cfg, emit=lambda line: None, available_now=True,
+        install_signal_handlers=False,
+    )
+    try:
+        query.awaitTermination()
+    finally:
+        server.stop()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+", help="registered query names")
+    ap.add_argument("names", nargs="+",
+                    help="registered query names, or daemon")
     ap.add_argument("--sf", required=True, help="scale-factor data dir")
     ap.add_argument("--tag", required=True, help="file suffix")
     ap.add_argument("--out", default=os.path.join(ROOT, "plans", "r17"))
@@ -80,7 +127,10 @@ def main() -> None:
     os.makedirs(args.out, exist_ok=True)
     for name in args.names:
         started.clear()
-        REGISTRY[name].spark(spark, args.sf).collect()
+        if name == "daemon":
+            _daemon_drain(spark)
+        else:
+            REGISTRY[name].spark(spark, args.sf).collect()
         text = "\n".join(
             normalise(sq._jsq.explainInternal(False)) for sq in started
         )
