@@ -42,8 +42,11 @@ dedup stage after the shuffle keeps its parallelism. The checkpoint
 (offset log, commit log, one state delta per state partition) is
 written through Hadoop's ``FileSystem`` API (``session.get_spark``),
 so a batch's renames fork no ``readlink`` (SCALING.md §5).
-Driver memory is O(batch), bounded by the source's
-``maxEventsPerBatch`` / ``maxBytesPerBatch`` options
+Driver memory is O(batch), and a batch is what the spool grew by since
+the last trigger. Nothing caps it: ``_keyed_stream`` sets neither of
+the source's ``maxEventsPerBatch`` / ``maxBytesPerBatch`` options, and
+the source leaves its first read of each run uncapped anyway, so a
+run's first batch takes the whole backlog it finds in the spool
 (``toLocalIterator`` would hold one partition at a time, but run one
 job per partition).
 """

@@ -1304,6 +1304,42 @@ def llm_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _token_hashes(d: DataFrame) -> DataFrame:
+    """(tok, doc_id, pos, th): every space-split token of each doc
+    with its position and ``token_hash``. The DISTINCT vocabulary is
+    hashed once (natural-language vocab is tiny relative to the
+    corpus — Zipf) and joined back onto the token positions; hashing
+    every occurrence with interpreted per-char lambdas
+    (functions.text.fingerprint_minhash3) is ~60x slower at sf0.1 and
+    quadratically worse at 100 TB, for identical output."""
+    from event_stream_for_k8s_spark.functions.text import token_hash
+
+    toks = d.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+    )
+    vocab = (
+        toks.select("tok")
+        .distinct()
+        .withColumn("th", token_hash(F.col("tok")))
+    )
+    # No forced broadcast hint: vocab is Zipf-small so AQE converts
+    # this to a broadcast-hash join at runtime in the common case, but
+    # at 100 TB of multilingual crawl the distinct-token set can exceed
+    # broadcast limits — a forced hint would then FAIL the job instead
+    # of degrading to a shuffle join (VERDICT r14 wrong #2).
+    return toks.join(vocab, "tok")
+
+
+def _token_hash_arrays(d: DataFrame, name: str) -> DataFrame:
+    """(doc_id, <name>): each doc's token hashes in position order."""
+    return _token_hashes(d).groupBy("doc_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "th"))),
+            lambda x: x.th,
+        ).alias(name)
+    )
+
+
 @query(
     "llm_dedup_chunks",
     oracle=f"""
@@ -1361,23 +1397,7 @@ FROM counted GROUP BY doc_id
     "never per-occurrence per-char Python)",
 )
 def llm_dedup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from event_stream_for_k8s_spark.functions.text import token_hash
-
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    vocab = (
-        toks.select("tok")
-        .distinct()
-        .withColumn("th", token_hash(F.col("tok")))
-    )
-    # No forced broadcast hint: vocab is Zipf-small so AQE converts
-    # this to a broadcast-hash join at runtime in the common case, but
-    # at 100 TB of multilingual crawl the distinct-token set can exceed
-    # broadcast limits — a forced hint would then FAIL the job instead
-    # of degrading to a shuffle join (VERDICT r14 wrong #2).
-    hashed = toks.join(vocab, "tok")
+    hashed = _token_hashes(load(spark, sf_dir, "documents"))
     w = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -1501,31 +1521,9 @@ def llm_dedup_chunks_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from event_stream_for_k8s_spark.functions.text import token_hash
+    perdoc = _token_hash_arrays(load(spark, sf_dir, "documents"), "hs")
 
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    vocab = (
-        toks.select("tok")
-        .distinct()
-        .withColumn("th", token_hash(F.col("tok")))
-    )
-    # No forced broadcast hint: vocab is Zipf-small so AQE converts
-    # this to a broadcast-hash join at runtime in the common case, but
-    # at 100 TB of multilingual crawl the distinct-token set can exceed
-    # broadcast limits — a forced hint would then FAIL the job instead
-    # of degrading to a shuffle join (VERDICT r14 wrong #2).
-    hashed = toks.join(vocab, "tok")
-    perdoc = hashed.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "th"))),
-            lambda x: x.th,
-        ).alias("hs")
-    )
-
-    cmin, cavg, cmax = CDC_MIN, CDC_AVG, CDC_MAX
+    cmin, cavg, cmax, mod = CDC_MIN, CDC_AVG, CDC_MAX, MOD
     strict, loose = CDC_STRICT, CDC_LOOSE
 
     def chunks(it):
@@ -1554,7 +1552,7 @@ def llm_dedup_chunks_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
                         b = hi - 1  # forced: MAX reached or doc end
                     sig = 0
                     for x in h[s : b + 1]:
-                        sig = (sig * 31 + int(x)) % MOD
+                        sig = (sig * 31 + int(x)) % mod
                     ids.append(doc_id)
                     cids.append(cid)
                     sigs.append(sig)
@@ -1616,30 +1614,7 @@ FROM hashed
     "window hashes), all int64 arithmetic — exact on both engines",
 )
 def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Hash the DISTINCT vocabulary once (natural-language vocab is tiny
-    # relative to the corpus — Zipf), broadcast the token->hash map back
-    # onto token positions, then take the rolling-window min per doc.
-    # The naive form (functions.text.fingerprint_minhash3) re-hashes
-    # every occurrence with interpreted per-char lambdas: ~60x slower
-    # at sf0.1 and quadratically worse at 100 TB. Identical output.
-    from event_stream_for_k8s_spark.functions.text import token_hash
-
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    vocab = toks.select("tok").distinct().withColumn("th", token_hash(F.col("tok")))
-    # No forced broadcast hint: vocab is Zipf-small so AQE converts
-    # this to a broadcast-hash join at runtime in the common case, but
-    # at 100 TB of multilingual crawl the distinct-token set can exceed
-    # broadcast limits — a forced hint would then FAIL the job instead
-    # of degrading to a shuffle join (VERDICT r14 wrong #2).
-    hashed = toks.join(vocab, "tok")
-    arrays = hashed.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "th"))), lambda x: x.th
-        ).alias("h")
-    )
+    arrays = _token_hash_arrays(load(spark, sf_dir, "documents"), "h")
     h = F.col("h")
     windows = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(h) - 3, F.lit(0))),
@@ -2896,25 +2871,9 @@ def llm_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_media,
     )
 
-    d = load(spark, sf_dir, "documents")
-    # non-printable/non-ASCII chars map to '?' BEFORE padding so one
-    # char is exactly one pixel byte — without this, a multi-byte
-    # character inflates the encoded block past 16x16x3 and the pixel
-    # math (and the codepoint-indexed oracle) silently shifts
-    body = F.rpad(
-        F.regexp_replace(
-            F.substring("text", 1, 768), r"[^\x20-\x7e]", "?"
-        ),
-        768,
-        " ",
+    return resize_media(
+        _ppm16(load(spark, sf_dir, "documents")), out_w=8, out_h=8
     )
-    ppm = d.select(
-        "doc_id",
-        F.encode(
-            F.concat(F.lit("P6\n16 16\n255\n"), body), "UTF-8"
-        ).alias("payload"),
-    )
-    return resize_media(ppm, out_w=8, out_h=8)
 
 
 @query(
@@ -2964,14 +2923,7 @@ def llm_mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents")
-    body = F.rpad(
-        F.regexp_replace(
-            F.substring("text", 1, 768), r"[^\x20-\x7e]", "?"
-        ),
-        768,
-        " ",
-    )
-    src = d.select("doc_id", F.encode(body, "UTF-8").alias("raw"))
+    src = d.select("doc_id", F.encode(_body768(), "UTF-8").alias("raw"))
 
     def enc(it):
         for pdf in it:
@@ -2989,6 +2941,71 @@ def llm_mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_media(mm).select(
         "doc_id", "mime", "f0", "f1", "f2", "f3"
     )
+
+
+def _jpeg_round_trip(
+    spark: SparkSession, sf_dir: str, encode, decode, color: bool
+) -> DataFrame:
+    """The codec round trip behind the three llm_mm_decode_jpeg*
+    queries. Per doc, the normalized body's first 8 bytes build a
+    16x16 image of four 8x8 blocks: block p is m + a*sqw, with m =
+    byte p, a = byte 4+p mod 8, and sqw the (4,0) DCT square wave.
+    ``decode(encode(img, 8))`` runs the codec, and the stats come off
+    the decoded raster. ``color`` replicates the gray image into RGB,
+    reads the block stats off the R channel (``sum_r``) and adds
+    ``n_offgray``, the pixels whose decoded channels differ; the gray
+    form names its sum ``sum_px``."""
+    import numpy as np
+    import pandas as pd
+
+    d = load(spark, sf_dir, "documents")
+    src = d.select("doc_id", F.encode(_body768(), "UTF-8").alias("raw"))
+    sum_col = "sum_r" if color else "sum_px"
+    schema = (
+        f"doc_id bigint, width int, height int, {sum_col} bigint, "
+        "max_px int, ac_abs64 bigint" + ", n_offgray bigint" * color
+    )
+    cols = [f.split()[0] for f in schema.split(", ")]
+
+    def work(it):
+        sqw = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
+        for pdf in it:
+            out: dict[str, list] = {c: [] for c in cols}
+            for doc_id, r in zip(pdf["doc_id"], pdf["raw"]):
+                rb = bytes(r)
+                img = np.empty((16, 16), dtype=np.uint8)
+                for p, (bi, bj) in enumerate(
+                    [(0, 0), (0, 1), (1, 0), (1, 1)]
+                ):
+                    img[bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = (
+                        rb[p] + (rb[4 + p] % 8) * sqw
+                    )
+                if color:
+                    img = np.repeat(img[..., None], 3, axis=2)
+                dec = decode(encode(img, 8))
+                blocks = (
+                    (dec[..., 0] if color else dec)
+                    .astype(np.int64)
+                    .reshape(2, 8, 2, 8)
+                    .transpose(0, 2, 1, 3)
+                    .reshape(4, 64)
+                )
+                bs = blocks.sum(axis=1)
+                out["doc_id"].append(doc_id)
+                out["width"].append(dec.shape[1])
+                out["height"].append(dec.shape[0])
+                out[sum_col].append(int(bs.sum()))
+                out["max_px"].append(int(dec.max()))
+                out["ac_abs64"].append(
+                    int(np.abs(64 * blocks - bs[:, None]).sum())
+                )
+                if color:
+                    out["n_offgray"].append(
+                        int((dec != dec[..., :1]).any(axis=2).sum())
+                    )
+            yield pd.DataFrame(out)
+
+    return _spread(src).mapInPandas(work, schema)
 
 
 @query(
@@ -3036,59 +3053,13 @@ FROM c
     "passes are narrow Arrow-batched mapInPandas, no shuffle",
 )
 def llm_mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     from event_stream_for_k8s_spark.functions.multimodal import (
         decode_jpeg_gray,
         encode_jpeg_gray,
     )
 
-    d = load(spark, sf_dir, "documents")
-    src = d.select("doc_id", F.encode(_body768(), "UTF-8").alias("raw"))
-
-    def work(it):
-        sqw = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "sum_px": [],
-                "max_px": [],
-                "ac_abs64": [],
-            }
-            for doc_id, r in zip(pdf["doc_id"], pdf["raw"]):
-                rb = bytes(r)
-                img = np.empty((16, 16), dtype=np.uint8)
-                for p, (bi, bj) in enumerate(
-                    [(0, 0), (0, 1), (1, 0), (1, 1)]
-                ):
-                    img[bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = (
-                        rb[p] + (rb[4 + p] % 8) * sqw
-                    )
-                dec = decode_jpeg_gray(encode_jpeg_gray(img, 8))
-                blocks = (
-                    dec.reshape(2, 8, 2, 8)
-                    .transpose(0, 2, 1, 3)
-                    .reshape(4, 64)
-                    .astype(np.int64)
-                )
-                bs = blocks.sum(axis=1)
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec.shape[1])
-                out["height"].append(dec.shape[0])
-                out["sum_px"].append(int(bs.sum()))
-                out["max_px"].append(int(dec.max()))
-                out["ac_abs64"].append(
-                    int(np.abs(64 * blocks - bs[:, None]).sum())
-                )
-            yield pd.DataFrame(out)
-
-    return _spread(src).mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, sum_px bigint, "
-        "max_px int, ac_abs64 bigint",
+    return _jpeg_round_trip(
+        spark, sf_dir, encode_jpeg_gray, decode_jpeg_gray, color=False
     )
 
 
@@ -3141,69 +3112,19 @@ FROM c
     "no shuffle",
 )
 def llm_mm_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
+    from functools import partial
 
     from event_stream_for_k8s_spark.functions.multimodal import (
         decode_jpeg_image,
         encode_jpeg_color,
     )
 
-    d = load(spark, sf_dir, "documents")
-    src = d.select("doc_id", F.encode(_body768(), "UTF-8").alias("raw"))
-
-    def work(it):
-        sqw = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "sum_r": [],
-                "max_px": [],
-                "ac_abs64": [],
-                "n_offgray": [],
-            }
-            for doc_id, r in zip(pdf["doc_id"], pdf["raw"]):
-                rb = bytes(r)
-                img = np.empty((16, 16, 3), dtype=np.uint8)
-                for p, (bi, bj) in enumerate(
-                    [(0, 0), (0, 1), (1, 0), (1, 1)]
-                ):
-                    img[
-                        bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8, :
-                    ] = (rb[p] + (rb[4 + p] % 8) * sqw)[None, :, None]
-                dec = decode_jpeg_image(
-                    encode_jpeg_color(img, 8, subsampling="420")
-                )
-                red = dec[..., 0].astype(np.int64)
-                blocks = (
-                    red.reshape(2, 8, 2, 8)
-                    .transpose(0, 2, 1, 3)
-                    .reshape(4, 64)
-                )
-                bs = blocks.sum(axis=1)
-                offgray = int(
-                    (
-                        (dec[..., 0] != dec[..., 1])
-                        | (dec[..., 0] != dec[..., 2])
-                    ).sum()
-                )
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec.shape[1])
-                out["height"].append(dec.shape[0])
-                out["sum_r"].append(int(bs.sum()))
-                out["max_px"].append(int(dec.max()))
-                out["ac_abs64"].append(
-                    int(np.abs(64 * blocks - bs[:, None]).sum())
-                )
-                out["n_offgray"].append(offgray)
-            yield pd.DataFrame(out)
-
-    return _spread(src).mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, sum_r bigint, "
-        "max_px int, ac_abs64 bigint, n_offgray bigint",
+    return _jpeg_round_trip(
+        spark,
+        sf_dir,
+        partial(encode_jpeg_color, subsampling="420"),
+        decode_jpeg_image,
+        color=True,
     )
 
 
@@ -3255,69 +3176,19 @@ FROM c
     "the encoder in tests. One narrow Arrow pass, no shuffle",
 )
 def llm_mm_decode_jpeg_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
+    from functools import partial
 
     from event_stream_for_k8s_spark.functions.multimodal import (
         decode_jpeg_image,
         encode_jpeg_prog,
     )
 
-    d = load(spark, sf_dir, "documents")
-    src = d.select("doc_id", F.encode(_body768(), "UTF-8").alias("raw"))
-
-    def work(it):
-        sqw = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "sum_r": [],
-                "max_px": [],
-                "ac_abs64": [],
-                "n_offgray": [],
-            }
-            for doc_id, r in zip(pdf["doc_id"], pdf["raw"]):
-                rb = bytes(r)
-                img = np.empty((16, 16, 3), dtype=np.uint8)
-                for p, (bi, bj) in enumerate(
-                    [(0, 0), (0, 1), (1, 0), (1, 1)]
-                ):
-                    img[
-                        bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8, :
-                    ] = (rb[p] + (rb[4 + p] % 8) * sqw)[None, :, None]
-                dec = decode_jpeg_image(
-                    encode_jpeg_prog(img, 8, subsampling="420")
-                )
-                red = dec[..., 0].astype(np.int64)
-                blocks = (
-                    red.reshape(2, 8, 2, 8)
-                    .transpose(0, 2, 1, 3)
-                    .reshape(4, 64)
-                )
-                bs = blocks.sum(axis=1)
-                offgray = int(
-                    (
-                        (dec[..., 0] != dec[..., 1])
-                        | (dec[..., 0] != dec[..., 2])
-                    ).sum()
-                )
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec.shape[1])
-                out["height"].append(dec.shape[0])
-                out["sum_r"].append(int(bs.sum()))
-                out["max_px"].append(int(dec.max()))
-                out["ac_abs64"].append(
-                    int(np.abs(64 * blocks - bs[:, None]).sum())
-                )
-                out["n_offgray"].append(offgray)
-            yield pd.DataFrame(out)
-
-    return _spread(src).mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, sum_r bigint, "
-        "max_px int, ac_abs64 bigint, n_offgray bigint",
+    return _jpeg_round_trip(
+        spark,
+        sf_dir,
+        partial(encode_jpeg_prog, subsampling="420"),
+        decode_jpeg_image,
+        color=True,
     )
 
 
@@ -3464,8 +3335,10 @@ def _phash_sig_cte(src: str) -> str:
 def _body768():
     """The shared 768-char normalized body: printable-mapped then
     space-padded, so 1 char = exactly 1 payload byte and every
-    codepoint-indexed oracle replays the synthesized media exactly
-    (same normalization as llm_mm_resize / llm_mm_decode_png)."""
+    codepoint-indexed oracle replays the synthesized media exactly.
+    Non-printable/non-ASCII chars map to '?' BEFORE padding: a
+    multi-byte character would inflate the encoded block past
+    16x16x3 and silently shift the pixel math."""
     return F.rpad(
         F.regexp_replace(
             F.substring("text", 1, 768), r"[^\x20-\x7e]", "?"
@@ -3552,13 +3425,12 @@ def _banded_pairs(
 
 def _ppm16(d: DataFrame) -> DataFrame:
     """Encode each doc's normalized 768-char body as a real 16x16 P6
-    PPM payload (1 char = 1 pixel byte — same normalization as
-    llm_mm_resize, so the codepoint-indexed oracles stay exact)."""
-    body = _body768()
+    PPM payload (1 char = 1 pixel byte, so the codepoint-indexed
+    oracles stay exact)."""
     return d.select(
         "doc_id",
         F.encode(
-            F.concat(F.lit("P6\n16 16\n255\n"), body), "UTF-8"
+            F.concat(F.lit("P6\n16 16\n255\n"), _body768()), "UTF-8"
         ).alias("payload"),
     )
 
@@ -4214,12 +4086,13 @@ def llm_docstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _similarity_graph(e: DataFrame) -> DataFrame:
-    """Blocked-cosine undirected edge relation over the embeddings
-    table — shared by the float and integer PageRank passes."""
+def _similarity_pairs(e: DataFrame) -> DataFrame:
+    """Blocked-cosine similarity pairs over the embeddings table: one
+    (src, dst) row per pair with src < dst, same label, same 100-id
+    block and rounded cosine >= 0.2."""
     a, b = e.alias("a"), e.alias("b")
     sim = F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.label") == F.col("b.label"))
@@ -4231,6 +4104,12 @@ def _similarity_graph(e: DataFrame) -> DataFrame:
             F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
         )
     )
+
+
+def _similarity_graph(e: DataFrame) -> DataFrame:
+    """The similarity pairs as an undirected edge relation: each pair
+    in both directions."""
+    pairs = _similarity_pairs(e)
     return pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -4369,24 +4248,7 @@ FROM d{rounds} WHERE core_deg >= {k}
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from event_stream_for_k8s_spark.operators.graph import kcore_peel
 
-    e = load(spark, sf_dir, "embeddings")
-    a, b = e.alias("a"), e.alias("b")
-    sim = F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.expr("a.vec_id div 100") == F.expr("b.vec_id div 100"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(sim >= 0.2)
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-    )
-    und = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    und = _similarity_graph(load(spark, sf_dir, "embeddings"))
     return kcore_peel(und, k=2, rounds=8).select(
         F.col("v").alias("vec_id"), "core_deg", "converged"
     )
@@ -4412,25 +4274,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
-    a, b = e.alias("a"), e.alias("b")
-    sim = F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.expr("a.vec_id div 100") == F.expr("b.vec_id div 100"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(sim >= 0.2)
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-    )
-    und = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
     nodes = e.select(F.col("vec_id").alias("v"))
-    return pagerank_exact_int(nodes, und, iters=3)
+    return pagerank_exact_int(nodes, _similarity_graph(e), iters=3)
 
 
 def pagerank_exact_int(
@@ -4995,6 +4840,31 @@ FROM documents d LEFT JOIN perdoc USING (doc_id)"""
     )
 
 
+def _bpe_words(
+    df: DataFrame, keys=(), text: str = "text", pos: str | None = None
+) -> DataFrame:
+    """The BPE trainer's word feed: ``text`` split on spaces,
+    lower-cased, kept when purely a-z and at least 2 chars long, and
+    symbolized into column ``w``. Each word carries the ``keys``
+    columns and, when ``pos`` is given, its split position under that
+    name."""
+    from event_stream_for_k8s_spark.operators.corpus import bpe_symbolize
+
+    keys = list(keys)
+    if pos is None:
+        raw = df.select(*keys, F.explode(F.split(text, " ")).alias("rw"))
+    else:
+        raw = df.select(
+            *keys, F.posexplode(F.split(text, " ")).alias(pos, "rw")
+        )
+        keys.append(pos)
+    return (
+        raw.select(*keys, F.lower("rw").alias("lw"))
+        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
+        .select(*keys, bpe_symbolize(F.col("lw")).alias("w"))
+    )
+
+
 @query(
     "llm_sft_loss_mask",
     oracle=_sft_mask_oracle(8),
@@ -5022,7 +4892,6 @@ def llm_sft_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from event_stream_for_k8s_spark.operators.corpus import (
-        bpe_symbolize,
         bpe_train,
         bpe_word_hist,
         bpe_word_ntok,
@@ -5047,17 +4916,7 @@ def llm_sft_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(" ", F.slice("toks", 1, 5)), F.lit(" ...<|end|>")
         ).alias("text"),
     )
-    words = (
-        prompt.unionByName(completion)
-        .select(
-            "doc_id",
-            "seg",
-            F.explode(F.split("text", " ")).alias("rw"),
-        )
-        .select("doc_id", "seg", F.lower("rw").alias("lw"))
-        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
-        .select("doc_id", "seg", bpe_symbolize(F.col("lw")).alias("w"))
-    )
+    words = _bpe_words(prompt.unionByName(completion), ["doc_id", "seg"])
     # r15 O5: seg-conditional token counts need only the per-word
     # count — join it off the trainer's persisted histogram (see
     # llm_bpe_pack).
@@ -5128,18 +4987,9 @@ def llm_sft_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_properties.py",
 )
 def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from event_stream_for_k8s_spark.operators.corpus import (
-        bpe_symbolize,
-        bpe_train,
-    )
+    from event_stream_for_k8s_spark.operators.corpus import bpe_train
 
-    d = load(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("rw"))
-        .select(F.lower("rw").alias("lw"))
-        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
-        .select(bpe_symbolize(F.col("lw")).alias("w"))
-    )
+    words = _bpe_words(load(spark, sf_dir, "documents"))
     merges = bpe_train(words, 8)
     return spark.createDataFrame(
         [(r, a, b, n) for r, a, b, n in merges],
@@ -5171,18 +5021,9 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     "alongside a pure-Python batched-spec differential",
 )
 def llm_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from event_stream_for_k8s_spark.operators.corpus import (
-        bpe_symbolize,
-        bpe_train_batched,
-    )
+    from event_stream_for_k8s_spark.operators.corpus import bpe_train_batched
 
-    d = load(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("rw"))
-        .select(F.lower("rw").alias("lw"))
-        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
-        .select(bpe_symbolize(F.col("lw")).alias("w"))
-    )
+    words = _bpe_words(load(spark, sf_dir, "documents"))
     merges = bpe_train_batched(words, 8, batch=4, candidates=32)
     return spark.createDataFrame(
         [(r, a, b, n) for r, a, b, n in merges],
@@ -5213,18 +5054,11 @@ def llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from event_stream_for_k8s_spark.operators.corpus import (
         BPE_BOUND,
         bpe_merge_chain,
-        bpe_symbolize,
         bpe_train,
         bpe_word_hist,
     )
 
-    d = load(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("rw"))
-        .select(F.lower("rw").alias("lw"))
-        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
-        .select(bpe_symbolize(F.col("lw")).alias("w"))
-    )
+    words = _bpe_words(load(spark, sf_dir, "documents"))
     # r15 O5: every output is an occurrence-weighted aggregate, so the
     # WHOLE query folds onto the trainer's count-by-word histogram —
     # one corpus-scale shuffle total (the histogram build, shared with
@@ -5300,22 +5134,13 @@ def llm_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from event_stream_for_k8s_spark.operators.corpus import (
-        bpe_symbolize,
         bpe_token_ids,
         bpe_train,
         bpe_word_hist,
     )
 
     d = load(spark, sf_dir, "documents")
-    words = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.split("text", " ")).alias("wpos", "rw"),
-        )
-        .select("doc_id", "wpos", F.lower("rw").alias("lw"))
-        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
-        .select("doc_id", "wpos", bpe_symbolize(F.col("lw")).alias("w"))
-    )
+    words = _bpe_words(d, ["doc_id"], pos="wpos")
     # r15 O5: one persisted count-by-word histogram feeds BOTH the
     # trainer (hist=) and the encoder's vocab subtree (vocab=) — the
     # occurrence form re-shuffled the corpus a second time inside
@@ -5354,22 +5179,12 @@ def llm_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from event_stream_for_k8s_spark.operators.corpus import (
-        bpe_symbolize,
         bpe_train,
         bpe_word_hist,
         bpe_word_ntok,
     )
 
-    d = load(spark, sf_dir, "documents")
-    words = (
-        d.select(
-            "doc_id",
-            F.explode(F.split("text", " ")).alias("rw"),
-        )
-        .select("doc_id", F.lower("rw").alias("lw"))
-        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
-        .select("doc_id", bpe_symbolize(F.col("lw")).alias("w"))
-    )
+    words = _bpe_words(load(spark, sf_dir, "documents"), ["doc_id"])
     # r15 O5: the downstream only needs per-doc token COUNTS, so join
     # the per-vocab-word count (one int) instead of the rewritten
     # symbol string, off the same persisted histogram the trainer
@@ -5428,7 +5243,6 @@ def llm_sft_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from event_stream_for_k8s_spark.operators.corpus import (
-        bpe_symbolize,
         bpe_train,
         bpe_word_hist,
         bpe_word_ntok,
@@ -5450,15 +5264,7 @@ def llm_sft_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(" ", F.slice("toks", 1, 5)), F.lit(" ...<|end|>"),
         ).alias("rendered"),
     )
-    words = (
-        rendered.select(
-            "doc_id",
-            F.explode(F.split("rendered", " ")).alias("rw"),
-        )
-        .select("doc_id", F.lower("rw").alias("lw"))
-        .filter(F.col("lw").rlike("^[a-z]+$") & (F.length("lw") >= 2))
-        .select("doc_id", bpe_symbolize(F.col("lw")).alias("w"))
-    )
+    words = _bpe_words(rendered, ["doc_id"], text="rendered")
     # r15 O5: per-doc token counts via the per-vocab-word count join
     # off the trainer's persisted histogram (see llm_bpe_pack).
     hist = bpe_word_hist(words.select("w")).transform(
@@ -5676,21 +5482,7 @@ def llm_corpus_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load(spark, sf_dir, "embeddings")
-    a, b = e.alias("a"), e.alias("b")
-    sim = F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.expr("a.vec_id div 100") == F.expr("b.vec_id div 100"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(sim >= 0.2)
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-    )
-    comp = connected_components(pairs, nodes=e.select("vec_id"))
+    comp = connected_components(_similarity_pairs(e), nodes=e.select("vec_id"))
     w = Window.partitionBy("cluster_id")
     return comp.select(
         F.col("node").alias("vec_id"),
@@ -6129,28 +5921,10 @@ SELECT DISTINCT doc_id, fp_pos, fp_hash FROM ex WHERE fp_hash IS NOT NULL
 def llm_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from event_stream_for_k8s_spark.functions.text import (
         gram3_hashes,
-        token_hash,
         winnow_numpy,
     )
 
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    vocab = (
-        toks.select("tok").distinct().withColumn("th", token_hash(F.col("tok")))
-    )
-    # No forced broadcast hint: vocab is Zipf-small so AQE converts
-    # this to a broadcast-hash join at runtime in the common case, but
-    # at 100 TB of multilingual crawl the distinct-token set can exceed
-    # broadcast limits — a forced hint would then FAIL the job instead
-    # of degrading to a shuffle join (VERDICT r14 wrong #2).
-    hashed = toks.join(vocab, "tok")
-    arrays = hashed.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "th"))), lambda x: x.th
-        ).alias("ht")
-    )
+    arrays = _token_hash_arrays(load(spark, sf_dir, "documents"), "ht")
     grams = arrays.select("doc_id", gram3_hashes(F.col("ht")).alias("h"))
     return winnow_numpy(grams, w=4)
 
@@ -6249,29 +6023,9 @@ FROM grams
     "against a signature store a thousandth the size",
 )
 def llm_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from event_stream_for_k8s_spark.functions.text import (
-        gram3_hashes,
-        token_hash,
-    )
+    from event_stream_for_k8s_spark.functions.text import gram3_hashes
 
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    vocab = (
-        toks.select("tok").distinct().withColumn("th", token_hash(F.col("tok")))
-    )
-    # No forced broadcast hint: vocab is Zipf-small so AQE converts
-    # this to a broadcast-hash join at runtime in the common case, but
-    # at 100 TB of multilingual crawl the distinct-token set can exceed
-    # broadcast limits — a forced hint would then FAIL the job instead
-    # of degrading to a shuffle join (VERDICT r14 wrong #2).
-    hashed = toks.join(vocab, "tok")
-    arrays = hashed.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "th"))), lambda x: x.th
-        ).alias("ht")
-    )
+    arrays = _token_hash_arrays(load(spark, sf_dir, "documents"), "ht")
     grams = arrays.select("doc_id", gram3_hashes(F.col("ht")).alias("h"))
     h = F.col("h")
     def perm_min(a, b):

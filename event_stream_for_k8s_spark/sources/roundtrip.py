@@ -58,14 +58,22 @@ def cache_dir(sf_dir: str, kind: str) -> str:
     # materialized from an earlier, different table (found round 6 by
     # the empty-tables sweep: scan_json returned a previous fixture's
     # rows). The hash keeps /root/testdata/sf0.1 etc. stable across
-    # runs while making distinct paths collision-free.
+    # runs while making distinct paths collision-free. The path alone
+    # still names two tables when a directory is recreated under it
+    # (pytest reuses its numbered temp dirs once they are emptied), so
+    # the directory's identity (inode, mtime) is hashed in too; a path
+    # that does not exist yet keys by the path alone.
     import hashlib
 
     norm = os.path.abspath(os.path.normpath(sf_dir))
+    ident = norm
+    if os.path.isdir(norm):
+        st = os.stat(norm)
+        ident += f"\0{st.st_ino}\0{st.st_mtime_ns}"
     tag = (
         os.path.basename(norm)
         + "-"
-        + hashlib.md5(norm.encode()).hexdigest()[:8]
+        + hashlib.md5(ident.encode()).hexdigest()[:8]
     )
     return os.path.join(CACHE_ROOT, tag, kind)
 

@@ -634,6 +634,21 @@ def test_daemon_emit_runs_one_job_per_batch(spark, tmp_path):
     assert sum(metrics.events.samples.values()) == len(events)
 
 
+def test_daemon_emit_none_counts_without_printing(spark, tmp_path, capsys):
+    """``run_daemon(emit=None)`` still counts every batch: the golden
+    Events plus one redelivery give 9 received, 8 misses, 1 hit and 8
+    labelled events, and no line reaches stdout."""
+    events = _golden_events()
+    query, metrics = _drain(spark, tmp_path, events + events[:1], None)
+    metrics.sync_from_query(query)
+    s = metrics.processed.samples
+    assert s[("total",)] == 9
+    assert s[("cache_misses",)] == 8
+    assert s[("cache_hits",)] == 1
+    assert sum(metrics.events.samples.values()) == 8
+    assert capsys.readouterr().out == ""
+
+
 def test_daemon_driver_tally_matches_observe_batch(spark, tmp_path,
                                                    monkeypatch):
     """For a batch of unique keys, the daemon sink's driver tally

@@ -821,6 +821,42 @@ def test_materialize_live_lock_not_reclaimed(spark, tmp_path, _private_cache):
         assert f.read() == "from-owner"
 
 
+def test_materialize_rebuilds_recreated_sf_dir(spark, tmp_path, _private_cache):
+    """A table directory recreated under the same path with other
+    content is a new fixture: the second materialize runs its writer
+    instead of serving the first build's ``_DONE`` files. The cache
+    keys by the directory's identity (inode, mtime), not its path
+    alone. The inode of a removed directory is often reused at once,
+    and a coarse-clock filesystem can give the new directory the old
+    mtime, so the test moves the mtime on explicitly."""
+    import os
+    import shutil
+
+    from event_stream_for_k8s_spark.sources.roundtrip import materialize
+
+    sf = tmp_path / "sf"
+
+    def make_sf(content: str) -> None:
+        sf.mkdir()
+        (sf / "table.txt").write_text(content)
+
+    def writer(out: str) -> None:
+        with open(f"{out}/data.txt", "w") as f:
+            f.write((sf / "table.txt").read_text())
+
+    make_sf("first")
+    old_mtime = os.stat(sf).st_mtime_ns
+    first = materialize(spark, str(sf), "identity_probe", writer)
+    shutil.rmtree(sf)
+    make_sf("second")
+    later = old_mtime + 1_000_000_000
+    os.utime(sf, ns=(later, later))
+    second = materialize(spark, str(sf), "identity_probe", writer)
+    assert second != first
+    with open(f"{second}/data.txt") as f:
+        assert f.read() == "second"
+
+
 def test_sft_pipeline_plan_shape(spark):
     """llm_sft_pipeline's physical plan (VERDICT r10 #5): ONE pruned
     documents scan (doc_id + text only), partial aggregation below the

@@ -12,8 +12,10 @@ writes the plan of each query's last micro-batch
 (``StreamingQuery.explain()`` text) to ``<out>/<name>_<tag>.txt``.
 Run-specific noise is normalised so two checkouts' dumps diff clean:
 expression ids (``#N``), ``plan_id=N``, ``@hash`` object ids, run and
-query UUIDs, the checkout root, temp/checkpoint paths and a batch's
+query UUIDs, lambda-variable suffixes (``lambda x_N``), RDD ids
+(``RDD[N]``), the checkout root, temp/checkpoint paths and a batch's
 processing-time stamp (epoch milliseconds, or a timestamp literal).
+``tools/explain.py --out`` imports the same ``normalise``.
 
 The name ``daemon`` is not a registry query: it drains a small seeded
 spool (``perfbench/gen.py spool --seed 3``) through a file-tail
@@ -46,6 +48,10 @@ _NORMALISE = (
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
+    # PySpark names each higher-order-function lambda variable from a
+    # process-wide counter, and each RDD gets the SparkContext's next id
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
 )
 
 
